@@ -39,9 +39,9 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     The NTZ→timestamp cast reinterprets wall-time in the SESSION
     timezone, so the micros branch (unlike the tz-free nanos branch)
     requires UTC; session.py pins it, and the guard below covers
-    sessions built elsewhere — same pattern as the nanosAsLong guard
-    in ``table``. (UTC is an engine-wide contract anyway: every
-    timestamp-producing oracle comparison depends on it.)"""
+    sessions built elsewhere — same pattern as ``ensure_nanos_as_long``.
+    (UTC is an engine-wide contract anyway: every timestamp-producing
+    oracle comparison depends on it.)"""
     from pyspark.sql.types import LongType
 
     spark = df.sparkSession
@@ -50,6 +50,15 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     if isinstance(df.schema["ts"].dataType, LongType):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def ensure_nanos_as_long(spark: SparkSession) -> None:
+    """Let the parquet reader load TIMESTAMP(NANOS) columns as a nanos
+    long. session.py sets this at session build; sessions built
+    elsewhere get a one-time guarded set here — it is a session-wide
+    legacy conf with no per-read equivalent."""
+    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,11 +72,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
     if name == "events":
-        # nanosAsLong is set at session build (session.py); sessions built
-        # elsewhere (e.g. the driver's) get a one-time guarded set here —
-        # it is a session-wide legacy conf with no per-read equivalent.
-        if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ensure_nanos_as_long(spark)
         return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 

@@ -23,148 +23,14 @@ from crm_etl_pipeline_spark.queries import (  # noqa: F401
     windows,
 )
 
-# Queries the driver's bounded correctness prefix should check FIRST
-# this round. ROUND-16 rotation, executing the round-15 verdict's task
-# 5 verbatim: the 32 defers promised by name are seated FIRST, then
-# this round's changed-bytes rows, then the 5 oldest unchanged rows.
-#
-#   (a) THE 32 NAMED DEFERS (round-15 window comment, stratum (e):
-#       21 from the original r11 cut + 11 displaced by r15's (d) —
-#       age 5 at this check; the ceiling promise r14 made and r15
-#       honored): array_csv_roundtrip, catalog_fields_tree,
-#       composite_key_roundtrip, date_parse_reformat,
-#       decile_gains_table, event_type_routing,
-#       histogram_order_values, html_strip_normalize, join_full_outer,
-#       join_left_missing, kmv_sketch_merge, mom_revenue_growth,
-#       money_decimal_cast, orc_source_roundtrip,
-#       pearson_correlation_matrix, repeated_span_mining,
-#       retry_and_dead_letter, rollup_revenue, value_percentiles,
-#       version_counts_per_key, xml_source_roundtrip,
-#       typed_field_decode, flagship_segment_revenue,
-#       streaming_dim_enrichment, streaming_zorder_ingest,
-#       prefix_filter_setsim_join, lsh_bucket_profile,
-#       simhash_near_dup, pricing_summary, schema_evolution_read,
-#       wap_publish_roundtrip, skew_salted_join.
-#       (prefix_filter_setsim_join is ALSO changed-bytes this round —
-#       the prefix-table checkpoint — so its seat does double duty.)
-#   (b) ROUND-16 CHANGED-BYTES rows (changed code outranks age; every
-#       one proven result-identical in-session via exceptAll both ways
-#       AND pytest-oracle-green, but the driver's own hash row is the
-#       certification the house policy demands):
-#       - the DLQ/retry-loop coalesce(1) appends (streaming.py
-#         process_batch / drain_retry_queue / replay_dlq):
-#         streaming_scd2_state, streaming_dlq, streaming_requeue,
-#         streaming_dlq_replay;
-#       - the one-pass tokenize fold in _hybrid_arm_frames:
-#         hybrid_rank_fusion, rerank_fused_topk;
-#       - the _chunk_feats/_chunk_bm25_scored restructure:
-#         chunk_bm25_retrieval, chunk_hybrid_retrieval;
-#       - the _bpe_train LEFT-join empty-merge guard (round-15 ADVICE):
-#         bpe_merge_training, bpe_encode, pack_bpe_sequences,
-#         bpe_subword_vocab;
-#       - the wedge-join shuffle_hash hint: triangle_count.
-#   (c) Four age seats: the oldest unchanged rows by last driver check
-#       (r12, age 4): cube_lineitem_flags, pivot_status_by_priority,
-#       having_filter, props_json_extract. (point_lookup held the
-#       fifth until copurchase_pagerank's round-16 restructure landed
-#       late in the round — changed code outranks age, the same rule
-#       as (b).)
-#   (d) Defers to round 17, promised by name: point_lookup plus the
-#       remaining r12 stratum by module order (filtered_scan,
-#       topk_orders_by_revenue, safe_numeric_cast,
-#       system_column_enrichment, latest_order_per_customer,
-#       running_revenue, kmv_distinct_sketch, …) — seat the oldest of
-#       these first next round, after any changed bytes.
-#
-# The round-15 rotation rationale below is kept for the audit trail:
-#
-# CORRECTNESS_r14 landed 50/50 green; the r1-r14 union is 197 checked,
-# zero latest-check failures, ages r14:50 r13:49 r12:45 r11:37 r10:16.
-# This round registers 2 new queries (199 total: rerank_fused_topk,
-# chunk_hybrid_retrieval) and changes bytes on 19 rows (the family-wide
-# ragged-dimension guard + the CTE/helper extractions), so the window,
-# in verdict-ranked order:
-#   (a) THE SIXTEEN NAMED DEFERS (r10, age 5 — the round-14 verdict's
-#       task 1 says seat these FIRST or the ceiling policy is dead
-#       letter): join_anti, join_semi, setops_segments,
-#       hidden_field_projection, return_type_fallback,
-#       props_from_json_typed, partition_pruned_scan,
-#       abc_pareto_classification, multimodal_manifest,
-#       multimodal_mp4_seek_plan, multimodal_frame_sample,
-#       interpolate_daily_user_value, text_stats, chunk_documents,
-#       knn_label_disagreement, embedding_standardize. (The last two
-#       are ALSO changed-bytes this round — the ragged guard — so
-#       their seats do double duty.)
-#   (b) NEVER-CHECKED (round-15 registrations):
-#       - rerank_fused_topk: exact feature-fusion rerank of the RRF
-#         candidate set (verdict growth slot #4) — composes the
-#         _HYBRID_CTES chain + the certified quality gate, full
-#         oracle;
-#       - chunk_hybrid_retrieval: passage-grain hybrid retrieval
-#         (verdict growth slot #5) — chunk-BM25 arm VERBATIM fused
-#         with a feature-hashed mean-pooled dense arm, full oracle.
-#   (c) CHANGED BYTES this round (changed code outranks age):
-#       - the ragged-dimension guard (round-14 ADVICE, closed
-#         family-wide): `len(embedding) = 64` joined EVERY embedding
-#         oracle scan and size(embedding) = _DIM joined _emb — 18
-#         oracle texts moved together (16 seated here; knn/standardize
-#         sit in (a)): embedding_norm_topk, ann_cosine_topk,
-#         ann_lsh_bucketed, embedding_centroid_per_label,
-#         embedding_near_dup, ann_ivf_probe, ann_ivf_nprobe2,
-#         ann_ivf_persisted_index, ann_ivf_incremental_index,
-#         embedding_quantize_int8, embedding_kmeans,
-#         kmeans_cluster_purity, semantic_dedup, ann_pq_adc,
-#         ann_recall_selfcheck, hybrid_rank_fusion (whose Spark body
-#         also moved into the shared _hybrid_arm_frames/_hybrid_fuse
-#         helpers — oracle text pinned byte-identical);
-#       - chunk_bm25_retrieval: Spark body now calls the shared
-#         _chunk_bm25_scored helper (oracle text pinned
-#         byte-identical, but the fn bytes moved — changed is
-#         changed).
-#   (d) THE OPTIMIZATION ROUND'S CHANGED-BYTES ROWS (changed code
-#       outranks age — the same rule that ranked (c) above the r11
-#       stratum; every one is a round-15 optimization proven
-#       bit-identical in-session AND by its pytest oracle, but the
-#       driver's own hash row is the certification the house policy
-#       demands for any changed bytes): copurchase_pagerank,
-#       bpe_merge_training, bpe_encode, pack_bpe_sequences,
-#       bpe_subword_vocab, bigram_lm_quality_filter,
-#       audio_energy_windows, multimodal_mp4_seek_plan,
-#       scd2_compact_small_files, streaming_incremental_dedup,
-#       ngram_jaccard_verify, dedup_cluster_keep_best (embeds the
-#       re-converged components subplan), plus dedup_components and
-#       zorder_incremental_compact, which were already seated here for
-#       age and are ALSO changed — their seats do double duty.
-#       curation_pipeline keeps one age seat (the verdict's
-#       top-importance r11 leader, unchanged bytes).
-#   (e) Defers to round 16, promised by name. The r11 remainder from
-#       the original cut (unchanged bytes, pytest-oracle-green every
-#       round; age 5 when round 16 checks them first):
-#       array_csv_roundtrip, catalog_fields_tree,
-#       composite_key_roundtrip, date_parse_reformat,
-#       decile_gains_table, event_type_routing,
-#       histogram_order_values, html_strip_normalize, join_full_outer,
-#       join_left_missing, kmv_sketch_merge, mom_revenue_growth,
-#       money_decimal_cast, orc_source_roundtrip,
-#       pearson_correlation_matrix, repeated_span_mining,
-#       retry_and_dead_letter, rollup_revenue, value_percentiles,
-#       version_counts_per_key, xml_source_roundtrip
-#       (ngram_jaccard_verify left this list — changed bytes seated it
-#       in (d)); PLUS the unchanged r11 rows displaced by (d):
-#       typed_field_decode, flagship_segment_revenue,
-#       streaming_dim_enrichment, streaming_zorder_ingest,
-#       prefix_filter_setsim_join, lsh_bucket_profile,
-#       simhash_near_dup, pricing_summary, schema_evolution_read,
-#       wap_publish_roundtrip, skew_salted_join (minhash_near_dup and
-#       curation_pipeline kept age seats in (d)) — age 5 at the
-#       round-16 check; round 16's window MUST seat these 32 first
-#       (the same ceiling promise round 14 made for the r10 defers,
-#       and round 15 honored): 21 from the original (e) cut + 11
-#       displaced.
-#
-# registry.load_all reorders REGISTRY to put these at the front; the
-# rest follow in module order. Keep this list <= 50
-# (test_driver_priority_window enforces the fit).
+# Queries the external correctness check (the __spark_entry__ consumer)
+# verifies FIRST: it checks a bounded prefix of the registry, and
+# registry.load_all moves these names to its front; the rest follow in
+# module order. Rotation policy, applied when the list is refreshed:
+# seat the queries whose code changed first, then fill the remaining
+# seats with the rows whose last external check is oldest. At most 50
+# names, so the list fits that 50-query prefix;
+# test_driver_priority_window enforces the fit.
 DRIVER_PRIORITY: list[str] = [
     # --- (a) the 32 named age-5 defers, seated FIRST (the promise) ---
     "array_csv_roundtrip",

@@ -2565,40 +2565,33 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunk_feats(
-    spark: SparkSession, sf_dir: str, buckets: bool = False
-) -> DataFrame:
-    """ONE chunker pass (round 16, guide §1.2) shared by every consumer
-    of the chunk-grain scoring chains: run the certified chunker once
-    and reliable-checkpoint a NARROW per-chunk feature frame —
-    (doc_id, chunk_id, n_chunk_tokens, ftoks = the IN-filtered BM25
-    term list; plus bs = the feature-hash bucket id per token when the
-    dense arm needs it). The stats aggregate, the tf explode and (for
-    chunk_hybrid_retrieval) the bucket-count build all read this
-    checkpoint instead of each re-running the chunker subplan over the
-    chunk_text payload. Unlike checkpointing the chunk_text-wide frame
-    (rejected in round 15: ~4/3 of the corpus re-written), ftoks/bs are
-    a few ints/strings per chunk. NULL-id chunks are KEPT (the bm25
-    stats population includes them; consumers filter where their
-    contract says so)."""
+def _chunk_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ONE chunker pass shared by chunk_hybrid_retrieval's scoring
+    chains: run the certified chunker once and reliable-checkpoint a
+    NARROW per-chunk feature frame — (doc_id, chunk_id, n_chunk_tokens,
+    ftoks = the IN-filtered BM25 term list, bs = the feature-hash bucket
+    id per token for the dense arm). The stats aggregate, the tf explode
+    and the bucket-count build all read this checkpoint instead of each
+    re-running the chunker subplan over the chunk_text payload. Unlike
+    checkpointing the chunk_text-wide frame (~4/3 of the corpus
+    re-written), ftoks/bs are a few ints/strings per chunk. NULL-id
+    chunks are KEPT (the bm25 stats population includes them; consumers
+    filter where their contract says so)."""
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
     from crm_etl_pipeline_spark.queries.sketch_filters_q import _hash_long
 
-    chunks = chunk_documents(spark, sf_dir)
     toks = F.split(F.col("chunk_text"), " ")
-    cols = [
-        F.col("doc_id"),
-        F.col("chunk_id"),
-        F.col("n_chunk_tokens"),
-        F.filter(toks, lambda t: t.isin(*_BM25_TERMS)).alias("ftoks"),
-    ]
-    if buckets:
-        cols.append(
+    return reliable_checkpoint(
+        chunk_documents(spark, sf_dir).select(
+            "doc_id",
+            "chunk_id",
+            "n_chunk_tokens",
+            F.filter(toks, lambda t: t.isin(*_BM25_TERMS)).alias("ftoks"),
             F.transform(
                 toks, lambda t: _hash_long(t, _CHUNK_HASH_SEED) % _CHUNK_HASH_D
-            ).alias("bs")
+            ).alias("bs"),
         )
-    return reliable_checkpoint(chunks.select(*cols))
+    )
 
 
 def _chunk_bm25_scored(
@@ -2878,7 +2871,7 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-chunk feature frame (ftoks for the BM25 arm, bs for the
     # dense arm) instead of re-running the chunker subplan three times
     # (bm25 stats + bm25 tf + dense bucket build)
-    feats = _chunk_feats(spark, sf_dir, buckets=True)
+    feats = _chunk_feats(spark, sf_dir)
     bm = _chunk_bm25_scored(spark, sf_dir, feats=feats).filter(
         F.col("doc_id").isNotNull()
     )

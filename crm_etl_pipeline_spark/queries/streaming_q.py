@@ -10,7 +10,6 @@ state the stream must reach.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,12 +115,11 @@ def streaming_requeue(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths = streaming.run_pipeline(
         spark, sf_dir, workdir=_workdir("requeue", sf_dir), drain_retries=True
     )
-    first = F.floor(F.col("value")).cast("int") % 12 + 1
     return streaming.read_dlq(spark, paths, sf_dir).select(
         "event_id",
         "user_id",
         "failed_attempts",
-        (F.col("failed_attempts") - first).alias("n_retries"),
+        (F.col("failed_attempts") - streaming.first_attempts()).alias("n_retries"),
     )
 
 
@@ -256,7 +254,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_moments_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events through a complete-mode stateful aggregation
-    (4 micro-batches via maxFilesPerTrigger=1) accumulating exact
+    (4 micro-batches, one input file each) accumulating exact
     DECIMAL moments per event type, then score every event against the
     CONVERGED moments — which must equal the single-pass batch twin
     ``event_value_anomalies`` exactly, proving the moment state merges
@@ -316,8 +314,7 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     state stays O(open hours)); decisions append without merge because
     admission is irrevocable — an at-least-once sink dedups on
     event_id if replays occur."""
-    wd = _workdir("ratelimit", sf_dir)
-    out = streaming.rate_limit_stream(spark, sf_dir, wd)
+    out = streaming.rate_limit_stream(spark, sf_dir, _workdir("ratelimit", sf_dir))
     dec = spark.read.parquet(out)
     return (
         dec.groupBy(F.timestamp_micros(F.col("hour_us")).alias("hour"))
@@ -332,7 +329,6 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
 
 
 @query(
@@ -405,10 +401,10 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey="S7/ST1/L5 streaming ingest into the Z-ordered store (readStream -> seg-partitioned foreachBatch deltas -> incremental curve compaction; PodioApiGateway.py:111-137)",
 )
 def streaming_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The round-9 verdict's stretch item: streaming ingest into the
-    Z-ordered store. ``zorder_incremental_compact`` proved the merge;
-    this query closes the loop upstream — the live tail arrives through
-    a REAL file-source readStream in four micro-batches, each curved
+    """Streaming ingest into the Z-ordered store.
+    ``zorder_incremental_compact`` proves the merge; this query closes
+    the loop upstream — the live tail arrives through a REAL
+    file-source readStream in four micro-batches, each curved
     against the store's fixed anchor inside ``foreachBatch`` and landed
     as segment-partitioned delta files (only the touched curve
     segments' directories), then one incremental compaction folds the
@@ -422,9 +418,7 @@ def streaming_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here: once after the drain; in production: when a segment's delta
     file count crosses the small-file budget), and its cost is the
     touched segments' data, never the store size."""
-    wd = _workdir("zingest", sf_dir)
-    shutil.rmtree(wd, ignore_errors=True)
-    store = streaming.zorder_ingest_stream(spark, sf_dir, wd)
+    store = streaming.zorder_ingest_stream(spark, sf_dir, _workdir("zingest", sf_dir))
     if store is None:
         # empty-in/empty-out contract, mirroring the batch twin
         return spark.createDataFrame(
@@ -515,9 +509,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally, not one per batch). Per-batch cost is O(batch) + one
     uniform-key anti-join against the accepted store; store size is
     the distinct corpus, never the arrival volume."""
-    wd = _workdir("incdedup", sf_dir)
-    shutil.rmtree(wd, ignore_errors=True)
-    store = streaming.incremental_dedup_stream(spark, sf_dir, wd)
+    store = streaming.incremental_dedup_stream(spark, sf_dir, _workdir("incdedup", sf_dir))
     if store is None:
         return spark.createDataFrame(
             [], "content_hash string, keep_doc_id long, arrival_chunk int"

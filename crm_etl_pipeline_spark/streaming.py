@@ -17,9 +17,9 @@ tests and the driver.
 
 Scale notes: the store is an APPEND-ONLY version log — each micro-batch
 appends O(batch) rows and never touches files written by earlier
-batches (the r2 design rewrote the whole store per batch, which is
-O(store) per micro-batch and fatal at 100 TB; tests now assert
-historical files' (path, size, mtime) are untouched by later batches).
+batches (a per-batch store rewrite would be O(store) per micro-batch
+and fatal at 100 TB; tests assert historical files' (path, size, mtime)
+are untouched by later batches).
 ``version``/``is_current`` are derived merge-on-read by one window over
 the item key — high cardinality, so the read-side shuffle scales — and
 the serving fast path (`current_view_merged`) unions only the compacted
@@ -29,6 +29,11 @@ partitioned materialized form. The windowed aggregation path uses
 event-time + watermark, so late events older than the watermark are
 dropped deterministically instead of reordering history (the reference
 simply processes in arrival order — ST5).
+
+Plumbing shared by every stream below: ``_drain``/``_drain_to`` run a
+bounded availableNow ``foreachBatch`` query, ``_route_failures`` is the
+one DLQ/requeue router, ``arrival_relay`` lays a frame out as ordered
+arrival files and ``_arrival_stream`` reads them one file per batch.
 """
 
 from __future__ import annotations
@@ -45,14 +50,83 @@ PROCESS_TYPES = ("purchase", "signup")  # plays item.update/item.create
 DLQ_THRESHOLD = 10  # failed_attempts >= 10 → dead letter
 
 
+def first_attempts() -> Column:
+    """``failed_attempts`` of a failure's first try, derived from its
+    value (the fixture carries no attempt counter): ``floor(value) % 12
+    + 1``. ``%`` keeps the sign, so a negative value starts at ≤ 0."""
+    return F.floor(F.col("value")).cast("int") % 12 + 1
+
+
+def _drain(
+    stream: DataFrame, batch_fn, checkpoint: str, output_mode: str = "append"
+) -> None:
+    """Run ``batch_fn(batch, batch_id)`` over ``stream`` with an
+    availableNow trigger and wait: every micro-batch of the input
+    available now is processed, then the query stops. The checkpoint
+    makes a later drain of the same source see only newer input."""
+    (
+        stream.writeStream.outputMode(output_mode)
+        .foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _drain_to(stream: DataFrame, out: str, output_mode: str) -> None:
+    """``_drain`` each micro-batch into the parquet sink ``out``,
+    checkpointed at ``out + "_checkpoint"``. A complete-mode batch is
+    the whole result table and overwrites; any other batch holds new
+    rows and appends."""
+    mode = "overwrite" if output_mode == "complete" else "append"
+    _drain(
+        stream,
+        lambda batch, _: batch.write.mode(mode).parquet(out),
+        out + "_checkpoint",
+        output_mode,
+    )
+
+
+def _append_one_file(df: DataFrame, path: str) -> None:
+    """Append ``df`` to ``path`` as ONE part file. The rows are
+    batch-bounded, and every file appended to the retry queue or the
+    DLQ is re-listed and re-opened by each later drain pass or DLQ
+    read — one file per append instead of one per task keeps that
+    per-pass cost flat (guide §6). Production sizes by bytes instead
+    (maxRecordsPerFile / a REBALANCE hint)."""
+    df.coalesce(1).write.mode("append").parquet(path)
+
+
+def _route_failures(failures: DataFrame, paths: dict[str, object]) -> int:
+    """The failure router (`PodioApiGateway.py:153-159`): rows of
+    ``failures`` with ``failed_attempts >= DLQ_THRESHOLD`` are appended
+    to the DLQ, rows below it to the retry queue. Returns the requeued
+    count. Both counts come from ONE aggregate job over ``failures``,
+    which the caller persists. Empty appends are skipped, and that is
+    load-bearing: an empty write still creates a part file, the next
+    drain pass reads it as new input, and the drain loop would never
+    reach its fixpoint."""
+    dead = F.col("failed_attempts") >= DLQ_THRESHOLD
+    queued = F.col("failed_attempts") < DLQ_THRESHOLD
+    stats = failures.agg(
+        F.count(F.when(dead, 1)).alias("n_dead"),
+        F.count(F.when(queued, 1)).alias("n_queued"),
+    ).first()
+    if stats["n_dead"]:
+        _append_one_file(failures.filter(dead), str(paths["dlq"]))
+    if stats["n_queued"]:
+        _append_one_file(failures.filter(queued), str(paths["retry_queue"]))
+    return stats["n_queued"]
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source readStream over the events fixture (S7). The stream
     schema is the batch schema; ts is normalized to a µs timestamp
     exactly like io.table (both fixture vintages)."""
-    from crm_etl_pipeline_spark.io import normalize_event_ts
+    from crm_etl_pipeline_spark.io import ensure_nanos_as_long, normalize_event_ts
 
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_nanos_as_long(spark)
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(schema)
@@ -64,8 +138,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _append_versions(log_path: str, updates: DataFrame) -> None:
     """Append one micro-batch of new versions to the version log:
-    O(batch) work regardless of store size — the scale-safe replacement
-    for the r2 full-store rewrite. At-least-once redelivery appends
+    O(batch) work regardless of store size, where a full-store rewrite
+    would be O(store) per batch. At-least-once redelivery appends
     duplicate rows; ``scd2_apply``'s (item_id, ts, event_id) dedup at
     read time collapses them, so the CONVERGED state is exactly-once
     (the idempotent-merge property tests/test_streaming.py asserts)."""
@@ -147,63 +221,40 @@ def run_pipeline(
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         batch = batch.persist()
         try:
-            updates = batch.filter(F.col("event_type").isin(*PROCESS_TYPES)).select(
-                F.col("user_id").alias("item_id"), "event_id", "ts", "value"
+            processed = batch.filter(F.col("event_type").isin(*PROCESS_TYPES))
+            _append_versions(
+                str(paths["store"]),
+                processed.select(F.col("user_id").alias("item_id"), "event_id", "ts", "value"),
             )
-            _append_versions(str(paths["store"]), updates)
-            scd.append_completed(
-                batch.filter(F.col("event_type").isin(*PROCESS_TYPES)),
-                str(paths["completed"]),
+            scd.append_completed(processed, str(paths["completed"]))
+            _route_failures(
+                batch.filter(F.col("event_type") == "error").withColumn(
+                    "failed_attempts", first_attempts()
+                ),
+                paths,
             )
-            # failure branch: failed_attempts derived deterministically
-            # (same rule as retry_and_dead_letter); ≥10 → DLQ append,
-            # <10 → retry queue with the incremented counter
-            failures = batch.filter(F.col("event_type") == "error").withColumn(
-                "failed_attempts", F.floor(F.col("value")).cast("int") % 12 + 1
-            )
-            dead = failures.filter(F.col("failed_attempts") >= DLQ_THRESHOLD)
-            queued = failures.filter(F.col("failed_attempts") < DLQ_THRESHOLD)
-            # skip empty appends: an empty write still creates an empty
-            # part file, and in the retry queue that file would feed the
-            # drain loop a perpetual "new input" signal (see retry_batch).
-            # Both branch counts come from ONE aggregate job over the
-            # persisted batch (two isEmpty probes would each be a job).
-            stats = failures.agg(
-                F.count(F.when(F.col("failed_attempts") >= DLQ_THRESHOLD, 1)).alias("n_dead"),
-                F.count(F.when(F.col("failed_attempts") < DLQ_THRESHOLD, 1)).alias("n_queued"),
-            ).first()
-            # coalesce(1): both branches are batch-bounded row sets, and
-            # every file appended here is RE-LISTED by each subsequent
-            # drain pass (the queue feeds a file-source stream) or DLQ
-            # read — one file per append instead of one per task keeps
-            # the drain loop's per-pass listing/open cost flat (guide
-            # §6). Production sizes by bytes instead (maxRecordsPerFile
-            # / a REBALANCE hint), same as the incremental-dedup store.
-            if stats["n_dead"]:
-                dead.coalesce(1).write.mode("append").parquet(str(paths["dlq"]))
-            if stats["n_queued"]:
-                queued.coalesce(1).write.mode("append").parquet(str(paths["retry_queue"]))
         finally:
             batch.unpersist()
 
-    writer = (
-        events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", str(paths["checkpoint"]))
-    )
-    if trigger_available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        if drain_retries:
-            paths["retry_passes"] = drain_retry_queue(spark, paths)
-    else:
-        paths["query"] = writer.trigger(processingTime="10 seconds").start()
+    stream = events_stream(spark, sf_dir)
+    checkpoint = str(paths["checkpoint"])
+    if not trigger_available_now:
+        paths["query"] = (
+            stream.writeStream.foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint)
+            .trigger(processingTime="10 seconds")
+            .start()
+        )
+        return paths
+    _drain(stream, process_batch, checkpoint)
+    if drain_retries:
+        paths["retry_passes"] = drain_retry_queue(spark, paths)
     return paths
 
 
 def read_dlq(spark: SparkSession, paths: dict[str, object], sf_dir: str) -> DataFrame:
     """DLQ contents after a bounded run. Empty appends are skipped (see
-    process_batch), so a fixture/scale where no error event crosses
+    _route_failures), so a fixture/scale where no error event crosses
     DLQ_THRESHOLD never creates the dlq directory at all — absence means
     EMPTY, not error. Return a zero-row frame with the run's DLQ schema
     (events columns + failed_attempts) instead of letting the parquet
@@ -232,7 +283,7 @@ def drain_retry_queue(spark: SparkSession, paths: dict[str, object]) -> int:
     A pass re-attempts each queued failure: still failing with
     ``attempts+1 < threshold`` → re-append to the queue (picked up by
     the NEXT pass); at the threshold → DLQ. The loop terminator is the
-    FIXPOINT check (a pass that appends nothing new), not a bound
+    FIXPOINT check (a pass that requeues nothing), not a bound
     derived from the threshold: derived first attempts are
     ``floor(value) % 12 + 1``, which both engines sign-preserve, so a
     negative event value yields first_attempts ≤ 0 and needs MORE than
@@ -247,107 +298,70 @@ def drain_retry_queue(spark: SparkSession, paths: dict[str, object]) -> int:
     the derived-attempts model used everywhere.
     """
     queue_dir = str(paths["retry_queue"])
-    retry_ckpt = str(paths["checkpoint"]) + "_retry"
     if not os.path.isdir(queue_dir):
         return 0  # no sub-threshold failures ever queued
-    schema = spark.read.parquet(queue_dir).schema
+    queue = spark.readStream.schema(spark.read.parquet(queue_dir).schema).parquet(queue_dir)
+    requeued = 0
 
     def retry_batch(batch: DataFrame, batch_id: int) -> None:
-        bumped = batch.withColumn("failed_attempts", F.col("failed_attempts") + 1)
-        bumped = bumped.persist()
+        nonlocal requeued
+        bumped = batch.withColumn("failed_attempts", F.col("failed_attempts") + 1).persist()
         try:
-            dead = bumped.filter(F.col("failed_attempts") >= DLQ_THRESHOLD)
-            requeued = bumped.filter(F.col("failed_attempts") < DLQ_THRESHOLD)
-            # skip-empty is LOAD-BEARING, not cosmetic: an empty append
-            # still writes one empty part file, which the next pass's
-            # stream picks up as new input, which appends another empty
-            # file — the directory never stops changing and the fixpoint
-            # terminator below never fires. One aggregate job supplies
-            # both branch counts (vs a per-branch isEmpty job).
-            stats = bumped.agg(
-                F.count(F.when(F.col("failed_attempts") >= DLQ_THRESHOLD, 1)).alias("n_dead"),
-                F.count(F.when(F.col("failed_attempts") < DLQ_THRESHOLD, 1)).alias("n_queued"),
-            ).first()
-            # coalesce(1): each pass re-lists and re-opens every file in
-            # the queue dir (stream listing) and the requeued set is
-            # batch-bounded, so one file per hop instead of one per task
-            # keeps pass N's input at N files, not N·tasks (guide §6 —
-            # measured: the un-coalesced replay drain accumulated 109
-            # queue part files over 19 hops). Production knob:
-            # maxRecordsPerFile, as documented for the dedup store.
-            if stats["n_dead"]:
-                dead.coalesce(1).write.mode("append").parquet(str(paths["dlq"]))
-            if stats["n_queued"]:
-                requeued.coalesce(1).write.mode("append").parquet(queue_dir)
+            requeued += _route_failures(bumped, paths)
         finally:
             bumped.unpersist()
 
-    passes = 0
     # floor(value) % 12 + 1 ∈ [-10, 12] (sign-preserving %), so the
     # farthest-from-threshold failure converges in ≤ 2·DLQ_THRESHOLD
     # passes; anything past that is a requeue bug, not slow convergence
     max_passes = 2 * DLQ_THRESHOLD + 2
+    passes = 0
     while True:
-        before = {f for f in os.listdir(queue_dir) if f.endswith(".parquet")}
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(queue_dir)
-            .writeStream.foreachBatch(retry_batch)
-            .option("checkpointLocation", retry_ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        requeued = 0
+        _drain(queue, retry_batch, str(paths["checkpoint"]) + "_retry")
         passes += 1
-        after = {f for f in os.listdir(queue_dir) if f.endswith(".parquet")}
-        if after == before:
-            break  # fixpoint: nothing requeued, every failure dead-lettered
+        if not requeued:
+            return passes  # fixpoint: every failure dead-lettered
         if passes >= max_passes:
             raise RuntimeError(
                 f"retry queue failed to converge after {passes} passes — "
                 "requeue loop is appending without bumping attempts"
             )
-    return passes
 
 
-def replay_dlq(spark: SparkSession, paths: dict[str, object], reset_to: int = 0) -> int:
+def replay_dlq(spark: SparkSession, paths: dict[str, object]) -> int:
     """Re-drive dead-lettered events — the operator form of the
     reference's "email admin" stub (`PodioApiGateway.py:157-159`), where
     a human inspects the dead letter and re-submits it. Every DLQ entry
     is re-enqueued onto the retry queue with its attempts counter reset
-    to ``reset_to`` (default 0 — a full fresh re-drive), then the queue
-    is drained back to fixpoint by the same checkpointed availableNow
-    loop as the original run (``drain_retry_queue`` — the checkpoint
-    makes the drain pick up exactly the replayed files, no manual file
-    bookkeeping).
+    to 0 (a full fresh re-drive), then the queue is drained back to
+    fixpoint by the same checkpointed availableNow loop as the original
+    run (``drain_retry_queue`` — the checkpoint makes the drain pick up
+    exactly the replayed files, no manual file bookkeeping).
 
     The DLQ is a LOG, not a set: the original generation's entries stay
     put, and because this deterministic replay has no success-on-retry
     signal (an 'error' event always fails again, the model used
     everywhere), each replayed event dead-letters a second time at
-    exactly ``DLQ_THRESHOLD`` — counting from ``reset_to`` in +1 steps
-    it crosses the threshold precisely at it. Converged closed form per
-    error event: 2 DLQ generations, max(first_attempts, threshold) from
-    the original run, threshold exactly from the replay — the oracle
+    exactly ``DLQ_THRESHOLD`` — counting from 0 in +1 steps it crosses
+    the threshold precisely at it. Converged closed form per error
+    event: 2 DLQ generations, max(first_attempts, threshold) from the
+    original run, threshold exactly from the replay — the oracle
     ``streaming_dlq_replay`` states. Returns drain passes run (0 when
     the DLQ is empty/absent).
 
     Scale shape: one O(DLQ) read + append per replay, then the drain's
-    O(queue) passes — never touches the store or completed log, and the
-    pass count is bounded by ``DLQ_THRESHOLD - reset_to + 1``.
+    O(queue) passes — never touches the store or completed log. After a
+    converged drain, the replay drain runs exactly ``DLQ_THRESHOLD``
+    passes.
     """
     dlq_dir = str(paths["dlq"])
     if not os.path.isdir(dlq_dir):
         return 0  # nothing ever dead-lettered — replay is a no-op
-    queue_dir = str(paths["retry_queue"])
-    os.makedirs(queue_dir, exist_ok=True)
-    replayed = spark.read.parquet(dlq_dir).withColumn(
-        "failed_attempts", F.lit(reset_to).cast("int")
+    _append_one_file(
+        spark.read.parquet(dlq_dir).withColumn("failed_attempts", F.lit(0).cast("int")),
+        str(paths["retry_queue"]),
     )
-    # coalesce(1): O(DLQ) bounded rows, and the drain's first pass
-    # re-opens every file written here (guide §6; maxRecordsPerFile in
-    # production, same as the drain-loop appends above).
-    replayed.coalesce(1).write.mode("append").parquet(queue_dir)
     return drain_retry_queue(spark, paths)
 
 
@@ -371,18 +385,7 @@ def windowed_counts_stream(spark: SparkSession, sf_dir: str, out_path: str) -> N
             "total_value",
         )
     )
-
-    def write_final(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(out_path)
-
-    q = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(write_final)
-        .option("checkpointLocation", os.path.join(out_path + "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to(counts, out_path, "complete")
 
 
 def session_windows_stream(spark: SparkSession, sf_dir: str, out_path: str) -> None:
@@ -404,18 +407,7 @@ def session_windows_stream(spark: SparkSession, sf_dir: str, out_path: str) -> N
             "n_events",
         )
     )
-
-    def write_final(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(out_path)
-
-    q = (
-        sessions.writeStream.outputMode("complete")
-        .foreachBatch(write_final)
-        .option("checkpointLocation", out_path + "_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to(sessions, out_path, "complete")
 
 
 def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str, out_path: str) -> None:
@@ -434,17 +426,7 @@ def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str, out_path: st
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("append").parquet(out_path)
-
-    q = (
-        deduped.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", out_path + "_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to(deduped, out_path, "append")
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str, out_path: str) -> None:
@@ -488,17 +470,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str, out_path: str) -> None:
         ),
         "inner",
     ).select("purchase_id", "click_id", "user_id")
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("append").parquet(out_path)
-
-    q = (
-        joined.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", out_path + "_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to(joined, out_path, "append")
 
 
 def batch_equivalent_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -540,7 +512,7 @@ _SESSION_OUT = StructType(
         # epoch-MICROS, not TimestampType: the Arrow bridge materializes
         # pandas datetime64[ns] inside the UDF, which overflows on any
         # clock-skew event past 2262-04-11 and kills the whole stage
-        # (far_future_ts probe, round 8) — int64 micros cross the
+        # (the far_future_ts probe) — int64 micros cross the
         # boundary unharmed; read_sessions converts back JVM-side
         StructField("session_start_us", LongType()),
         StructField("session_end_us", LongType()),
@@ -615,18 +587,7 @@ def stateful_sessionization(spark: SparkSession, sf_dir: str, out_path: str) -> 
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("append").parquet(out_path)
-
-    q = (
-        sessions.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", out_path + "_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to(sessions, out_path, "update")
 
 
 def read_sessions(spark: SparkSession, out_path: str) -> DataFrame:
@@ -651,7 +612,7 @@ def read_sessions(spark: SparkSession, out_path: str) -> DataFrame:
 def moments_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     """Incremental per-type moment accumulation (ST1-ST3 shape applied
     to profiling): the events fixture is re-laid as 4 parquet chunks
-    and streamed with ``maxFilesPerTrigger=1``, so the per-event-type
+    and streamed one file per micro-batch, so the per-event-type
     (count, Σvalue, Σvalue²) DECIMAL moments genuinely MERGE across
     four micro-batches of streaming-aggregation state — the mergeable
     property the batch twin (``event_value_anomalies``) relies on,
@@ -664,31 +625,14 @@ def moments_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     ).repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     vdec = F.col("value").cast("decimal(18,2)")
-    moments = stream.groupBy("event_type").agg(
+    moments = _arrival_stream(spark, src).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(vdec).alias("s1"),
         F.sum(vdec * vdec).alias("s2"),
     )
     out = os.path.join(workdir, "moments")
-
-    def write_final(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("overwrite").parquet(out)
-
-    q = (
-        moments.writeStream.outputMode("complete")
-        .foreachBatch(write_final)
-        .option("checkpointLocation", out + "_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to(moments, out, "complete")
     return out
 
 
@@ -770,11 +714,12 @@ def _rate_limit_group(key, pdfs, state: GroupState):
 def rate_limit_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     """Stream the events fixture through the stateful rate limiter in 4
     time-ordered micro-batches and return the decisions path. The
-    fixture is re-laid as 4 single-file chunks split on event_id
-    quartiles (ts is monotone in event_id in every fixture vintage, so
-    chunk order == event-time order) and streamed with
-    ``maxFilesPerTrigger=1`` — hours that span a chunk boundary
-    genuinely exercise the carried counters."""
+    fixture is re-laid as 4 arrival files split on event_id quartiles
+    (ts is monotone in event_id in every fixture vintage, so chunk
+    order == event-time order; a NULL or negative id is in no quartile
+    and never arrives) and streamed one file per micro-batch — hours
+    that span a chunk boundary genuinely exercise the carried
+    counters."""
     from crm_etl_pipeline_spark.io import table
 
     src = os.path.join(workdir, "chunks")
@@ -784,20 +729,9 @@ def rate_limit_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     # instead of crashing on None arithmetic
     hi = ev.agg(F.max("event_id")).collect()[0][0] or 0
     step = (hi + 4) // 4
-    for i in range(4):
-        (
-            ev.filter(
-                (F.col("event_id") >= i * step) & (F.col("event_id") < (i + 1) * step)
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    calls = stream.select(
+    eid = F.col("event_id")
+    arrival_relay(ev, src, [(eid >= i * step) & (eid < (i + 1) * step) for i in range(4)])
+    calls = _arrival_stream(spark, src).select(
         "event_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
         F.unix_micros(F.date_trunc("hour", F.col("ts"))).alias("hour_us"),
@@ -810,28 +744,17 @@ def rate_limit_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     out = os.path.join(workdir, "decisions")
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.write.mode("append").parquet(out)  # decisions are immutable
-
-    q = (
-        decisions.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", out + "_checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to(decisions, out, "update")  # decisions are immutable: appended
     return out
 
 
 def late_arrival_audit_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str:
     """Watermark late-data accounting (ST5/ST6 hardening): replay the
     events fixture as THREE deterministic arrival files (md5 split of
-    event_id: < '6' / < 'b' / rest) processed one per micro-batch
-    (``maxFilesPerTrigger=1``, mtimes pin the order), through a 1-day
-    tumbling aggregation with a 1-hour watermark in APPEND mode, and
-    materialize the finalized windows.
+    event_id: < '6' / < 'b' / rest; a NULL id is in no split) processed
+    one per micro-batch, through a 1-day tumbling aggregation with a
+    1-hour watermark in APPEND mode, and materialize the finalized
+    windows.
 
     Pinned semantics (measured on this Spark, and what the oracle
     models): the watermark applied in batch N is max(event time through
@@ -848,48 +771,16 @@ def late_arrival_audit_stream(spark: SparkSession, sf_dir: str, workdir: str) ->
     no state — lost rows are measured by joining the sink against the
     batch truth, which is exactly what a production pipeline's
     reconciliation job does."""
-    import glob
-    import shutil
+    from crm_etl_pipeline_spark.io import table
 
     src = os.path.join(workdir, "arrivals")
-    os.makedirs(src, exist_ok=True)
-    # batch-read the fixture with the same ts normalization as the stream
-    from crm_etl_pipeline_spark.io import normalize_event_ts
-
-    if not all(
-        os.path.exists(os.path.join(src, f"e{i}.parquet")) for i in range(3)
-    ):
-        # fabricate once per workdir: rewriting identical arrival files on
-        # a repeat call would churn mtimes under a live checkpoint for no
-        # semantic gain (the drained stream is idempotent either way)
-        batch = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        h = F.substring(F.md5(F.col("event_id").cast("string")), 1, 1)
-        splits = [
-            batch.filter(h < "6"),
-            batch.filter((h >= "6") & (h < "b")),
-            batch.filter(h >= "b"),
-        ]
-        for i, part in enumerate(splits):
-            tmp = os.path.join(workdir, f"split{i}")
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            dst = os.path.join(src, f"e{i}.parquet")
-            written = glob.glob(os.path.join(tmp, "*.parquet"))
-            # a degenerate/tiny fixture can leave an md5 split empty, and
-            # an empty write produces a directory with no part files —
-            # fail with the cause, not an IndexError three frames deep
-            if not written:
-                raise ValueError(
-                    f"arrival split {i} of {sf_dir}/events.parquet is empty: "
-                    "the md5 thirds need a fixture with enough events to "
-                    "populate every arrival file"
-                )
-            shutil.copy(written[0], dst)
-            # monotone mtimes = deterministic batch order for the file source
-            os.utime(dst, (1_000_000_000 + i * 100,) * 2)
-    schema = spark.read.parquet(os.path.join(src, "e0.parquet")).schema
-    raw = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+    h = F.substring(F.md5(F.col("event_id").cast("string")), 1, 1)
+    arrival_relay(
+        table(spark, sf_dir, "events"), src, [h < "6", (h >= "6") & (h < "b"), h >= "b"]
+    )
     agg = (
-        raw.withWatermark("ts", "1 hour")
+        _arrival_stream(spark, src)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_stream"))
     )
@@ -937,60 +828,58 @@ def _curve_columns(ev: DataFrame, anchor: DataFrame) -> DataFrame:
     )
 
 
-def pmod_chunk_relay(
-    df: DataFrame, dest_dir: str, n: int = 4, key: Column | None = None
-) -> None:
-    """Re-lay a fixture frame as ``n`` single-file parquet chunks so a
-    file-source readStream with ``maxFilesPerTrigger=1`` drains it as
-    ``n`` genuine micro-batches, in deterministic order (monotone
-    mtimes pin the file-source ordering). THE chunk-assignment
-    contract, shared by every pmod-sharded streaming harness
-    (zorder_ingest_stream, stream_static_enrichment; the batch twin in
-    layout_q.py mirrors it): ``pmod(coalesce(event_id, 0), n)``, not
-    ``%`` — a NULL/negative event_id under ``%`` matches NO chunk and
-    the row silently never arrives while the shared oracle still emits
-    it (round-10 advisor find). pmod lands negatives in [0, n); NULL
-    ids shard to chunk 0. ``key`` overrides the sharding expression for
-    non-event frames (round 13: incremental_dedup_stream shards
-    documents on a clone-scattering key; callers owning an oracle must
-    mirror their key there). The override is coalesced to 0 here, not
-    trusted: a NULL-producing key makes pmod NULL, which matches NO
-    chunk filter and the row silently never arrives — the exact
-    round-10 hazard the default path exists to prevent (round-13
-    ADVICE). Negatives land in [0, n) via pmod either way. The frame
-    is cached for the n filter passes (one real scan, n-1 cache reads)
-    and unpersisted before return."""
+def arrival_relay(df: DataFrame, dest_dir: str, preds: list[Column]) -> None:
+    """Re-lay a fixture frame as one single-file arrival chunk per
+    predicate: ``dest_dir/e{i}.parquet`` holds the rows matching
+    ``preds[i]``, and the file mtimes increase with ``i``, so
+    ``_arrival_stream`` drains the chunks as ``len(preds)`` genuine
+    micro-batches in that order. A row that matches no predicate never
+    arrives; each caller's oracle must agree on which rows those are.
+    The frame is cached for the filter passes (one real scan, the rest
+    cache reads) and unpersisted before return."""
     os.makedirs(dest_dir, exist_ok=True)
-    chunk = (
-        F.pmod(F.coalesce(F.col("event_id"), F.lit(0)), F.lit(n))
-        if key is None
-        else F.pmod(F.coalesce(key, F.lit(0)), F.lit(n))
-    )
     df = df.cache()
     try:
         with tempfile.TemporaryDirectory() as tmp:
-            for i in range(n):
+            for i, pred in enumerate(preds):
                 chunk_dir = os.path.join(tmp, f"c{i}")
-                df.filter(chunk == i).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(chunk_dir)
+                df.filter(pred).coalesce(1).write.mode("overwrite").parquet(chunk_dir)
                 # Spark's SingleDirectoryDataWriter emits a part file
                 # even for an empty coalesce(1) write, but that is an
                 # implementation detail — fail loudly if it changes
-                # rather than leaking a bare StopIteration (r11 ADVICE).
+                # rather than leaking a bare StopIteration.
                 parts = [f for f in os.listdir(chunk_dir) if f.endswith(".parquet")]
                 if not parts:
                     raise RuntimeError(
-                        f"pmod_chunk_relay: chunk {i}/{n} produced no parquet part "
-                        f"file in {chunk_dir} — empty-chunk write no longer emits a "
-                        "part file; write a schema-only placeholder here instead"
+                        f"arrival_relay: chunk {i}/{len(preds)} produced no parquet "
+                        f"part file in {chunk_dir} — empty-chunk write no longer emits "
+                        "a part file; write a schema-only placeholder here instead"
                     )
-                part = parts[0]
                 dst = os.path.join(dest_dir, f"e{i}.parquet")
-                os.replace(os.path.join(chunk_dir, part), dst)
+                os.replace(os.path.join(chunk_dir, parts[0]), dst)
                 os.utime(dst, (1_000_000_000 + i * 100,) * 2)
     finally:
         df.unpersist()
+
+
+def pmod_chunks(key: Column, n: int) -> list[Column]:
+    """The ``n`` arrival predicates ``pmod(coalesce(key, 0), n) == i``
+    shared by the id-sharded harnesses (the batch twin in layout_q.py
+    mirrors the event_id form). pmod, not ``%``: a negative key under
+    ``%`` matches NO chunk, so the row would silently never arrive
+    while the oracle still emits it; pmod lands negatives in [0, n).
+    The key is coalesced to 0 for the same reason — a NULL key makes
+    pmod NULL, which matches no predicate. Callers owning an oracle
+    mirror their key there."""
+    chunk = F.pmod(F.coalesce(key, F.lit(0)), F.lit(n))
+    return [chunk == i for i in range(n)]
+
+
+def _arrival_stream(spark: SparkSession, src: str) -> DataFrame:
+    """File-source stream over the arrival files in ``src``, one file
+    per micro-batch in mtime order."""
+    schema = spark.read.parquet(src).schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
 
 
 def zorder_ingest_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str | None:
@@ -1011,7 +900,7 @@ def zorder_ingest_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str 
        and must not — the anchor belongs to the store, not the query.
     2. **Live tail (stream)** — the last 5 days arrive as four
        arrival files replayed through a real file-source readStream
-       (``maxFilesPerTrigger=1`` → four genuine micro-batches, monotone
+       one file per micro-batch (four genuine micro-batches, monotone
        mtimes for deterministic order). ``foreachBatch`` curves each
        micro-batch against the broadcast anchor and appends it to the
        delta log PARTITIONED BY SEGMENT — each micro-batch writes only
@@ -1063,15 +952,9 @@ def zorder_ingest_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str 
     # micro-batch order for the file source (raw wire columns — the
     # curve position is computed at ingest, not by the producer)
     arrivals = os.path.join(workdir, "arrivals")
-    pmod_chunk_relay(tail, arrivals)
+    arrival_relay(tail, arrivals, pmod_chunks(F.col("event_id"), 4))
 
     delta_log = os.path.join(workdir, "delta_log")
-    schema = spark.read.parquet(os.path.join(arrivals, "e0.parquet")).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals)
-    )
 
     def ingest_batch(batch: DataFrame, batch_id: int) -> None:
         # curve THIS batch against the store anchor and land it
@@ -1084,13 +967,7 @@ def zorder_ingest_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str 
             .parquet(delta_log)
         )
 
-    q = (
-        raw.writeStream.foreachBatch(ingest_batch)
-        .option("checkpointLocation", os.path.join(workdir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(_arrival_stream(spark, arrivals), ingest_batch, os.path.join(workdir, "_checkpoint"))
 
     delta = spark.read.parquet(delta_log)
     layout.compact_zordered_increment(spark, store, delta, "zval", "seg")
@@ -1136,7 +1013,7 @@ def incremental_dedup_stream(
     corpus (fixture + fabricated clones) is re-laid as 4 arrival files
     with monotone mtimes (``dedup_arrival_chunk`` scatters
     clone/original pairs across chunks — see its docstring), drained by
-    a real file-source readStream with maxFilesPerTrigger=1.
+    a real file-source readStream one file per micro-batch.
     ``foreachBatch``: (1) normalize + sha256 the batch (the
     exact_dedup_documents normalization, verbatim); (2) collapse the
     batch to one winner per content hash (min doc_id — within one
@@ -1163,20 +1040,13 @@ def incremental_dedup_stream(
         return None
 
     arrivals = os.path.join(workdir, "arrivals")
-    pmod_chunk_relay(
+    arrival_relay(
         corpus.select("doc_id", "text"),
         arrivals,
-        n=DEDUP_CHUNKS,
-        key=F.expr("coalesce(abs(doc_id), 0) div 7"),
+        pmod_chunks(F.expr("coalesce(abs(doc_id), 0) div 7"), DEDUP_CHUNKS),
     )
 
     store = os.path.join(workdir, "dedup_store")
-    schema = spark.read.parquet(os.path.join(arrivals, "e0.parquet")).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals)
-    )
     normalized = _casefold(
         F.trim(F.regexp_replace(F.col("text"), "[" + _WS_CLASS + "]+", " "))
     )
@@ -1208,23 +1078,12 @@ def incremental_dedup_stream(
                 winners["content_hash"].eqNullSafe(accepted["_acc_hash"]),
                 "left_anti",
             )
-        # one file per micro-batch append (guide §6 small-files): the
-        # un-coalesced write landed one tiny file per shuffle partition
-        # (~32/batch), and every LATER batch's store anti-join re-listed
-        # and re-opened all of them — measured ~0.5 s off the 4-batch
-        # drain at sf0.1. Winners are the batch's NEW distinct hashes
-        # (bounded by batch size); at production batch sizes the knob is
-        # file-size-targeted (maxRecordsPerFile / a REBALANCE hint), not
-        # a constant 1.
-        winners.coalesce(1).write.mode("append").parquet(store)
+        # one file per append: every LATER batch's store anti-join
+        # re-lists and re-opens the store, and winners (the batch's NEW
+        # distinct hashes) are bounded by batch size
+        _append_one_file(winners, store)
 
-    q = (
-        raw.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", os.path.join(workdir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(_arrival_stream(spark, arrivals), dedup_batch, os.path.join(workdir, "_checkpoint"))
     return store if os.path.isdir(store) else None
 
 
@@ -1237,10 +1096,10 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str, workdir: str) -> 
     (`PodioApiWrapper.py:68-69` resolves the app FK on every item it
     processes).
 
-    The fixture is re-laid as 4 single-file chunks on
+    The fixture is re-laid as 4 arrival files on
     ``pmod(coalesce(event_id, 0), 4)`` (the NULL/negative-safe chunk
-    assignment — advisor round 10) and streamed with
-    ``maxFilesPerTrigger=1``, so the static side is genuinely joined
+    assignment, see ``pmod_chunks``) and streamed one file per
+    micro-batch, so the static side is genuinely joined
     on FOUR separate micro-batches: Spark re-plans the join each
     trigger, which is what lets a REFRESHED dim table be picked up
     mid-stream without restarting the query. The join is stateless —
@@ -1259,17 +1118,13 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str, workdir: str) -> 
 
     src = os.path.join(workdir, "chunks")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    pmod_chunk_relay(ev, src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
+    arrival_relay(ev, src, pmod_chunks(F.col("event_id"), 4))
     dim = F.broadcast(
         table(spark, sf_dir, "customer")
         .groupBy(F.col("c_custkey").alias("user_id"))
         .agg(F.min("c_mktsegment").alias("segment"))
     )
-    enriched = stream.join(dim, "user_id", "left").select(
+    enriched = _arrival_stream(spark, src).join(dim, "user_id", "left").select(
         "event_id",
         "user_id",
         "event_type",
@@ -1277,19 +1132,13 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str, workdir: str) -> 
     )
     out = os.path.join(workdir, "enriched")
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
+    def stamp_batch(batch: DataFrame, batch_id: int) -> None:
         # _batch_id is harness telemetry (the per-micro-batch re-plan
         # invariant tests assert on it); the registered query projects
         # it away, so the oracle never sees it
         batch.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(out)
 
-    q = (
-        enriched.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(workdir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(enriched, stamp_batch, os.path.join(workdir, "_checkpoint"))
     return out
 
 
@@ -1309,7 +1158,7 @@ def ivf_arrival_pred() -> Column:
 def incremental_ivf_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str | None:
     """Incremental IVF index maintenance — the serving-index half of
     the ingest story (the streaming_zorder_ingest pattern applied to
-    ann_ivf_persisted_index, the round-13 verdict's growth slot #6):
+    ann_ivf_persisted_index):
     new vectors arrive in micro-batches, are assigned to the EXISTING
     cells of a bootstrap-trained codebook, and land as appends that
     touch only their cell partitions — the base index is never
@@ -1326,9 +1175,9 @@ def incremental_ivf_stream(spark: SparkSession, sf_dir: str, workdir: str) -> st
        ann_ivf_persisted_index layout. The codebook is persisted as
        store METADATA — incremental maintenance must assign against
        the frozen codebook, not retrain it (retraining is a rebuild).
-    2. **Live tail (stream)** — arrival vectors re-laid as 4 files
-       with monotone mtimes, drained by a real file-source readStream
-       (maxFilesPerTrigger=1 → 4 genuine micro-batches).
+    2. **Live tail (stream)** — arrival vectors re-laid as 4 arrival
+       files, drained by a real file-source readStream one file per
+       micro-batch (4 genuine micro-batches).
        ``foreachBatch``: assign the batch against the broadcast frozen
        codebook, append partitioned by cell — each micro-batch writes
        ONLY the cell directories it touches, O(batch·k) work, zero
@@ -1368,10 +1217,9 @@ def incremental_ivf_stream(spark: SparkSession, sf_dir: str, workdir: str) -> st
     store = os.path.join(workdir, "ivf_index")
 
     def indexed(frame: DataFrame) -> DataFrame:
-        # Round-15: cell assignment inlined as a projection
-        # (_ivf_cell_inline — bit-identical argmin, see its docstring)
-        # instead of _ivf_assign + a vec_id join-back, which cost an
-        # argmin-window shuffle plus a payload re-join PER MICRO-BATCH.
+        # cell assignment is a projection (_ivf_cell_inline —
+        # bit-identical argmin, see its docstring), so a micro-batch
+        # pays no argmin-window shuffle and no payload re-join.
         # repartition("cell"): each append lands one file per touched
         # cell instead of one per (task × cell) — the store read-back
         # and the touched-cell contract are unchanged, the file count
@@ -1386,27 +1234,14 @@ def incremental_ivf_stream(spark: SparkSession, sf_dir: str, workdir: str) -> st
     indexed(boot).write.mode("overwrite").partitionBy("cell").parquet(store)
 
     arrivals_dir = os.path.join(workdir, "arrivals")
-    pmod_chunk_relay(
+    arrival_relay(
         emb.filter(ivf_arrival_pred()).select("vec_id", "embedding"),
         arrivals_dir,
-        n=4,
-        key=F.coalesce(F.abs(F.col("vec_id")), F.lit(0)),
-    )
-    schema = spark.read.parquet(os.path.join(arrivals_dir, "e0.parquet")).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals_dir)
+        pmod_chunks(F.coalesce(F.abs(F.col("vec_id")), F.lit(0)), 4),
     )
 
     def index_batch(batch: DataFrame, batch_id: int) -> None:
         indexed(batch).write.mode("append").partitionBy("cell").parquet(store)
 
-    q = (
-        raw.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", os.path.join(workdir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(_arrival_stream(spark, arrivals_dir), index_batch, os.path.join(workdir, "_checkpoint"))
     return store

@@ -122,10 +122,10 @@ def test_mom_growth_first_month_null(spark):
 
 
 def test_late_audit_idempotent_within_session(spark):
-    """A second invocation in the same process reuses the pid-scoped
-    workdir (arrival files + checkpoint already present): the converged
-    sink must be identical, and the fabrication must not be redone
-    under the live checkpoint."""
+    """A second invocation in the same process gets the same pid-scoped
+    workdir path, which ``_workdir`` empties on every call, so arrival
+    files and checkpoint are rebuilt from scratch: the converged sink
+    must be identical across the two runs."""
     q = REGISTRY["streaming_late_data_audit"].fn
     a = sorted(tuple(r) for r in q(spark, SF).collect())
     b = sorted(tuple(r) for r in q(spark, SF).collect())

@@ -394,6 +394,46 @@ def test_replay_dlq_empty_noop(spark, tmp_path):
     assert streaming.replay_dlq(spark, paths) == 0
 
 
+def test_one_data_file_per_failure_append(spark, tmp_path):
+    """Every non-empty append to the retry queue or the DLQ writes ONE
+    data file: each drain pass re-lists and re-opens the queue, so one
+    file per task would multiply the files hop after hop. The number of
+    appends has a closed form in the error events' first attempts ``a``
+    (T = DLQ_THRESHOLD; each drain pass adds 1 to every queued row):
+
+    - run + drain: the queue takes one append per pass that still holds
+      a row below T, which is T - min(a) appends; the DLQ takes one for
+      the rows already at T in the event batch, plus one per distinct
+      a < T (those rows reach T together, in pass T - a);
+    - replay: one enqueue of the whole DLQ at 0 attempts, then T - 1
+      passes that requeue everything and one that dead-letters it."""
+    import os
+
+    threshold = streaming.DLQ_THRESHOLD
+    paths = streaming.run_pipeline(
+        spark, SF_DIR, workdir=str(tmp_path), drain_retries=True
+    )
+    streaming.replay_dlq(spark, paths)
+    first = [
+        r[0]
+        for r in normalize_event_ts(spark.read.parquet(f"{SF_DIR}/events.parquet"))
+        .filter(F.col("event_type") == "error")
+        .select(F.floor(F.col("value")).cast("int") % 12 + 1)
+        .collect()
+        if r[0] is not None
+    ]
+    below = {a for a in first if a < threshold}
+    assert below and max(first) >= threshold, "fixture must reach both branches"
+    queue_appends = (threshold - min(below)) + 1 + (threshold - 1)
+    dlq_appends = 1 + len(below) + 1
+
+    def data_files(d):
+        return sum(f.endswith(".parquet") for f in os.listdir(d))
+
+    assert data_files(str(paths["retry_queue"])) == queue_appends
+    assert data_files(str(paths["dlq"])) == dlq_appends
+
+
 def test_event_ts_vintage_roundtrip(spark, tmp_path):
     """io.table must produce IDENTICAL timestamps whether events.parquet
     stores TIMESTAMP(NANOS) (pre-round-5 fixtures, read as nanos-long

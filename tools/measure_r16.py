@@ -1,4 +1,4 @@
-"""Round-15 optimization measurement harness (guide §1).
+"""Per-query timing and plan-shape harness (guide §1).
 
 For each named query (default: the three bench tiers), runs the query
 with the noop sink (times computation, not the sink — guide §1.4),
