@@ -32,57 +32,56 @@ from crm_etl_pipeline_spark.queries import (  # noqa: F401
 # names, so the list fits that 50-query prefix;
 # test_driver_priority_window enforces the fit.
 DRIVER_PRIORITY: list[str] = [
-    # --- (a) the 32 named age-5 defers, seated FIRST (the promise) ---
-    "array_csv_roundtrip",
-    "catalog_fields_tree",
-    "composite_key_roundtrip",
-    "date_parse_reformat",
-    "decile_gains_table",
-    "event_type_routing",
-    "histogram_order_values",
-    "html_strip_normalize",
-    "join_full_outer",
-    "join_left_missing",
-    "kmv_sketch_merge",
-    "mom_revenue_growth",
-    "money_decimal_cast",
-    "orc_source_roundtrip",
-    "pearson_correlation_matrix",
-    "repeated_span_mining",
-    "retry_and_dead_letter",
-    "rollup_revenue",
-    "value_percentiles",
-    "version_counts_per_key",
-    "xml_source_roundtrip",
-    "typed_field_decode",
-    "flagship_segment_revenue",
-    "streaming_dim_enrichment",
-    "streaming_zorder_ingest",
-    "prefix_filter_setsim_join",
-    "lsh_bucket_profile",
-    "simhash_near_dup",
-    "pricing_summary",
-    "schema_evolution_read",
-    "wap_publish_roundtrip",
-    "skew_salted_join",
-    # --- (b) round-16 changed-bytes rows ---
-    "streaming_scd2_state",
-    "streaming_dlq",
-    "streaming_requeue",
-    "streaming_dlq_replay",
+    # --- (a) Spark code changed by the shared similarity-search kernels ---
+    "ann_cosine_topk",
+    "ann_lsh_bucketed",
+    "ann_ivf_nprobe2",
+    "ann_ivf_probe",
+    "ann_ivf_persisted_index",
+    "ann_ivf_incremental_index",
+    "knn_label_disagreement",
+    "embedding_kmeans",
+    "kmeans_cluster_purity",
+    "semantic_dedup",
+    "ann_pq_adc",
+    "embedding_near_dup",
+    "ann_recall_selfcheck",
+    "bm25_topk_search",
     "hybrid_rank_fusion",
     "rerank_fused_topk",
     "chunk_bm25_retrieval",
     "chunk_hybrid_retrieval",
-    "bpe_merge_training",
-    "bpe_encode",
-    "pack_bpe_sequences",
-    "bpe_subword_vocab",
-    "triangle_count",
-    "copurchase_pagerank",
-    # --- (c) four age seats: oldest unchanged rows (last checked r12) ---
-    "cube_lineitem_flags",
-    "pivot_status_by_priority",
-    "having_filter",
-    "props_json_extract",
+    # --- (b) oldest external check first (all last checked in r12) ---
+    "kmv_distinct_sketch",
+    "approx_value_percentiles",
+    "grouping_sets_region_segment",
+    "bucketed_join_colocated",
+    "catalog_recursive_paths",
+    "ab_test_conversion",
+    "session_window_builtin",
+    "variant_props_shred",
+    "credential_rotation_schedule",
+    "zorder_range_scan",
+    "partition_evolution_regrain",
+    "doc_quality_score",
+    "doc_fingerprint",
+    "train_split_stratified",
+    "contamination_ngram_overlap",
+    "vocab_top_tokens",
+    "doc_repetition_ratio",
+    "tfidf_top_terms",
+    "point_lookup",
+    "filtered_scan",
+    "topk_orders_by_revenue",
+    "exists_returned_lineitems",
+    "correlated_min_cost_supplier",
+    "disjunctive_filter_scan",
+    "csv_source_roundtrip",
+    "dq_audit_orders",
+    "global_rank_two_phase",
+    "streaming_tumbling_counts",
+    "streaming_stateful_sessions",
+    "safe_numeric_cast",
+    "system_column_enrichment",
+    "latest_order_per_customer",
 ]

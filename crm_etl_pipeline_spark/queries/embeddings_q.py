@@ -37,8 +37,7 @@ from crm_etl_pipeline_spark.registry import query
 
 
 def _emb(spark: SparkSession, sf_dir: str):
-    """NULL-vector contract (round-7 sweep finding) extended to
-    non-finite components (round-9 nan_inf_embeddings finding): a row
+    """The corrupt-vector gate every Spark load goes through: a row
     whose embedding is NULL, or carries a NaN/Inf component, cannot
     participate in any vector operator — it has no usable direction,
     norm, or cell, and one such row otherwise kills the WHOLE stage
@@ -55,23 +54,21 @@ def _emb(spark: SparkSession, sf_dir: str):
     agreement — the quarantine philosophy: one corrupt row is one
     excluded row, never the task.
 
-    NULL *components* are explicitly corrupt too (round-10 advisor
-    find): without the isNull() disjunct, Spark's three-valued
-    ~exists(...) drops a [1.0, NULL, 2.0] row (predicate over the NULL
-    element yields NULL -> exists NULL -> filter drops) while DuckDB's
-    NOT list_bool_or(...) ignores NULL lambda results and KEEPS it,
-    feeding NULL into the fixed-point pipeline — a latent cross-engine
-    split. Both sides now name x IS NULL a corruption outright.
+    NULL *components* are explicitly corrupt too: without the isNull()
+    disjunct, Spark's three-valued ~exists(...) drops a [1.0, NULL, 2.0]
+    row (predicate over the NULL element yields NULL -> exists NULL ->
+    filter drops) while DuckDB's NOT list_bool_or(...) ignores NULL
+    lambda results and KEEPS it, feeding NULL into the fixed-point
+    pipeline. Both sides name x IS NULL a corruption outright.
 
-    A RAGGED dimension is corrupt too (round-14 advisor find, closed
-    family-wide in round 15): a vector shorter or longer than _DIM has
-    no defined position in the 64-dim feature space, and the two
+    A RAGGED dimension is corrupt too: a vector shorter or longer than
+    _DIM has no defined position in the 64-dim feature space, and the two
     engines fail it ASYMMETRICALLY — Spark's zip_with pads the short
     side with NULL so the fixed-point fold null-propagates (whole dot
     becomes NULL), while _fixed_dot_sql's range(1, 65) correlated SUM
     skips the NULL terms and returns a partial sum; a LONG vector is
     silently truncated by the SQL twin but fully folded by zip_with.
-    Both sides now quarantine on exact length (size(embedding) = _DIM
+    Both sides quarantine on exact length (size(embedding) = _DIM
     / len(embedding) = 64 in every oracle scan) — one mis-shaped row
     is one excluded row, never a cross-engine split. The
     ragged_dim_embs sweep batch pins the agreement."""
@@ -89,26 +86,23 @@ def _emb(spark: SparkSession, sf_dir: str):
         .filter(F.size("embedding") == _DIM)
     )
 
-# --- identity-collision contract for TRAINING pipelines (round-10
-# id_collision_embs probe): vec_id is the vector identity; a collision
-# (same vec_id, different embedding — two ingest shards minting one
-# id) TIED the hash-rank seed orderings (ORDER BY md5(vec_id), vec_id)
-# in k-means and the PQ per-subspace codebooks, so the two engines
-# trained on different seed VECTORS and every assignment diverged.
-# Training loaders (kmeans / purity-via-kmeans / PQ) resolve ONE
-# deterministic winner per vec_id — the lexicographically smallest vd,
-# NULLS FIRST (array comparison agrees cross-engine, including -0.0
-# and prefix/length edges; non-finite components are already excluded
-# upstream by _emb). Byte-identical duplicates pick the same winner
-# the round-8 DISTINCT did, so clean/dup fixtures are hash-unchanged.
+# --- identity-collision contract for TRAINING pipelines: vec_id is
+# the vector identity, and a collision (same vec_id, different
+# embedding — two ingest shards minting one id) ties the hash-rank seed
+# orderings (ORDER BY md5(vec_id), vec_id) of k-means and the PQ
+# per-subspace codebooks, so the engines would train on different seed
+# vectors. Training loaders (kmeans / purity-via-kmeans / PQ) resolve
+# ONE deterministic winner per vec_id — the lexicographically smallest
+# vd, NULLS FIRST (array comparison agrees cross-engine, including
+# -0.0 and prefix/length edges; non-finite components are already
+# excluded upstream by _emb). Byte-identical duplicates collapse to
+# that same winner.
 # SERVING scans (brute top-k, standardize, quantize, near-dup, IVF)
 # stay winner-free BY DESIGN: they are per-row symmetric (the
 # id_collision_embs sweep batch certifies both groups), and a window
-# would wreck their scan-only 100 TB plans.
-# Interpolated VERBATIM into every training-loader oracle (the
-# _DOCS_ONE_SQL pattern) so the named contract and the live SQL cannot
-# drift apart; the rendered oracle text is byte-identical to the
-# registered round-10 form.
+# would wreck their scan-only plans.
+# Interpolated VERBATIM into every training-loader oracle so the named
+# contract and the live SQL cannot drift apart.
 _EMB_ONE_SQL = "SELECT vec_id, MIN(vd) AS vd FROM raw_emb GROUP BY vec_id"
 
 
@@ -122,6 +116,27 @@ def _one_per_vec(df: DataFrame) -> DataFrame:
     shuffled the full 64-dim payload frame (measured +25% on
     ann_pq_adc at sf0.1)."""
     return df.groupBy("vec_id").agg(F.min("vd").alias("vd"))
+
+
+def _train_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The training loader shared by k-means, SemDeDup and PQ: one
+    (vec_id, vd) row per identity (_one_per_vec), vd the embedding cast
+    to double. One row per vec_id means a duplicated ingest cannot
+    double a vector's M-step weight and a collided id cannot tie the
+    seed rank."""
+    return _one_per_vec(
+        _emb(spark, sf_dir).select(
+            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("vd")
+        )
+    )
+
+
+def _one(col: str) -> Column:
+    """A non-foldable join key that is 1 on every row: ``col`` is an
+    array that is never NULL here, so size + 1 >= 1. Attaching a small
+    broadcast frame on this key keeps the attach a BroadcastHashJoin
+    instead of a nested loop."""
+    return F.least(F.size(col) + F.lit(1), F.lit(1)).cast("int")
 
 
 _SCALE = 1e12  # fixed-point quantum for float reductions
@@ -148,6 +163,24 @@ def _fixed_dot(a: Column, b: Column) -> Column:
 
 def _fixed_norm2(a: Column) -> Column:
     return _fixed_dot(a, a)
+
+
+def _dist_q(v: Column, cv: Column) -> Column:
+    """Σ_d floor((x_d − c_d)²·1e12) as BIGINT, ``v`` cast to double
+    first — both inputs are doubles produced by identical arithmetic in
+    both engines, each term is one identical IEEE sequence, and the
+    integer sum is order-free."""
+    return F.aggregate(
+        F.zip_with(
+            v,
+            cv,
+            lambda x, y: F.floor(
+                (x.cast("double") - y) * (x.cast("double") - y) * F.lit(_SCALE)
+            ).cast("bigint"),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, t: acc + t,
+    )
 
 
 # DuckDB twin: correlated sum over range(1, dim+1) with 1-based indexing
@@ -197,20 +230,78 @@ _COS_SQL = (
 )
 
 
-def _cos_col() -> Column:
+def _cos_col(dot: str = "dotq", n2a: str = "qn2", n2b: str = "cn2") -> Column:
+    """Spark twin of _COS_SQL: cosine from the fixed-point dot and the
+    two squared norms, 0.0 when either norm is zero."""
     return F.coalesce(
         F.try_divide(
-            F.col("dotq").cast("double"),
-            F.sqrt(F.col("qn2").cast("double")) * F.sqrt(F.col("cn2").cast("double")),
+            F.col(dot).cast("double"),
+            F.sqrt(F.col(n2a).cast("double")) * F.sqrt(F.col(n2b).cast("double")),
         ),
         F.lit(0.0),
     )
 
 
-# extracted to a constant in round 12 so ann_recall_selfcheck can embed
-# the SAME exact-baseline text as a subquery; rendered text md5-pinned
-# byte-identical to the r10-certified inline form
-# (b1ba23b34322e4465b3d87d7a5166542)
+def _topk(q: DataFrame, c: DataFrame, k: int, key: str | None = None) -> DataFrame:
+    """Exact per-probe top-``k``, the one ranking kernel of every ANN
+    query here: the probe frame ``q`` (query_id, qe, ...) joins the
+    candidate frame ``c`` (cand_id, ce, ...), a probe never meets
+    itself, and with ``key`` the join is the equi-join
+    ``q[key] = c["c_" + key]`` (sign bucket or IVF cell). Rows keep
+    every column of both sides plus ``dotq`` (the exact fixed-point
+    dot) and ``rank`` — row_number over (dotq DESC, cand_id), a total
+    order, so the kept set is bit-deterministic. The per-probe window
+    compiles to a WindowGroupLimit prune before the rank filter.
+
+    The broadcast decision travels with ``q``: a caller whose probe
+    set is a constant-size scan slice passes ``F.broadcast(q)`` (the
+    corpus then streams through one scan — keyless probes as the
+    intended BroadcastNestedLoopJoin, keyed ones as a
+    BroadcastHashJoin). The in-memory IVF paths pass their probes
+    unhinted: those come out of the assignment window, and the planner
+    picks a sort-merge join there."""
+    on = F.col("cand_id") != F.col("query_id")
+    if key is not None:
+        on = (F.col(key) == F.col("c_" + key)) & on
+    w = Window.partitionBy("query_id").orderBy(F.col("dotq").desc(), F.col("cand_id"))
+    return (
+        q.join(c, on)
+        .withColumn("dotq", _fixed_dot(F.col("qe"), F.col("ce")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _sides(e: DataFrame, key: str | None = None) -> tuple[DataFrame, DataFrame]:
+    """Split a (vec_id, embedding, n2[, key]) frame into _topk's probe
+    side (the vec_id < _N_QUERIES batch) and its candidate side."""
+    qk = [key] if key else []
+    ck = [F.col(key).alias("c_" + key)] if key else []
+    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        *qk,
+        F.col("n2").alias("qn2"),
+    )
+    c = e.select(
+        F.col("vec_id").alias("cand_id"),
+        F.col("embedding").alias("ce"),
+        *ck,
+        F.col("n2").alias("cn2"),
+    )
+    return q, c
+
+
+def _cos_topk(q: DataFrame, c: DataFrame, k: int, key: str | None = None) -> DataFrame:
+    """(query_id, cand_id[, key], rank, cosine): _topk with the cosine
+    of each kept pair; both sides carry their squared norms."""
+    return _topk(q, c, k, key).select(
+        "query_id", "cand_id", *([key] if key else []), "rank", _cos_col().alias("cosine")
+    )
+
+
+# a constant so ann_recall_selfcheck can embed the SAME exact-baseline
+# text as a subquery
 _BRUTE_TOPK_ORACLE = f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding AS qe,
@@ -248,30 +339,11 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: O(N·d·k) flops, one scan, no all-pairs shuffle — the right
     brute-force shape. For large N use ann_lsh_bucketed below.
     """
-    emb = _emb(spark, sf_dir)
-    q = (
-        emb.filter(F.col("vec_id") < _N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            _fixed_norm2(F.col("embedding")).alias("qn2"),
-        )
+    e = _emb(spark, sf_dir).select(
+        "vec_id", "embedding", _fixed_norm2(F.col("embedding")).alias("n2")
     )
-    c = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("ce"),
-        _fixed_norm2(F.col("embedding")).alias("cn2"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
-        .withColumn("dotq", _fixed_dot(F.col("qe"), F.col("ce")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dotq").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "cand_id", "rank", _cos_col().alias("cosine"))
-    )
+    q, c = _sides(e)
+    return _cos_topk(F.broadcast(q), c, 10)
 
 
 # 8-bit sign signature over the first dims: bucket = Σ 2^b · [emb[b] ≥ 0]
@@ -328,28 +400,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sign_bucket(F.col("embedding")).alias("bucket"),
         _fixed_norm2(F.col("embedding")).alias("n2"),
     )
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        "bucket",
-        F.col("n2").alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("ce"),
-        F.col("bucket").alias("c_bucket"),
-        F.col("n2").alias("cn2"),
-    )
-    scored = (
-        q.join(c, (F.col("bucket") == F.col("c_bucket")) & (F.col("cand_id") != F.col("query_id")))
-        .withColumn("dotq", _fixed_dot(F.col("qe"), F.col("ce")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dotq").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "bucket", "rank", _cos_col().alias("cosine"))
-    )
+    return _cos_topk(*_sides(e, "bucket"), 3, "bucket")
 
 
 @query(
@@ -452,8 +503,8 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("vd")
         )
-        # identity dedup (round-8 dup sweep contract): duplicated rows
-        # inflate bucket membership and emit duplicate candidate pairs
+        # identity dedup: duplicated rows would inflate bucket
+        # membership and emit duplicate candidate pairs
         .dropDuplicates()
     )
     pert = base.filter(F.col("vec_id") % 6 == 0).select(
@@ -490,21 +541,13 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     p = buckets.select("bucket", F.explode(pair_array).alias("p"))
-    # zero-norm guard: cosine = 0.0, same contract as _cos_col()
-    cosine = F.coalesce(
-        F.try_divide(
-            F.col("dotq").cast("double"),
-            F.sqrt(F.col("p.n2a").cast("double")) * F.sqrt(F.col("p.n2b").cast("double")),
-        ),
-        F.lit(0.0),
-    )
     return (
         p.withColumn("dotq", _fixed_dot(F.col("p.va"), F.col("p.vb")))
         .select(
             F.col("p.vec_a").alias("vec_a"),
             F.col("p.vec_b").alias("vec_b"),
             "bucket",
-            cosine.alias("cosine"),
+            _cos_col("dotq", "p.n2a", "p.n2b").alias("cosine"),
         )
         .filter(F.col("cosine") >= _NEAR_THRESHOLD)
     )
@@ -524,20 +567,17 @@ _CENTROID_SQL = f"""
 
 # squared distance of vector v to centroid rows (joined on dim), exact µs-grade
 # fixed point over the per-dim residuals.
-# ROW grain spelled in the GROUP BY (round 14): the inner aggregate
+# ROW grain spelled in the GROUP BY: the inner aggregate
 # sums residuals per (vec_id, PAYLOAD, label), so a COLLIDED vec_id
 # (two ingest shards minting one id with different vectors — the
 # id_collision_embs class) ranks each payload's own distance and the
 # identity's home cell is the cell of its globally closest payload —
-# exactly Spark's per-row argmin window in _ivf_assign. The previous
-# GROUP BY (vec_id, label) summed BOTH payloads' residuals before the
-# argmin, a latent cross-engine split that never surfaced in the
-# certified family's outputs (collided vectors don't reach any probe's
-# top-3 on the fixture) until ann_ivf_incremental_index's boot-trained
-# centroids exposed it (9 of 16 collided ids flipped cells). On
-# collision-free data the extra key is a no-op: (vec_id, embedding) is
-# then functionally (vec_id), so d2q and ranks are value-identical and
-# byte-identical duplicates collapse to the same single group.
+# exactly Spark's per-row argmin window in _ivf_assign. A (vec_id,
+# label) grain would sum BOTH payloads' residuals before the argmin and
+# split from Spark on collided ids. On collision-free data the extra
+# key is a no-op: (vec_id, embedding) is then functionally (vec_id), so
+# d2q and ranks are value-identical and byte-identical duplicates
+# collapse to the same single group.
 _ASSIGN_SQL = f"""
     SELECT vec_id, label AS cell,
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2q, label) AS rnk
@@ -562,9 +602,9 @@ def _ivf_cells(spark: SparkSession, sf_dir: str, max_rank: int):
 
 def _ivf_codebook(emb: DataFrame) -> DataFrame:
     """(cen_label, cvec): per-label exact-integer-mean centroids over a
-    corrupt-filtered embedding frame (extracted from _ivf_cells in
-    round 14 so the incremental-index harness can train the codebook on
-    the BOOTSTRAP corpus only and assign later arrivals against it)."""
+    corrupt-filtered embedding frame. Separate from the assignment so
+    the incremental-index harness can train the codebook on the
+    bootstrap corpus only and assign later arrivals against it."""
     return (
         emb.select("label", F.posexplode("embedding").alias("pdim", "x"))
         .groupBy("label", (F.col("pdim") + 1).alias("dim"))
@@ -587,43 +627,32 @@ def _ivf_codebook(emb: DataFrame) -> DataFrame:
 
 def _ivf_cell_inline(frame: DataFrame, codebook: DataFrame) -> DataFrame:
     """``frame`` + a ``cell`` column — nearest-codebook assignment as a
-    pure PROJECTION (round-15, guide §2.4): the codebook collapses to a
-    one-row array attached via the non-foldable always-1 equi-key, and
-    the argmin is ``array_min`` over (d2q, cen_label) structs — struct
-    ordering IS the (d2q, cen_label) tiebreak ``_ivf_assign``'s window
-    encodes, so the assigned cell is bit-identical. Unlike
+    pure PROJECTION: the codebook collapses to a one-row array attached
+    via the always-1 equi-key, and the argmin is ``array_min`` over
+    (d2q, cen_label) structs — struct ordering IS the (d2q, cen_label)
+    tiebreak ``_ivf_assign``'s window encodes, and d2q is the same
+    ``_dist_q``, so the assigned cell is bit-identical. Unlike
     ``_ivf_assign`` + join-back this needs NO argmin-window shuffle and
     NO re-join of the payload — the shape a per-micro-batch ingest
     wants (O(batch·k) with zero exchanges; A/B ~0.4 s off the 4-batch
-    incremental-IVF drain at sf0.1). The d2 quantization is the same
-    zip_with/aggregate/floor expression as ``_ivf_assign``.
+    incremental-IVF drain at sf0.1).
 
-    PRECONDITION (round-15 ADVICE, stated so the contract is local):
-    ``frame`` must be row-grain with non-NULL ``vec_id`` — the
-    ``_emb`` corruption gate upstream guarantees both today. The old
-    ``_ivf_assign`` + inner join-back silently DROPPED NULL-vec_id
-    rows and collapsed colliding vec_ids to one shared rnk=1 cell;
-    this inline form keeps every input row and assigns each row its
-    own argmin cell, so feeding it NULL/collided identities would
-    diverge from the window form."""
+    PRECONDITION: ``frame`` must be row-grain with non-NULL ``vec_id``
+    — the ``_emb`` corruption gate upstream guarantees both. The
+    ``_ivf_assign`` + inner join-back form drops NULL-vec_id rows and
+    collapses colliding vec_ids to one shared rnk=1 cell; this inline
+    form keeps every input row and assigns each row its own argmin
+    cell, so feeding it NULL/collided identities would diverge from the
+    window form."""
     cb1 = codebook.agg(F.collect_list(F.struct("cen_label", "cvec")).alias("cb")).select(
         "cb", F.lit(1).cast("int").alias("_k")
     )
-    key = F.least(F.coalesce(F.abs(F.col("vec_id")), F.lit(0)) + 1, F.lit(1)).cast("int")
     cand = lambda c: F.struct(  # noqa: E731 — local expression builder
-        F.aggregate(
-            F.zip_with(
-                "embedding",
-                c["cvec"],
-                lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, p: acc + F.floor(p * F.lit(_SCALE)).cast("bigint"),
-        ).alias("d2q"),
+        _dist_q(F.col("embedding"), c["cvec"]).alias("d2q"),
         c["cen_label"].alias("cen_label"),
     )
     return (
-        frame.withColumn("_k", key)
+        frame.withColumn("_k", _one("embedding"))
         .join(F.broadcast(cb1), "_k")
         .withColumn("cell", F.array_min(F.transform("cb", cand))["cen_label"])
         .drop("cb")
@@ -634,29 +663,17 @@ def _ivf_assign(emb: DataFrame, centroids: DataFrame, max_rank: int) -> DataFram
     """(vec_id, cell, rnk): rank the ``max_rank`` nearest codebook
     centroids per vector — broadcast codebook, one argmin window, zero
     shuffles of the vectors themselves."""
-    d2 = F.aggregate(
-        F.zip_with(
-            "embedding", "cvec", lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, p: acc + F.floor(p * F.lit(_SCALE)).cast("bigint"),
-    )
     w_assign = Window.partitionBy("vec_id").orderBy("d2q", "cen_label")
     return (
         emb.join(F.broadcast(centroids))
-        .select("vec_id", "cen_label", d2.alias("d2q"))
+        .select("vec_id", "cen_label", _dist_q(F.col("embedding"), F.col("cvec")).alias("d2q"))
         .withColumn("rnk", F.row_number().over(w_assign))
         .filter(F.col("rnk") <= max_rank)
         .select("vec_id", F.col("cen_label").alias("cell"), "rnk")
     )
 
 
-# extracted to a constant in round 12 (ann_recall_selfcheck embeds it);
-# the round-12 extraction rendered byte-identical to the r10-certified
-# inline form (c8c607f89d720c9365efe8a5b9d5f677); round 14 then changed
-# the embedded _ASSIGN_SQL to the row-grain collision contract (see its
-# comment), so the whole IVF family's oracle text moved together —
-# probe/nprobe2/persisted/recall all re-swept + window-slotted.
+# a constant so ann_recall_selfcheck can embed it as a subquery
 _IVF_NPROBE2_ORACLE = f"""
     WITH centroids AS ({_CENTROID_SQL}),
     assign AS ({_ASSIGN_SQL}),
@@ -714,21 +731,7 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
             _fixed_norm2(F.col("embedding")).alias("qn2"),
         )
     )
-    c = e.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("ce"),
-        F.col("cell").alias("c_cell"),
-        F.col("n2").alias("cn2"),
-    )
-    scored = probes.join(
-        c, (F.col("cell") == F.col("c_cell")) & (F.col("cand_id") != F.col("query_id"))
-    ).withColumn("dotq", _fixed_dot(F.col("qe"), F.col("ce")))
-    w = Window.partitionBy("query_id").orderBy(F.col("dotq").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", F.col("c_cell").alias("cell"), "rank", _cos_col().alias("cosine"))
-    )
+    return _cos_topk(probes, _sides(e, "cell")[1], 3, "cell")
 
 
 # 1-probe IVF search result (shared by the in-memory and the
@@ -785,27 +788,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = emb.join(cells, "vec_id").select(
         "vec_id", "cell", "embedding", _fixed_norm2(F.col("embedding")).alias("n2")
     )
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        "cell",
-        F.col("n2").alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("ce"),
-        F.col("cell").alias("c_cell"),
-        F.col("n2").alias("cn2"),
-    )
-    scored = q.join(
-        c, (F.col("cell") == F.col("c_cell")) & (F.col("cand_id") != F.col("query_id"))
-    ).withColumn("dotq", _fixed_dot(F.col("qe"), F.col("ce")))
-    w = Window.partitionBy("query_id").orderBy(F.col("dotq").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cell", "rank", _cos_col().alias("cosine"))
-    )
+    return _cos_topk(*_sides(e, "cell"), 3, "cell")
 
 
 @query(
@@ -841,36 +824,16 @@ def ann_ivf_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", _fixed_norm2(F.col("embedding")).alias("n2"), "cell"
     )
     e.write.partitionBy("cell").parquet(base)
-    store = spark.read.parquet(base)
-    q = store.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        "cell",
-        F.col("n2").alias("qn2"),
-    )
-    c = store.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("ce"),
-        F.col("cell").alias("c_cell"),
-        F.col("n2").alias("cn2"),
-    )
-    scored = F.broadcast(q).join(
-        c, (F.col("cell") == F.col("c_cell")) & (F.col("cand_id") != F.col("query_id"))
-    ).withColumn("dotq", _fixed_dot(F.col("qe"), F.col("ce")))
-    w = Window.partitionBy("query_id").orderBy(F.col("dotq").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cell", "rank", _cos_col().alias("cosine"))
-    )
+    q, c = _sides(spark.read.parquet(base), "cell")
+    return _cos_topk(F.broadcast(q), c, 3, "cell")
 
 
-# Incremental IVF maintenance (round 14): the probe result over the
+# Incremental IVF maintenance: the probe result over the
 # streaming-merged store must equal a one-shot batch assignment of the
 # FULL corpus against the BOOTSTRAP-trained codebook — the same CTE
 # chain as _IVF_PROBE_ORACLE with only the centroid CTE restricted to
-# the bootstrap residue (assign/_ASSIGN_SQL and the probe chain are the
-# certified text verbatim).
+# the bootstrap residue (assign/_ASSIGN_SQL and the probe chain are
+# verbatim).
 _IVF_INCREMENTAL_ORACLE = f"""
     WITH centroids AS (
       SELECT label, i AS dim,
@@ -915,8 +878,8 @@ _IVF_INCREMENTAL_ORACLE = f"""
 )
 def ann_ivf_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance — the serving-index half of
-    the ingest story (round-13 verdict growth slot #6, the
-    streaming_zorder_ingest pattern applied to ann_ivf_persisted_index):
+    the ingest story (the streaming_zorder_ingest pattern applied to
+    ann_ivf_persisted_index):
     a bootstrap corpus trains the codebook and lands cell-partitioned;
     the remaining vectors then ARRIVE through a real file-source
     readStream in 4 micro-batches, each assigned to its nearest FROZEN
@@ -949,28 +912,8 @@ def ann_ivf_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "query_id bigint, cand_id bigint, cell int, rank int, cosine double"
         )
-    s = spark.read.parquet(store)
-    q = s.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        "cell",
-        F.col("n2").alias("qn2"),
-    )
-    c = s.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("ce"),
-        F.col("cell").alias("c_cell"),
-        F.col("n2").alias("cn2"),
-    )
-    scored = F.broadcast(q).join(
-        c, (F.col("cell") == F.col("c_cell")) & (F.col("cand_id") != F.col("query_id"))
-    ).withColumn("dotq", _fixed_dot(F.col("qe"), F.col("ce")))
-    w = Window.partitionBy("query_id").orderBy(F.col("dotq").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", F.col("c_cell").alias("cell"), "rank", _cos_col().alias("cosine"))
-    )
+    q, c = _sides(spark.read.parquet(store), "cell")
+    return _cos_topk(F.broadcast(q), c, 3, "cell")
 
 
 # ---------------------------------------------------------------------------
@@ -1140,29 +1083,12 @@ _KMEANS_K = 8
 _KMEANS_ITERS = 2  # fixed iteration budget; see docstring
 
 
-def _dist_q(vd: Column, cv: Column) -> Column:
-    """Σ_d floor((x_d − c_d)²·1e12) as BIGINT — both inputs are doubles
-    produced by identical arithmetic in both engines, each term is one
-    identical IEEE sequence, and the integer sum is order-free."""
-    return F.aggregate(
-        F.zip_with(
-            vd,
-            cv,
-            lambda x, y: F.floor((x - y) * (x - y) * F.lit(_SCALE)).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, t: acc + t,
-    )
-
-
 def _kmeans_core_sql(src: str) -> str:
     """The 2-iteration Lloyd CTE chain (seeds → d1 → a1 → c1 → d2) over
-    a deduped (vec_id, vd) source CTE named ``src``. Parameterized in
-    round 14 so semantic_dedup can train the SAME oracle-able k-means
-    on its clone-augmented corpus; ``_kmeans_core_sql("emb")`` renders
-    byte-identical to the r10-certified inline form (md5-pinned in
-    tests/test_llmops.py), so embedding_kmeans's registered oracle text
-    is unchanged."""
+    a deduped (vec_id, vd) source CTE named ``src``, shared by
+    embedding_kmeans and semantic_dedup's clone-augmented corpus. The
+    rendered embedding_kmeans oracle is md5-pinned in
+    tests/test_llmops.py."""
     return f"""seeds AS (
       -- NULLS FIRST spelled (round-13 null_vec_ids find): a NULL
       -- vec_id's md5 is NULL — Spark's ASC default is NULLS FIRST,
@@ -1239,92 +1165,104 @@ def embedding_kmeans(
     loop), assignment is one partitioned window, and the M-step is the
     (cluster, dim)-grain exact aggregate — k·64 keys. Empty clusters
     drop out identically in both engines."""
-    emb = _one_per_vec(
-        _emb(spark, sf_dir).select(
-            "vec_id",
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vd"),
-        )
-        # one row per vec_id: duplicated ingest must not double this
-        # vector's M-step weight (round-8 dup contract), and a COLLIDED
-        # id must not tie the seed rank (round-10 identity-collision
-        # contract — see _one_per_vec)
+    return _kmeans_assign(_train_vecs(spark, sf_dir), iters)
+
+
+def _lloyd_step(
+    pts: DataFrame, cents: DataFrame, keys: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One Lloyd iteration, the Spark twin of the oracles' d → a → c
+    CTE steps, run independently per value of the grouping ``keys``
+    (none for k-means, ``("sub",)`` for PQ's per-subspace codebooks).
+    ``pts`` is (vec_id, *keys, vd), ``cents`` is (*keys, cluster, cv).
+
+    Returns (scored, assign, means):
+    - scored: every pts row against every centroid of its group, + dq
+      (the _dist_q fixed-point squared distance); the centroids are
+      tiny and broadcast — on ``keys``, or without keys on the always-1
+      key (_one) so the attach stays a BroadcastHashJoin;
+    - assign: (vec_id, *keys, cluster, dq), the argmin per (vec_id,
+      *keys) with ties to the lower cluster — one partitioned window;
+    - means: (*keys, cluster, cv), the M-step — exact integer means
+      (1e6 quantum) at (*keys, cluster, dim) grain collected back into
+      dim-ordered arrays. Empty clusters drop out, as in the oracles."""
+    if keys:
+        on, pts_k, cents_k = list(keys), pts, cents
+    else:
+        on = ["_k"]
+        pts_k = pts.withColumn("_k", _one("vd"))
+        cents_k = cents.withColumn("_k", _one("cv"))
+    scored = pts_k.join(F.broadcast(cents_k), on).withColumn(
+        "dq", _dist_q(F.col("vd"), F.col("cv"))
     )
-    return _kmeans_assign(emb, iters)
-
-
-def _kmeans_assign(
-    emb: DataFrame, iters: int = _KMEANS_ITERS, ckpt: bool = False
-) -> DataFrame:
-    """Spark twin of _kmeans_core_sql over a deduped (vec_id, vd) frame
-    (extracted from embedding_kmeans in round 14 so semantic_dedup can
-    train on its clone-augmented corpus; the loop body is the
-    r10-certified code verbatim). Returns (vec_id, cluster, dq).
-
-    ``ckpt`` (round 15, guide §1.2): reliable_checkpoint each
-    iteration's 8-row centroid table and the final assignment — cuts
-    the unrolled chain's repeated subtrees for callers that consume the
-    assignment more than once on a bigger corpus (semantic_dedup: two
-    consumers of assign over the clone-augmented corpus, interleaved
-    A/B 7.0 -> 5.1 s at sf0.1). Measured NEUTRAL for the single-
-    consumer embedding_kmeans/purity path, which keeps the default.
-    Checkpointing is execution-transparent — assignments unchanged."""
-    from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
-
-    probe = emb.withColumn(
-        "_k", F.least(F.col("vec_id") + 1, F.lit(1)).cast("int")
-    )  # vec_id >= 0 → key is provably 1 but non-foldable
-
-    # NULLS FIRST spelled on both sides (round-13 null_vec_ids find)
-    seed_w = Window.orderBy(
-        F.md5(F.col("vec_id").cast("string")).asc_nulls_first(),
-        F.col("vec_id").asc_nulls_first(),
+    w = Window.partitionBy("vec_id", *keys).orderBy("dq", "cluster")
+    assign = (
+        scored.withColumn("arn", F.row_number().over(w))
+        .filter(F.col("arn") == 1)
+        .select("vec_id", *keys, "cluster", "dq")
     )
-    # the seed window is global but bounded: it runs on the hash-TOP-k
-    # only after a WindowGroupLimit prune (row_number + filter k), the
-    # same shape as every top-k query here
-    centroids = (
-        emb.withColumn("rn", F.row_number().over(seed_w))
-        .filter(F.col("rn") <= _KMEANS_K)
-        .select((F.col("rn") - 1).alias("cluster"), F.col("vd").alias("cv"))
-    )
-
-    for _ in range(iters):
-        if ckpt:
-            centroids = reliable_checkpoint(centroids)
-        cent_b = centroids.withColumn(
-            "_k", F.least(F.col("cluster") + 1, F.lit(1)).cast("int")
+    means = (
+        pts.join(assign.select("vec_id", *keys, "cluster"), ["vec_id", *keys])
+        .select(*keys, "cluster", F.posexplode(F.col("vd")).alias("dim0", "x"))
+        .groupBy(*keys, "cluster", "dim0")
+        .agg(
+            (
+                F.sum(F.floor(F.col("x") * F.lit(float(_MOMENT_SCALE))).cast("bigint"))
+                .cast("double")
+                / F.lit(float(_MOMENT_SCALE))
+                / F.count(F.lit(1))
+            ).alias("mean_d")
         )
-        scored = probe.join(F.broadcast(cent_b), "_k").withColumn(
-            "dq", _dist_q(F.col("vd"), F.col("cv"))
-        )
-        aw = Window.partitionBy("vec_id").orderBy("dq", "cluster")
-        assign = (
-            scored.withColumn("arn", F.row_number().over(aw))
-            .filter(F.col("arn") == 1)
-            .select("vec_id", "cluster", "dq")
-        )
-        # M-step: exact integer means at (cluster, dim) grain
-        exploded = emb.join(assign.select("vec_id", "cluster"), "vec_id").select(
-            "cluster", F.posexplode(F.col("vd")).alias("dim0", "x")
-        )
-        means = (
-            exploded.groupBy("cluster", "dim0")
-            .agg(
-                (
-                    F.sum(
-                        F.floor(F.col("x") * F.lit(float(_MOMENT_SCALE))).cast("bigint")
-                    ).cast("double")
-                    / F.lit(float(_MOMENT_SCALE))
-                    / F.count(F.lit(1))
-                ).alias("mean_d")
-            )
-        )
-        centroids = means.groupBy("cluster").agg(
+        .groupBy(*keys, "cluster")
+        .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("dim0", "mean_d"))),
                 lambda s: s["mean_d"],
             ).alias("cv")
         )
+    )
+    return scored, assign, means
+
+
+def _seeds(pts: DataFrame, k: int, keys: tuple[str, ...] = ()) -> DataFrame:
+    """(*keys, cluster, cv): the first ``k`` vectors per group under the
+    deterministic md5 hash-rank. NULLS FIRST is spelled because a NULL
+    vec_id's md5 is NULL and the engines' ASC defaults disagree on NULL
+    placement. The window runs after a WindowGroupLimit prune to the
+    top ``k`` per group."""
+    w = Window.partitionBy(*keys).orderBy(
+        F.md5(F.col("vec_id").cast("string")).asc_nulls_first(),
+        F.col("vec_id").asc_nulls_first(),
+    )
+    return (
+        pts.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(*keys, (F.col("rn") - 1).alias("cluster"), F.col("vd").alias("cv"))
+    )
+
+
+def _kmeans_assign(
+    emb: DataFrame, iters: int = _KMEANS_ITERS, ckpt: bool = False
+) -> DataFrame:
+    """Spark twin of _kmeans_core_sql over a deduped (vec_id, vd) frame:
+    ``iters`` Lloyd steps from the hash-rank seeds. Returns (vec_id,
+    cluster, dq).
+
+    ``ckpt`` reliable-checkpoints each iteration's 8-row centroid table
+    and the final assignment, cutting the unrolled chain's repeated
+    subtrees. It pays for callers that consume the assignment more than
+    once on a bigger corpus and costs the single-consumer path, which
+    keeps the default (sf0.1, 4-core host, median of 4–5 warm runs:
+    semantic_dedup 7.5 s with it vs 8.0–8.3 s without;
+    kmeans_cluster_purity 2.19 s without vs 2.36 s with). Checkpointing is execution-transparent —
+    assignments are unchanged."""
+    from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
+
+    centroids = _seeds(emb, _KMEANS_K)
+    for _ in range(iters):
+        if ckpt:
+            centroids = reliable_checkpoint(centroids)
+        _, assign, centroids = _lloyd_step(emb, centroids)
     return reliable_checkpoint(assign) if ckpt else assign
 
 
@@ -1386,7 +1324,7 @@ def kmeans_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- SemDeDup: semantic near-dedup over k-means cells (round 14) ----
+# --- SemDeDup: semantic near-dedup over k-means cells ---------------
 # Keep/drop threshold: the fabricated perturbed clone reads cosine
 # ≈ 0.999 vs ≤ 0.6 for random fixture pairs, so 0.9 separates cleanly.
 # The perturbation is 10× smaller than embedding_near_dup's (+0.05 vs
@@ -1475,14 +1413,14 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept-only sweep, matching the paper's pairwise-matrix form.
 
     Composed on the SAME oracle-able k-means as embedding_kmeans
-    (_kmeans_assign / _kmeans_core_sql, clone-augmented corpus) — the
-    round-13 verdict's growth slot: exact fixed-point cosine, cell-
-    bucketed pairs, never all-pairs. Perturbed clones are fabricated in
-    the embedding_near_dup shape (+0.05 in one dim — small enough that
-    the clone shares its original's learned cell) so the drop path
-    genuinely fires on the clean fixture (clone id = original + 100000
-    → the original is the earlier member whenever k-means lands the
-    pair in one cell — asserted in tests, not assumed).
+    (_kmeans_assign / _kmeans_core_sql, clone-augmented corpus): exact
+    fixed-point cosine, cell-bucketed pairs, never all-pairs. Perturbed
+    clones are fabricated in the embedding_near_dup shape (+0.05 in one
+    dim — small enough that the clone shares its original's learned
+    cell) so the drop path genuinely fires on the clean fixture (clone
+    id = original + 100000 → the original is the earlier member
+    whenever k-means lands the pair in one cell — asserted in tests,
+    not assumed).
 
     Identity contracts: one row per vec_id (_one_per_vec winner), NULL
     identities excluded symmetrically up front (a keep/drop verdict is
@@ -1497,14 +1435,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay constant-sized, so total pair work is O(N · cell_size), one
     shuffle, no skew (cell ids are learned, near-balanced by
     construction of the objective)."""
-    base = _one_per_vec(
-        _emb(spark, sf_dir)
-        .filter(F.col("vec_id").isNotNull())
-        .select(
-            "vec_id",
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vd"),
-        )
-    )
+    base = _train_vecs(spark, sf_dir).filter(F.col("vec_id").isNotNull())
     pert = base.filter(F.col("vec_id") % 6 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"),
         F.concat(
@@ -1514,18 +1445,16 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("vd"),
     )
     corpus = base.unionAll(pert)
-    # ckpt=True (round 15): assign is consumed TWICE below (membership
-    # build + final keep-join) over the clone-augmented corpus —
-    # checkpointing the iteration state measured 7.0 -> 5.1 s at sf0.1
-    # (see _kmeans_assign's docstring); assignments are unchanged
+    # ckpt=True: assign is consumed TWICE below (membership build +
+    # final keep-join) over the clone-augmented corpus (see
+    # _kmeans_assign's docstring); assignments are unchanged
     assigned = _kmeans_assign(corpus, ckpt=True).select(
         "vec_id", F.col("cluster").alias("cell")
     )
     m = corpus.join(assigned, "vec_id").select(
         "cell", "vec_id", "vd", _fixed_norm2(F.col("vd")).alias("n2")
     )
-    # NO pair prefilter can land here (round-16 closure of the norm-
-    # prefilter candidate, proof): (1) cosine is scale-invariant —
+    # NO pair prefilter can land here: (1) cosine is scale-invariant —
     # a=(1,0), b=(1000,0) has cosine 1.0 at norm ratio 1000 — so no
     # norm-ratio bound on cosine exists at any threshold; (2) even a
     # sound threshold prune would corrupt best_earlier_sim, which is a
@@ -1551,17 +1480,12 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cap=_SEM_CELL_CAP,
     )
     p = cells.select(F.explode(pair_array).alias("p"))
-    cosine = F.coalesce(
-        F.try_divide(
-            F.col("dotq").cast("double"),
-            F.sqrt(F.col("p.n2a").cast("double"))
-            * F.sqrt(F.col("p.n2b").cast("double")),
-        ),
-        F.lit(0.0),
-    )
     best = (
         p.withColumn("dotq", _fixed_dot(F.col("p.va"), F.col("p.vb")))
-        .select(F.col("p.vec_id").alias("vec_id"), cosine.alias("cosine"))
+        .select(
+            F.col("p.vec_id").alias("vec_id"),
+            _cos_col("dotq", "p.n2a", "p.n2b").alias("cosine"),
+        )
         .groupBy("vec_id")
         .agg(F.max("cosine").alias("best_earlier_sim"))
     )
@@ -1635,13 +1559,8 @@ def knn_label_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ce"),
         F.col("label").alias("clabel"),
     )
-    scored = c.join(F.broadcast(q), F.col("cand_id") != F.col("query_id")).withColumn(
-        "dotq", _fixed_dot(F.col("qe"), F.col("ce"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dotq").desc(), F.col("cand_id"))
     votes = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _NOISE_K)
+        _topk(F.broadcast(q), c, _NOISE_K)
         .groupBy("query_id", F.col("qlabel").alias("label"))
         .agg(
             F.sum(F.when(F.col("clabel") != F.col("qlabel"), 1).otherwise(0)).alias(
@@ -1778,73 +1697,22 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     then cand_id. Recall floor vs the exact scan is pinned in
     tests/test_llmops.py.
     """
-    emb = _one_per_vec(
-        _emb(spark, sf_dir).select(
-            "vec_id",
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vd"),
-        )
-        # one row per vec_id (round-8 dup + round-10 identity-collision
-        # contracts) — see embedding_kmeans / _one_per_vec
-    )
+    emb = _train_vecs(spark, sf_dir)
+    # one subvector row per (vec_id, sub); the codeword index is the
+    # _lloyd_step "cluster"
     slices = F.array(*[F.slice("vd", s * _PQ_SD + 1, _PQ_SD) for s in range(_PQ_M)])
-    sv = emb.select("vec_id", F.posexplode(slices).alias("sub", "svec"))
-
-    # NULLS FIRST spelled on both sides (round-13 null_vec_ids find)
-    seed_w = Window.partitionBy("sub").orderBy(
-        F.md5(F.col("vec_id").cast("string")).asc_nulls_first(),
-        F.col("vec_id").asc_nulls_first(),
-    )
-    seeds = (
-        sv.withColumn("rn", F.row_number().over(seed_w))
-        .filter(F.col("rn") <= _PQ_K)
-        .select("sub", (F.col("rn") - 1).alias("code"), F.col("svec").alias("cv"))
-    )
-
-    aw = Window.partitionBy("vec_id", "sub").orderBy("dq", "code")
-    d1 = sv.join(F.broadcast(seeds), "sub").withColumn(
-        "dq", _dist_q(F.col("svec"), F.col("cv"))
-    )
-    a1 = (
-        d1.withColumn("arn", F.row_number().over(aw))
-        .filter(F.col("arn") == 1)
-        .select("vec_id", "sub", "code")
-    )
-    # M-step: exact integer means at (sub, code, dim) grain
-    exploded = sv.join(a1, ["vec_id", "sub"]).select(
-        "sub", "code", F.posexplode(F.col("svec")).alias("dim0", "x")
-    )
-    c1 = (
-        exploded.groupBy("sub", "code", "dim0")
-        .agg(
-            (
-                F.sum(
-                    F.floor(F.col("x") * F.lit(float(_MOMENT_SCALE))).cast("bigint")
-                ).cast("double")
-                / F.lit(float(_MOMENT_SCALE))
-                / F.count(F.lit(1))
-            ).alias("mean_d")
-        )
-        .groupBy("sub", "code")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim0", "mean_d"))),
-                lambda s: s["mean_d"],
-            ).alias("cv")
-        )
-    )
-    d2 = sv.join(F.broadcast(c1), "sub").withColumn(
-        "dq", _dist_q(F.col("svec"), F.col("cv"))
-    )
-    codes = (
-        d2.withColumn("arn", F.row_number().over(aw))
-        .filter(F.col("arn") == 1)
-        .select(F.col("vec_id").alias("cand_id"), "sub", "code")
-    )
+    sv = emb.select("vec_id", F.posexplode(slices).alias("sub", "vd"))
+    by_sub = ("sub",)
+    # one Lloyd round from the seeds, then the encode/LUT pass (d2)
+    # against the trained codebook
+    _, _, c1 = _lloyd_step(sv, _seeds(sv, _PQ_K, by_sub), by_sub)
+    d2, assign, _ = _lloyd_step(sv, c1, by_sub)
+    codes = assign.select(F.col("vec_id").alias("cand_id"), "sub", "cluster")
     lut = d2.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "sub", "code", "dq"
+        F.col("vec_id").alias("query_id"), "sub", "cluster", "dq"
     )
     adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
+        codes.join(F.broadcast(lut), ["sub", "cluster"])
         .filter(F.col("cand_id") != F.col("query_id"))
         .groupBy("query_id", "cand_id")
         .agg(F.sum("dq").alias("adc_dq"))
@@ -1909,12 +1777,11 @@ _RECALL_SELFCHECK_ORACLE = f"""
 )
 def ann_recall_selfcheck(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@3 of the served IVF paths against the exact brute-force
-    top-3, computed in-query (round-11 verdict growth slot): the
-    IVF/LSH/PQ family trades recall for candidate volume, and until now
-    that trade was asserted in docstrings and pytest only — this makes
-    the measurement itself a driver-checked dataflow, joining the REAL
-    served results (the same ``ann_ivf_probe`` / ``ann_ivf_nprobe2``
-    constructions, not a re-derivation) against the exact baseline.
+    top-3, computed in-query: the IVF/LSH/PQ family trades recall for
+    candidate volume, and this makes the measurement itself an
+    oracle-checked dataflow, joining the REAL served results (the same
+    ``ann_ivf_probe`` / ``ann_ivf_nprobe2`` constructions, not a
+    re-derivation) against the exact baseline.
 
     The oracle-pinned gate is ``nprobe_monotone`` = per-probe
     hits(nprobe=2) >= hits(nprobe=1), hardcoded TRUE in the oracle the
@@ -1936,12 +1803,11 @@ def ann_recall_selfcheck(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-uniform so absolute recall is structurally low (the
     ann_pq_adc test documents the same property).
 
-    Duplicate-pair contract (dup_embs sweep find, round 12): both
-    engines count hits as a SEMI-join — each exact-top-3 row at most
-    once — so a served side carrying duplicate (query, cand) pairs
-    (byte-identical duplicated vectors occupy two top-3 ranks) cannot
-    multiply hits past n_exact; the first oracle draft used a plain
-    inner join there and read recall 4/3 on the duplicated corpus.
+    Duplicate-pair contract: both engines count hits as a SEMI-join —
+    each exact-top-3 row at most once — so a served side carrying
+    duplicate (query, cand) pairs (byte-identical duplicated vectors
+    occupy two top-3 ranks) cannot multiply hits past n_exact; an inner
+    join there would read recall 4/3 on a duplicated corpus.
 
     Scale shape: the exact side is the brute-force O(N*d*k) single
     scan (only ever run to JUDGE the index — at 100 TB you sample the

@@ -1913,6 +1913,54 @@ _BM25_TERMS_SQL = "('" + "', '".join(_BM25_TERMS) + "')"
 # binary64 literals 2.5 (=k1+1), 1.5, 0.75 and 0.25 (=1-b)
 
 
+def _bm25_scored(stats_src: DataFrame, tf_src: DataFrame, keys: list[str]) -> DataFrame:
+    """The one fixed-point BM25 scorer, at the retrieval-unit grain
+    ``keys`` (document or chunk): ``stats_src`` is one ``dl`` (unit
+    length) row per unit of the stats population, ``tf_src`` is
+    (*keys, dl, tok) with one row per query-term occurrence (already
+    IN-filtered to _BM25_TERMS). Returns (*keys, score_fp, n_terms_hit).
+
+    The expression tree mirrors the oracles' parenthesization exactly:
+    each intermediate is one IEEE op on deterministic operands, each
+    per-term score is floored to a BIGINT micro-score, and the per-unit
+    SUM is an order-independent integer sum. The idf is the
+    Robertson-Spärck Jones ratio made LINEAR — (N-df+0.5)/(df+0.5)
+    without the log — because libm last-ulp behavior is not a
+    cross-engine contract and rational arithmetic is.
+
+    Scale shape: tf is a map-side-combined aggregate over the term
+    matches only and carries dl through the aggregate (dl is
+    functionally dependent on the unit — MAX is exact and saves a
+    second corpus join); df re-aggregates tf's narrow output; the
+    1-row stats frame attaches as a broadcast on a non-foldable
+    always-1 key (tf >= 1 on every row), so no nested loop."""
+    stats = stats_src.agg(
+        F.count(F.lit(1)).alias("n_units"),
+        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
+    ).select(
+        "n_units", "avgdl", F.least(F.col("n_units"), F.lit(1)).cast("int").alias("_k")
+    )
+    tf = tf_src.groupBy(*keys, "tok").agg(
+        F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
+    )
+    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    idf = (F.col("n_units") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    satur = (F.col("tf") * F.lit(2.5)) / (
+        F.col("tf") + F.lit(1.5) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
+    )
+    term_fp = F.floor(idf * satur * F.lit(1000000))
+    return (
+        tf.join(df, "tok")
+        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
+        .join(F.broadcast(stats), "_k")
+        .groupBy(*keys)
+        .agg(
+            F.sum(term_fp).alias("score_fp"),
+            F.count(F.lit(1)).alias("n_terms_hit"),
+        )
+    )
+
+
 @query(
     "bm25_topk_search",
     oracle=f"""
@@ -1948,60 +1996,25 @@ _BM25_TERMS_SQL = "('" + "', '".join(_BM25_TERMS) + "')"
 )
 def bm25_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 retrieval for a fixed query-term set — the lexical
-    ranking half of a retrieval/dedup stack (Robertson-Spärck Jones idf
-    made LINEAR — (N-df+0.5)/(df+0.5) without the log — for the same
-    reason tfidf_top_terms avoids ln(): libm last-ulp behavior is not a
-    cross-engine contract, rational arithmetic is). Every per-term score
-    is a fixed expression tree of IEEE binary64 ops on exact integer
-    inputs — bit-identical in any engine — then scaled-and-floored to a
-    BIGINT micro-score, so the per-document SUM is an order-independent
-    integer sum. Ties break on doc_id.
+    ranking half of a retrieval/dedup stack, scored by _bm25_scored at
+    document grain over the whole corpus. Ties break on doc_id.
 
     Scale shape: tf explodes only matching tokens (the IN filter runs
-    before the groupBy, so fanout is |matches|, not |tokens|) and
-    carries the doc length through the aggregate (dl is functionally
-    dependent on doc_id — MAX is exact and saves a second corpus join);
-    df re-aggregates tf's narrow output; corpus stats are a 1-row
-    broadcast attached via the non-foldable-key equi-join (see
-    tfidf_top_terms); the global top-10 compiles to
-    TakeOrderedAndProject — per-partition heads, no single-partition
-    window, no full sort."""
+    before the groupBy, so fanout is |matches|, not |tokens|); the
+    global top-10 compiles to TakeOrderedAndProject — per-partition
+    heads, no single-partition window, no full sort."""
     docs = table(spark, sf_dir, "documents")
-    stats = docs.select(F.size(_tokens()).alias("dl")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    ).select(
-        "n_docs", "avgdl", F.least(F.col("n_docs"), F.lit(1)).cast("int").alias("_k")
-    )
-    tf = (
-        docs.select("doc_id", F.size(_tokens()).alias("dl"), F.explode(_tokens()).alias("tok"))
-        .filter(F.col("tok").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # expression tree mirrors the oracle parenthesization exactly: each
-    # intermediate is one IEEE op on deterministic operands
-    idf = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    satur = (F.col("tf") * F.lit(2.5)) / (
-        F.col("tf") + F.lit(1.5) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
-    )
-    term_fp = F.floor(idf * satur * F.lit(1000000))
+    tf_src = docs.select(
+        "doc_id", F.size(_tokens()).alias("dl"), F.explode(_tokens()).alias("tok")
+    ).filter(F.col("tok").isin(*_BM25_TERMS))
     return (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(stats), "_k")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(term_fp).alias("score_fp"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
+        _bm25_scored(docs.select(F.size(_tokens()).alias("dl")), tf_src, ["doc_id"])
         .orderBy(F.col("score_fp").desc(), "doc_id")
         .limit(10)
     )
 
 
-# --- hybrid retrieval fusion (round 14) ------------------------------------
+# --- hybrid retrieval fusion -----------------------------------------------
 # RRF constants: the canonical k=60 damping (Cormack, Clarke & Buettcher,
 # SIGIR 2009), 50-deep per-system candidate lists, and a 1e9 integer
 # quantum so each rank's contribution floor(1e9/(60+rank)) is exact
@@ -2011,12 +2024,10 @@ _RRF_DEPTH = 50
 _RRF_PROBE_ID = 0  # dense arm's probe: the embedding registered at vec_id 0
 
 
-# extracted to a constant in round 15 so rerank_fused_topk can embed
-# the SAME two-arm fusion chain as a subquery (the _CHUNKS_SQL /
-# _COMPONENTS_CTES pattern); the rendered hybrid_rank_fusion oracle
-# is md5-pinned byte-identical to the certified pre-extraction form
-# in tests/test_llmops.py::test_hybrid_ctes_rendering_pinned — the
-# Spark side is likewise shared via _hybrid_arm_frames/_hybrid_fuse
+# the two-arm fusion chain, a constant so rerank_fused_topk can embed
+# it as a subquery; the rendered hybrid_rank_fusion oracle is
+# md5-pinned in tests/test_llmops.py::test_hybrid_ctes_rendering_pinned.
+# The Spark side is likewise shared via _hybrid_arm_frames/_rrf_fuse.
 _HYBRID_CTES = f"""lexdocs AS (
       -- keyset non-NULL-key contract: the fusion JOINS the two arms on
       -- the document id, so a NULL id cannot participate in either arm
@@ -2081,40 +2092,40 @@ _HYBRID_CTES = f"""lexdocs AS (
 
 
 def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
-    """Build the two hybrid-retrieval arm frames SHARED by
+    """Build the two hybrid-retrieval arm frames shared by
     hybrid_rank_fusion and rerank_fused_topk (the Spark twin of the
-    _HYBRID_CTES extraction): ``lex_scored`` (doc_id, score_fp — the
-    BM25 fixed-point micro-score over non-NULL doc_ids) and
+    _HYBRID_CTES chain): ``lex_scored`` (doc_id, score_fp — the
+    _bm25_scored micro-score over non-NULL doc_ids) and
     ``dense_scored`` (cand_id, dotq — the exact fixed-point inner
     product against the vec_id-0 probe). Both are corpus-grain narrow
     frames; consumers that need them more than once checkpoint them
     (the DSIR `weights` precedent) rather than re-running the corpus
     passes.
 
-    STATS-POPULATION DEVIATION from bm25_topk_search, stated per the
-    round-14 ADVICE: the lexical arm computes n_docs/avgdl over the
-    NON-NULL-doc_id corpus only (the fusion's full-outer join is
-    id-keyed, so NULL ids are excluded symmetrically up front — the
-    keyset non-NULL-key contract), while bm25_topk_search computes its
-    stats over ALL documents. The scoring TREE is verbatim; the stats
-    POPULATION intentionally differs on corpora with NULL doc_ids, so
-    arm score == bm25 score exactly iff the corpus has no NULL ids.
+    STATS-POPULATION DEVIATION from bm25_topk_search: the lexical arm
+    computes n_docs/avgdl over the NON-NULL-doc_id corpus only (the
+    fusion's full-outer join is id-keyed, so NULL ids are excluded
+    symmetrically up front — the keyset non-NULL-key contract), while
+    bm25_topk_search computes its stats over ALL documents. The
+    scoring TREE is shared; the stats POPULATION intentionally differs
+    on corpora with NULL doc_ids, so arm score == bm25 score exactly
+    iff the corpus has no NULL ids.
     tests/test_llmops.py::test_hybrid_lexical_arm_null_id_stats pins
     the intended divergence: the arm over a NULL-id corpus equals
     bm25_topk_search run on the NULL-stripped corpus."""
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
-    from crm_etl_pipeline_spark.queries.embeddings_q import _emb, _fixed_dot
+    from crm_etl_pipeline_spark.queries.embeddings_q import _emb, _fixed_dot, _one
 
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
-    # ONE tokenizing corpus pass (round 16, guide §1.2): the stats
-    # aggregate and the tf explode both need the tokenized text, and as
-    # separate subtrees they each re-scanned and re-split the text
-    # column. Tokenize once into a NARROW per-doc frame (dl + the
-    # IN-filtered token list — a handful of tokens per doc, vs the full
-    # text payload) and reliable-checkpoint it; both consumers read the
-    # checkpoint. Values are unchanged: size(tokens) is dl either way,
-    # and filter-before-explode == explode-then-filter (explode drops
-    # empty/NULL arrays — exactly the docs that contributed no tf rows).
+    # ONE tokenizing corpus pass: the stats aggregate and the tf
+    # explode both need the tokenized text, and as separate subtrees
+    # they would each re-scan and re-split the text column. Tokenize
+    # once into a NARROW per-doc frame (dl + the IN-filtered token list
+    # — a handful of tokens per doc, vs the full text payload) and
+    # reliable-checkpoint it; both consumers read the checkpoint.
+    # size(tokens) is dl either way, and filter-before-explode ==
+    # explode-then-filter (explode drops empty/NULL arrays — exactly
+    # the docs that contribute no tf rows).
     per_doc = reliable_checkpoint(
         docs.select(
             "doc_id",
@@ -2122,47 +2133,21 @@ def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
             F.filter(_tokens(), lambda t: t.isin(*_BM25_TERMS)).alias("ftoks"),
         )
     )
-    stats = (
-        per_doc.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        )
-        .select(
-            "n_docs",
-            "avgdl",
-            F.least(F.col("n_docs"), F.lit(1)).cast("int").alias("_k"),
-        )
-    )
-    tf = (
-        per_doc.select("doc_id", "dl", F.explode("ftoks").alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    satur = (F.col("tf") * F.lit(2.5)) / (
-        F.col("tf") + F.lit(1.5) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
-    )
-    term_fp = F.floor(idf * satur * F.lit(1000000))
-    lex_scored = (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(stats), "_k")
-        .groupBy("doc_id")
-        .agg(F.sum(term_fp).alias("score_fp"))
-    )
+    lex_scored = _bm25_scored(
+        per_doc.select("dl"),
+        per_doc.select("doc_id", "dl", F.explode("ftoks").alias("tok")),
+        ["doc_id"],
+    ).select("doc_id", "score_fp")
 
     emb = _emb(spark, sf_dir).filter(F.col("vec_id").isNotNull())
-    # non-foldable always-1 equi-key (the bm25 stats-attach pattern) so
-    # the probe attach stays a BroadcastHashJoin, not a nested loop;
-    # size(embedding) >= 0 on every post-_emb row, so least(size+1, 1)=1
+    # the always-1 key (_one) keeps the probe attach a
+    # BroadcastHashJoin, not a nested loop
     probe = emb.filter(F.col("vec_id") == _RRF_PROBE_ID).select(
-        F.col("embedding").alias("qe"),
-        F.least(F.size("embedding") + F.lit(1), F.lit(1)).cast("int").alias("_k"),
+        F.col("embedding").alias("qe"), _one("embedding").alias("_k")
     )
     dense_scored = (
         emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"))
-        .withColumn("_k", F.least(F.size("ce") + F.lit(1), F.lit(1)).cast("int"))
+        .withColumn("_k", _one("ce"))
         .join(F.broadcast(probe), "_k")
         .groupBy("cand_id")
         .agg(F.max(_fixed_dot(F.col("qe"), F.col("ce"))).alias("dotq"))
@@ -2170,34 +2155,52 @@ def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
     return lex_scored, dense_scored
 
 
-def _hybrid_fuse(lex_scored: DataFrame, dense_scored: DataFrame) -> DataFrame:
-    """RRF fusion of the two arm frames: each arm's top-_RRF_DEPTH via
-    TakeOrderedAndProject, rank windows over the <= 50 surviving rows,
-    full-outer id-keyed join, Σ floor(1e9/(60+rank)) — the pre-limit
-    fused frame (doc_id, lex_rank, dense_rank, rrf_fp)."""
-    # top-50 SET via TakeOrderedAndProject first; the rank window then
-    # runs over <= 50 rows (single tiny task — never the corpus)
-    w_lex = Window.orderBy(F.col("score_fp").desc(), F.col("doc_id").asc())
-    lex = (
-        lex_scored.orderBy(F.col("score_fp").desc(), "doc_id")
-        .limit(_RRF_DEPTH)
-        .select("doc_id", F.row_number().over(w_lex).alias("lex_rank"))
+def _rrf_fuse(
+    keys: list[str], lex: tuple[DataFrame, str, str], dense: tuple[DataFrame, str, str]
+) -> DataFrame:
+    """Reciprocal-rank fusion of two arms at the grain ``keys``
+    (``["doc_id"]`` or ``["doc_id", "chunk_id"]``). Each arm is
+    (frame, score column, rank column name) over a frame keyed by
+    ``keys``. Each arm keeps its top-_RRF_DEPTH by (score DESC, *keys)
+    via TakeOrderedAndProject, so the rank window runs over <= 50 rows
+    (a single tiny task — never the corpus); the two ranked lists meet
+    in a full-outer join on ``keys`` and score Σ floor(1e9/(60+rank))
+    over the arms a unit appears in — pure BIGINT. Returns the
+    pre-limit fused frame (*keys, lex rank, dense rank, rrf_fp)."""
+
+    def ranked(frame: DataFrame, score: str, rank: str) -> DataFrame:
+        w = Window.orderBy(F.col(score).desc(), *[F.col(k).asc() for k in keys])
+        return (
+            frame.orderBy(F.col(score).desc(), *keys)
+            .limit(_RRF_DEPTH)
+            .select(*keys, F.row_number().over(w).alias(rank))
+        )
+
+    lex_rank, dense_rank = lex[2], dense[2]
+    lex_arm = ranked(*lex)
+    dense_arm = ranked(*dense).select(
+        *[F.col(k).alias("d_" + k) for k in keys], dense_rank
     )
-    w_dense = Window.orderBy(F.col("dotq").desc(), F.col("cand_id").asc())
-    dense = (
-        dense_scored.orderBy(F.col("dotq").desc(), "cand_id")
-        .limit(_RRF_DEPTH)
-        .select("cand_id", F.row_number().over(w_dense).alias("dense_rank"))
-    )
-    fused = lex.join(dense, lex["doc_id"] == dense["cand_id"], "full_outer")
+    on = [lex_arm[k] == dense_arm["d_" + k] for k in keys]
+    fused = lex_arm.join(dense_arm, on, "full_outer")
     part = lambda rank: F.coalesce(  # noqa: E731 — local fused-score term
         F.expr(f"{10**9}L div ({_RRF_K} + {rank})"), F.lit(0).cast("bigint")
     )
     return fused.select(
-        F.coalesce(F.col("doc_id"), F.col("cand_id")).alias("doc_id"),
-        "lex_rank",
-        "dense_rank",
-        (part("lex_rank") + part("dense_rank")).cast("bigint").alias("rrf_fp"),
+        *[F.coalesce(F.col(k), F.col("d_" + k)).alias(k) for k in keys],
+        lex_rank,
+        dense_rank,
+        (part(lex_rank) + part(dense_rank)).cast("bigint").alias("rrf_fp"),
+    )
+
+
+def _hybrid_fuse(lex_scored: DataFrame, dense_scored: DataFrame) -> DataFrame:
+    """_rrf_fuse of the two hybrid arm frames at document grain:
+    (doc_id, lex_rank, dense_rank, rrf_fp)."""
+    return _rrf_fuse(
+        ["doc_id"],
+        (lex_scored, "score_fp", "lex_rank"),
+        (dense_scored.withColumnRenamed("cand_id", "doc_id"), "dotq", "dense_rank"),
     )
 
 
@@ -2222,14 +2225,14 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization across incomparable scales — exactly why it is the
     default fuser in Elasticsearch/OpenSearch/Vespa.
 
-    The lexical arm is bm25_topk_search's scoring TREE verbatim (same
+    The lexical arm is bm25_topk_search's scorer (_bm25_scored: same
     fixed term set, same fixed-point micro-score; a cross-query test
-    pins the two expression trees to each other) over non-NULL doc_ids
-    — with ONE stated deviation (round-14 ADVICE): the corpus stats
-    n_docs/avgdl are computed over the non-NULL-id population only, so
-    arm score == bm25 score exactly iff the corpus has no NULL doc_ids;
-    on a NULL-id corpus the arm equals bm25 run on the NULL-stripped
-    corpus (pinned by test_hybrid_lexical_arm_null_id_stats).
+    pins the two to each other) over non-NULL doc_ids — with ONE
+    stated deviation: the corpus stats n_docs/avgdl are computed over
+    the non-NULL-id population only, so arm score == bm25 score exactly
+    iff the corpus has no NULL doc_ids; on a NULL-id corpus the arm
+    equals bm25 run on the NULL-stripped corpus (pinned by
+    test_hybrid_lexical_arm_null_id_stats).
     The dense arm ranks by the exact fixed-point INNER PRODUCT against
     the probe registered at vec_id 0 (MIPS retrieval — the trained-
     normalized-embedding serving convention; ann_cosine_topk already
@@ -2246,16 +2249,16 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id 0 after the _emb corruption gate) yields an empty dense arm
     and the fusion degrades to lexical-only, per RRF's union semantics.
 
-    Scale shape: the lexical arm is the certified BM25 plan (IN-filter
+    Scale shape: the lexical arm is the BM25 plan (IN-filter
     before the explode, map-side-combined tf, 1-row broadcast stats);
     the dense arm is one broadcast probe row against a single linear
     scan (O(N·d), the ann_cosine_topk shape) collapsed to cand grain by
     a map-side-combinable MAX. Each arm's top-50 compiles to
     TakeOrderedAndProject (per-partition heads — no corpus-wide window,
     no single-partition sort); the rank-assignment windows then run
-    over ≤50 rows, and the fusion joins two ≤50-row frames. At 100 TB
-    the arms scale as their certified parents; the fusion itself is
-    constant-size."""
+    over ≤50 rows, and the fusion joins two ≤50-row frames (_rrf_fuse).
+    At 100 TB the arms scale as their parent queries; the fusion itself
+    is constant-size."""
     lex_scored, dense_scored = _hybrid_arm_frames(spark, sf_dir)
     return (
         _hybrid_fuse(lex_scored, dense_scored)
@@ -2264,7 +2267,7 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- feature-fusion reranking over the fused candidates (round 15) ---------
+# --- feature-fusion reranking over the fused candidates -------------------
 # the serving-stack stage AFTER hybrid_rank_fusion: re-score the RRF
 # top-10 with an exact feature combination — candidate-set min-max
 # normalized arm scores on a 1e4 quantum (range * 1e4 must stay under
@@ -2341,7 +2344,7 @@ def rerank_fused_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap-recall candidate generator feeds an expensive-precision
     re-scorer over the tiny candidate set). The candidate set is
     hybrid_rank_fusion's fused top-10 VERBATIM (the _HYBRID_CTES chain
-    embedded as a subquery; Spark composes the same shared
+    embedded as a subquery; Spark composes the same
     _hybrid_arm_frames/_hybrid_fuse helpers); in place of a learned
     cross-encoder forward pass — no model weights are a cross-engine
     contract — the re-score is a deterministic exact feature
@@ -2488,11 +2491,9 @@ def rerank_fused_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chunking window: 32-token chunks advancing 24 tokens (25% overlap)
 CHUNK_W, CHUNK_S = 32, 24
 
-# extracted to a constant in round 14 so chunk_bm25_retrieval can embed
-# the SAME chunker as a subquery (the _COMPONENTS_CTES pattern); the
-# rendered chunk_documents oracle is md5-pinned byte-identical to the
-# certified inline form (7f207f675a25279a900120feb17f5588) in
-# tests/test_llmops.py — the Spark side is untouched
+# the chunker, a constant so chunk_bm25_retrieval can embed the SAME
+# chunker as a subquery (the _COMPONENTS_CTES pattern); the rendered
+# chunk_documents oracle is md5-pinned in tests/test_llmops.py
 _CHUNKS_SQL = f"""
     WITH sized AS (
       SELECT doc_id, string_split(COALESCE(text, ''), ' ') AS t,
@@ -2594,75 +2595,12 @@ def _chunk_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunk_bm25_scored(
-    spark: SparkSession, sf_dir: str, feats: DataFrame | None = None
-) -> DataFrame:
-    """The chunk-grain BM25 scored frame SHARED by chunk_bm25_retrieval
-    and chunk_hybrid_retrieval (the Spark twin of _CHUNK_BM25_CTES):
-    scores every chunk with bm25_topk_search's fixed-point tree at
-    chunk grain — returns (doc_id, chunk_id, score_fp, n_terms_hit),
-    pre-ranking.
-
-    Without ``feats`` the stats/tf subtrees read the chunker subplan
-    directly — two pipelined passes, NO materialization: the certified
-    round-14 single-consumer shape, which the round-16 A/B measured
-    FASTER at local scale than paying an eager checkpoint (0.77 vs
-    1.05 s — the _kmeans_assign ckpt discipline: single consumers
-    don't pay materialization). chunk_hybrid_retrieval passes its
-    wider checkpointed _chunk_feats frame so all THREE of its chunker
-    passes collapse to one."""
-    if feats is None:
-        chunks = chunk_documents(spark, sf_dir)
-        stats_src = chunks.select("n_chunk_tokens")
-        tf_pre = chunks.select(
-            "doc_id",
-            "chunk_id",
-            F.col("n_chunk_tokens").alias("dl"),
-            F.explode(F.split(F.col("chunk_text"), " ")).alias("tok"),
-        ).filter(F.col("tok").isin(*_BM25_TERMS))
-    else:
-        stats_src = feats.select("n_chunk_tokens")
-        tf_pre = feats.select(
-            "doc_id",
-            "chunk_id",
-            F.col("n_chunk_tokens").alias("dl"),
-            F.explode("ftoks").alias("tok"),
-        )
-    stats = stats_src.agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        (F.sum("n_chunk_tokens").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    ).select(
-        "n_chunks",
-        "avgdl",
-        F.least(F.col("n_chunks"), F.lit(1)).cast("int").alias("_k"),
-    )
-    tf = tf_pre.groupBy("doc_id", "chunk_id", "tok").agg(
-        F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = (F.col("n_chunks") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    satur = (F.col("tf") * F.lit(2.5)) / (
-        F.col("tf") + F.lit(1.5) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
-    )
-    term_fp = F.floor(idf * satur * F.lit(1000000))
-    return (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(stats), "_k")
-        .groupBy("doc_id", "chunk_id")
-        .agg(
-            F.sum(term_fp).alias("score_fp"),
-            F.count(F.lit(1)).alias("n_terms_hit"),
-        )
-    )
-
-
-# extracted to a constant in round 15 so chunk_hybrid_retrieval can
-# embed the SAME chunk-grain BM25 scoring chain as a subquery (the
-# _HYBRID_CTES pattern); the rendered chunk_bm25_retrieval oracle is
-# md5-pinned byte-identical to the certified round-14 form in
-# tests/test_llmops.py::test_chunk_bm25_ctes_rendering_pinned — the
-# Spark side is likewise shared via _chunk_bm25_scored
+# the chunk-grain BM25 scoring chain, a constant so
+# chunk_hybrid_retrieval can embed it as a subquery; the rendered
+# chunk_bm25_retrieval oracle is md5-pinned in
+# tests/test_llmops.py::test_chunk_bm25_ctes_rendering_pinned. The
+# Spark side of both queries is _bm25_scored at (doc_id, chunk_id)
+# grain.
 _CHUNK_BM25_CTES = f"""chunks AS ({_CHUNKS_SQL}),
     stats AS (
       SELECT COUNT(*) AS n_chunks,
@@ -2710,35 +2648,41 @@ def chunk_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     production retrieval stack indexes context-window-sized CHUNKS, not
     whole documents, so the retrieved unit fits the prompt budget and
     carries (doc_id, chunk_id) provenance for citation): run the
-    certified overlapping-window chunker, then rank chunks with
-    bm25_topk_search's exact fixed-point scoring tree at chunk grain
-    (corpus stats become chunk stats: n_chunks, mean chunk length).
+    overlapping-window chunker, then rank chunks with _bm25_scored at
+    chunk grain (corpus stats become chunk stats: n_chunks, mean chunk
+    length).
 
     COMPOSITION: the Spark side calls the registered chunk_documents
     plan as a subplan (the dedup_cluster_keep_best precedent) and the
-    oracle embeds the identical chunker via _CHUNKS_SQL (rendered
-    byte-identical to the certified inline form, md5-pinned). Scoring
-    is the BM25 tree verbatim with n_docs -> n_chunks — every per-term
-    score is the same fixed IEEE expression on exact integer inputs,
-    floored to a BIGINT micro-score, summed order-independently.
+    oracle embeds the identical chunker via _CHUNKS_SQL. Both stats and
+    tf read that subplan directly — two pipelined passes, no
+    materialization, which measured faster for this single consumer
+    than paying an eager checkpoint (0.77 vs 1.05 s).
 
-    Identity contracts: chunking is per-ROW symmetric (the certified
-    chunker's contract), so a collided doc_id's chunks MERGE at the
-    (doc_id, chunk_id, tok) tf grain — deterministically, in both
-    engines; a NULL doc_id chunk group survives to the output, so the
-    top-10 cut spells doc_id ASC NULLS FIRST in both engines (Spark's
-    ASC default, made explicit per the round-13 campaign).
+    Identity contracts: chunking is per-ROW symmetric (the chunker's
+    contract), so a collided doc_id's chunks MERGE at the (doc_id,
+    chunk_id, tok) tf grain — deterministically, in both engines; a
+    NULL doc_id chunk group survives to the output, so the top-10 cut
+    spells doc_id ASC NULLS FIRST in both engines (Spark's ASC
+    default, made explicit).
 
-    Scale shape: the chunker pipelines inside the scan (zero shuffles,
-    certified); the IN-filter runs before the tf groupBy so fanout is
-    |term matches|, not |chunk tokens|; df re-aggregates tf's narrow
-    output; the 1-row stats broadcast attaches via the non-foldable
-    always-1 equi-key; the global top-10 compiles to
+    Scale shape: the chunker pipelines inside the scan (zero
+    shuffles); the IN-filter runs before the tf groupBy so fanout is
+    |term matches|, not |chunk tokens|; the global top-10 compiles to
     TakeOrderedAndProject — per-partition heads, no corpus sort. The
     overlap factor (W/S = 4/3) multiplies the scan constant, not the
     complexity class."""
+    chunks = chunk_documents(spark, sf_dir)
+    tf_src = chunks.select(
+        "doc_id",
+        "chunk_id",
+        F.col("n_chunk_tokens").alias("dl"),
+        F.explode(F.split(F.col("chunk_text"), " ")).alias("tok"),
+    ).filter(F.col("tok").isin(*_BM25_TERMS))
     return (
-        _chunk_bm25_scored(spark, sf_dir)
+        _bm25_scored(
+            chunks.select(F.col("n_chunk_tokens").alias("dl")), tf_src, ["doc_id", "chunk_id"]
+        )
         .orderBy(
             F.col("score_fp").desc(),
             F.col("doc_id").asc_nulls_first(),
@@ -2748,7 +2692,7 @@ def chunk_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- chunk-grain hybrid retrieval (round 15) --------------------------------
+# --- chunk-grain hybrid retrieval ------------------------------------------
 # the dense arm's chunk representation is the FEATURE-HASHING embedding
 # (Weinberger et al., ICML 2009 — the hashing trick): every token hashes
 # to one of D=64 buckets via the cross-engine md5->52-bit idiom, a chunk
@@ -2829,19 +2773,19 @@ _CHUNK_DENSE_Q = 10**6
 )
 def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval at PASSAGE grain — the full RAG serving shape
-    (hybrid_rank_fusion certifies the two-arm fusion at document
-    grain; real serving stacks retrieve chunks, so both arms must rank
-    the chunker's output): the lexical arm is chunk_bm25_retrieval's
-    scoring chain VERBATIM (_CHUNK_BM25_CTES embedded; Spark composes
-    the shared _chunk_bm25_scored helper), the dense arm scores each
-    chunk's FEATURE-HASHED vector (Weinberger et al., ICML 2009:
-    tokens -> D=64 buckets via the cross-engine md5->52-bit idiom,
-    chunk vector = bucket counts) against the fixed probe text by the
-    exact integer dot product, MEAN-POOLED by the chunk's certified
-    token count (dot * 1e6 // n_tokens — the length normalization that
-    makes a chunk vector the mean of its token one-hots). Each arm's
-    top-50 fuses by the same Σ floor(1e9/(60+rank)) RRF rule at
-    (doc_id, chunk_id) grain — pure BIGINT end to end.
+    (hybrid_rank_fusion fuses the two arms at document grain; real
+    serving stacks retrieve chunks, so both arms rank the chunker's
+    output): the lexical arm is chunk_bm25_retrieval's scoring chain
+    (_CHUNK_BM25_CTES embedded; Spark composes _bm25_scored), the
+    dense arm scores each chunk's FEATURE-HASHED vector (Weinberger et
+    al., ICML 2009: tokens -> D=64 buckets via the cross-engine
+    md5->52-bit idiom, chunk vector = bucket counts) against the fixed
+    probe text by the exact integer dot product, MEAN-POOLED by the
+    chunk's token count (dot * 1e6 // n_tokens — the length
+    normalization that makes a chunk vector the mean of its token
+    one-hots). _rrf_fuse fuses each arm's top-50 by the same
+    Σ floor(1e9/(60+rank)) rule at (doc_id, chunk_id) grain — pure
+    BIGINT end to end.
 
     Identity contracts: NULL-id chunks are excluded from BOTH arms up
     front (the fusion's full-outer join is (doc_id, chunk_id)-keyed —
@@ -2854,10 +2798,10 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     a negative operand (counts and token counts are non-negative), so
     the engines' div-rounding modes cannot split.
 
-    Scale shape: the chunker pipelines inside the scan for each arm
-    (the deliberate recompute-over-materialize call — checkpointing
-    the chunk_text-wide frame would write ~4/3 of the corpus to
-    storage, the DSIR explode precedent); the dense arm is one
+    Scale shape: the chunker runs ONCE — both arms read the
+    checkpointed narrow _chunk_feats frame (ftoks for the BM25 stats
+    and tf, bs for the dense bucket build) instead of re-running the
+    chunker subplan three times; the dense arm is one
     map-side-combinable groupBy to (doc_id, chunk_id, b) grain
     (fanout <= 32 tokens x 1 bucket each), a <= 64-row broadcast probe
     join, and one more combinable groupBy back to chunk grain; both
@@ -2867,22 +2811,14 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes; the fusion is constant-size."""
     from crm_etl_pipeline_spark.queries.sketch_filters_q import _hash_long
 
-    # one chunker pass (round 16): both arms read the checkpointed
-    # per-chunk feature frame (ftoks for the BM25 arm, bs for the
-    # dense arm) instead of re-running the chunker subplan three times
-    # (bm25 stats + bm25 tf + dense bucket build)
     feats = _chunk_feats(spark, sf_dir)
-    bm = _chunk_bm25_scored(spark, sf_dir, feats=feats).filter(
-        F.col("doc_id").isNotNull()
-    )
-    w_bm = Window.orderBy(
-        F.col("score_fp").desc(), F.col("doc_id").asc(), F.col("chunk_id").asc()
-    )
-    bm_arm = (
-        bm.orderBy(F.col("score_fp").desc(), "doc_id", "chunk_id")
-        .limit(_RRF_DEPTH)
-        .select("doc_id", "chunk_id", F.row_number().over(w_bm).alias("bm25_rank"))
-    )
+    bm = _bm25_scored(
+        feats.select(F.col("n_chunk_tokens").alias("dl")),
+        feats.select(
+            "doc_id", "chunk_id", F.col("n_chunk_tokens").alias("dl"), F.explode("ftoks").alias("tok")
+        ),
+        ["doc_id", "chunk_id"],
+    ).filter(F.col("doc_id").isNotNull())
 
     cvec = (
         feats.filter(F.col("doc_id").isNotNull())
@@ -2911,31 +2847,11 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dscore_fp")
         )
     )
-    w_d = Window.orderBy(
-        F.col("dscore_fp").desc(), F.col("doc_id").asc(), F.col("chunk_id").asc()
-    )
-    dense_arm = (
-        dense_scored.orderBy(F.col("dscore_fp").desc(), "doc_id", "chunk_id")
-        .limit(_RRF_DEPTH)
-        .select("doc_id", "chunk_id", F.row_number().over(w_d).alias("dense_rank"))
-    ).withColumnRenamed("doc_id", "d_doc_id").withColumnRenamed("chunk_id", "d_chunk_id")
-
-    fused = bm_arm.join(
-        dense_arm,
-        (bm_arm["doc_id"] == dense_arm["d_doc_id"])
-        & (bm_arm["chunk_id"] == dense_arm["d_chunk_id"]),
-        "full_outer",
-    )
-    part = lambda rank: F.coalesce(  # noqa: E731 — local fused-score term
-        F.expr(f"{10**9}L div ({_RRF_K} + {rank})"), F.lit(0).cast("bigint")
-    )
     return (
-        fused.select(
-            F.coalesce(F.col("doc_id"), F.col("d_doc_id")).alias("doc_id"),
-            F.coalesce(F.col("chunk_id"), F.col("d_chunk_id")).alias("chunk_id"),
-            "bm25_rank",
-            "dense_rank",
-            (part("bm25_rank") + part("dense_rank")).cast("bigint").alias("rrf_fp"),
+        _rrf_fuse(
+            ["doc_id", "chunk_id"],
+            (bm, "score_fp", "bm25_rank"),
+            (dense_scored, "dscore_fp", "dense_rank"),
         )
         .orderBy(F.col("rrf_fp").desc(), "doc_id", "chunk_id")
         .limit(10)

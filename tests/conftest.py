@@ -29,7 +29,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("crm-etl-pipeline-tests", cpus=8)
+    spark = get_spark("crm-etl-pipeline-tests")
     yield spark
 
 

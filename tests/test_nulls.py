@@ -93,3 +93,34 @@ def test_null_text_reads_as_empty_document(spark, tmp_path):
     # (empty) line — the empty-document shape, not an absence
     n_docs = fixture.num_rows
     assert REGISTRY["boilerplate_line_removal"].fn(spark, out).count() == n_docs
+
+
+def _negate_every_10th(tbl, col):
+    vals = tbl.column(col).to_pylist()
+    vals = [-v if i % 10 == 3 and v is not None and v > 0 else v for i, v in enumerate(vals)]
+    return tbl.set_column(
+        tbl.column_names.index(col), col, pa.array(vals, tbl.schema.field(col).type)
+    )
+
+
+def test_negative_vec_ids_stay_in_kmeans(spark, tmp_path):
+    """10% negative vec_ids: k-means training must assign every vector
+    whatever the sign of its id. The centroid attach is an equi-join on
+    a key that must be 1 on every row; a key derived from vec_id
+    arithmetic (least(vec_id + 1, 1)) is not 1 for a negative id, so
+    that vector would meet no centroid and silently fall out of
+    embedding_kmeans and semantic_dedup while the oracles keep it."""
+    fixture = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    out = str(tmp_path / "negvec")
+    os.makedirs(out, exist_ok=True)
+    mutated = _negate_every_10th(fixture, "vec_id")
+    assert sum(1 for v in mutated.column("vec_id").to_pylist() if v < 0) > 0
+    pq.write_table(mutated, f"{out}/embeddings.parquet")
+    os.environ["_NULLFIX_DIR"] = out
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')"
+    )
+    _assert_agree(spark, con, ["embedding_kmeans", "semantic_dedup"])
+    con.close()
+    assert REGISTRY["embedding_kmeans"].fn(spark, out).count() == fixture.num_rows

@@ -668,6 +668,21 @@ def negative_doc_ids(tbl):
     )
 
 
+def negative_vec_ids(tbl):
+    # negative vector identity — the embeddings twin of
+    # negative_doc_ids: every 10th vec_id is negated. Any join key or
+    # bucket derived from the id's arithmetic (least(vec_id + 1, 1),
+    # `%`, `div`) changes value for a negative id, and a constant-key
+    # attach built that way silently drops the row on one engine only.
+    ids = tbl.column("vec_id").to_pylist()
+    out = [(-v if (i % 10 == 3 and v is not None and v > 0) else v)
+           for i, v in enumerate(ids)]
+    return tbl.set_column(
+        tbl.column_names.index("vec_id"), "vec_id",
+        pa.array(out, tbl.schema.field("vec_id").type),
+    )
+
+
 def garbage_props(tbl):
     opts = [
         "{not json", "", '{"k":', "null", "[]", '{"a":1}',
@@ -1289,6 +1304,13 @@ PROBES = [
       "sample_stratified_hashrank", "train_split_stratified",
       "pack_training_sequences"]),
     ("null_vec_ids", {"embeddings": null_vec_ids},
+     ["ann_cosine_topk", "ann_lsh_bucketed", "ann_ivf_probe",
+      "ann_ivf_nprobe2", "ann_pq_adc", "ann_ivf_persisted_index",
+      "embedding_standardize",
+      "embedding_quantize_int8", "embedding_centroid_per_label",
+      "embedding_norm_topk", "embedding_kmeans", "kmeans_cluster_purity",
+      "knn_label_disagreement", "embedding_near_dup", "ann_recall_selfcheck", "semantic_dedup", "ann_ivf_incremental_index", "hybrid_rank_fusion", "rerank_fused_topk"]),
+    ("negative_vec_ids", {"embeddings": negative_vec_ids},
      ["ann_cosine_topk", "ann_lsh_bucketed", "ann_ivf_probe",
       "ann_ivf_nprobe2", "ann_pq_adc", "ann_ivf_persisted_index",
       "embedding_standardize",
