@@ -32,56 +32,56 @@ from crm_etl_pipeline_spark.queries import (  # noqa: F401
 # names, so the list fits that 50-query prefix;
 # test_driver_priority_window enforces the fit.
 DRIVER_PRIORITY: list[str] = [
-    # --- (a) Spark code changed by the shared similarity-search kernels ---
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    "ann_ivf_nprobe2",
-    "ann_ivf_probe",
-    "ann_ivf_persisted_index",
-    "ann_ivf_incremental_index",
-    "knn_label_disagreement",
+    # --- (a) Spark code changed by the shared scalar attach (attach.py) ---
+    "funnel_conversion",
+    "rfm_segmentation",
+    "copurchase_lift_topk",
+    "copurchase_pagerank",
+    "decile_gains_table",
+    "histogram_order_values",
+    "weighted_sample_allocation",
+    "dq_audit_orders",
+    "global_rank_two_phase",
+    "histogram_equi_depth",
+    "pps_systematic_sample",
+    "chi_square_segment_nation",
+    "benford_price_audit",
+    "abc_pareto_classification",
+    "credential_rotation_schedule",
+    "zorder_range_scan",
+    "zorder_incremental_compact",
+    "streaming_zorder_ingest",
     "embedding_kmeans",
     "kmeans_cluster_purity",
     "semantic_dedup",
-    "ann_pq_adc",
-    "embedding_near_dup",
-    "ann_recall_selfcheck",
+    "ann_ivf_incremental_index",
+    "tfidf_top_terms",
+    "token_rarity_score",
     "bm25_topk_search",
     "hybrid_rank_fusion",
     "rerank_fused_topk",
     "chunk_bm25_retrieval",
     "chunk_hybrid_retrieval",
-    # --- (b) oldest external check first (all last checked in r12) ---
-    "kmv_distinct_sketch",
-    "approx_value_percentiles",
-    "grouping_sets_region_segment",
-    "bucketed_join_colocated",
-    "catalog_recursive_paths",
-    "ab_test_conversion",
-    "session_window_builtin",
-    "variant_props_shred",
-    "credential_rotation_schedule",
-    "zorder_range_scan",
-    "partition_evolution_regrain",
-    "doc_quality_score",
-    "doc_fingerprint",
-    "train_split_stratified",
-    "contamination_ngram_overlap",
-    "vocab_top_tokens",
-    "doc_repetition_ratio",
-    "tfidf_top_terms",
-    "point_lookup",
-    "filtered_scan",
-    "topk_orders_by_revenue",
-    "exists_returned_lineitems",
-    "correlated_min_cost_supplier",
-    "disjunctive_filter_scan",
-    "csv_source_roundtrip",
-    "dq_audit_orders",
-    "global_rank_two_phase",
-    "streaming_tumbling_counts",
-    "streaming_stateful_sessions",
-    "safe_numeric_cast",
-    "system_column_enrichment",
-    "latest_order_per_customer",
+    "boilerplate_line_removal",
+    "language_temperature_sample",
+    "bpe_merge_training",
+    "bpe_encode",
+    "bpe_subword_vocab",
+    "pack_bpe_sequences",
+    "bigram_lm_quality_filter",
+    "dsir_importance_resample",
+    # --- (b) oldest external check first (r12, then r13) ---
+    "asof_join_latest_order",
+    "ntile_order_value_quartiles",
+    "range_join_clicks_before_purchase",
+    "running_revenue",
+    "sliding_1h_user_value",
+    "approx_distinct_selfcheck",
+    "attribution_last_touch",
+    "bloom_semi_join_prune",
+    "catalog_tree",
+    "cdc_derive_changes",
+    "cohort_retention",
+    "countmin_heavy_hitters",
+    "dedup_incremental_new_docs",
 ]

@@ -42,19 +42,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crm_etl_pipeline_spark.attach import attach
 from crm_etl_pipeline_spark.io import table
 from crm_etl_pipeline_spark.registry import query
 
 _FUNNEL = ("signup", "view", "click", "purchase")
-
-
-def _scalar_attach(df: DataFrame, scalar: DataFrame, probe_key) -> DataFrame:
-    """Attach a 1-row scalar frame via a broadcast EQUI-join on a
-    non-foldable always-1 key (the ``tfidf_top_terms`` idiom: a lit(1)
-    key would be constant-folded and degrade to BroadcastNestedLoopJoin).
-    ``probe_key`` must be a column expression provably equal to 1 on
-    every row of ``df``."""
-    return df.withColumn("_k", probe_key).join(F.broadcast(scalar), "_k").drop("_k")
 
 
 @query(
@@ -117,22 +109,8 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "users_reached",
         )
         counts = row if counts is None else counts.unionByName(row)
-    # _k must stay 1 even when the funnel is EMPTY: least(_u1, 1) reads
-    # 0 with zero stage-1 users, silently dropping all four stage rows
-    # at the scalar-attach equi-join (observed vs the oracle on a
-    # clickstream-only corpus) — greatest-then-least pins it to 1 while
-    # staying non-foldable (the BNLJ-avoidance convention)
-    first = (
-        stage_first[0]
-        .agg(F.count(F.lit(1)).alias("_u1"))
-        .select(
-            "_u1",
-            F.least(F.greatest(F.col("_u1"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
-        )
-    )
-    out = _scalar_attach(
-        counts, first, F.least(F.col("stage_idx"), F.lit(1)).cast("int")
-    )
+    first = stage_first[0].agg(F.count(F.lit(1)).alias("_u1"))
+    out = attach(counts, first)
     # empty-funnel guard: zero stage-1 users means 0.0 conversion
     # everywhere, not 0/0 (ANSI crash / NaN divergence)
     conv = F.when(F.col("_u1") == 0, F.lit(0.0)).otherwise(
@@ -229,17 +207,10 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("monetary_dec"),
     )
-    # scalar-side key must be NON-FOLDABLE (tfidf idiom): dayofmonth >= 1
-    # always, but depends on the column, so the attach stays a broadcast
-    # hash join instead of degrading to BroadcastNestedLoopJoin.
-    ref = orders.agg(F.max("o_orderdate").alias("ref_dt")).select(
-        "ref_dt", F.least(F.dayofmonth("ref_dt"), F.lit(1)).cast("int").alias("_k")
-    )
+    ref = orders.agg(F.max("o_orderdate").alias("ref_dt"))
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    base = _scalar_attach(
-        percust.join(cust, percust.o_custkey == cust.c_custkey),
-        ref,
-        F.least(F.col("frequency"), F.lit(1)).cast("int"),
+    base = attach(
+        percust.join(cust, percust.o_custkey == cust.c_custkey), ref
     ).withColumn("recency_days", F.datediff("ref_dt", "last_order"))
     seg = Window.partitionBy("c_mktsegment")
     r_w = seg.orderBy("recency_days", "c_custkey")
@@ -452,15 +423,12 @@ def copurchase_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order key — pair work is Σ basket-size² with baskets bounded at
     the order's line count (≤ tens), the same bounded-fanout argument
     as LSH in-bucket pairs; never an all-pairs part join. The corpus
-    size attaches via the non-foldable broadcast scalar; top-20
+    size attaches as a broadcast scalar; top-20
     compiles to TakeOrderedAndProject (no global window)."""
     basket = (
         table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
     )
-    n = basket.agg(F.countDistinct("l_orderkey").alias("n_orders")).select(
-        "n_orders",
-        F.least(F.col("n_orders"), F.lit(1)).cast("int").alias("_k"),
-    )
+    n = basket.agg(F.countDistinct("l_orderkey").alias("n_orders"))
     single = basket.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("c"))
     a = basket.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
     b = basket.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))
@@ -473,11 +441,7 @@ def copurchase_lift_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ca = single.select(F.col("l_partkey").alias("part_a"), F.col("c").alias("ca"))
     cb = single.select(F.col("l_partkey").alias("part_b"), F.col("c").alias("cb"))
     return (
-        _scalar_attach(
-            pairs.join(ca, "part_a").join(cb, "part_b"),
-            n,
-            F.least(F.col("support"), F.lit(1)).cast("int"),
-        )
+        attach(pairs.join(ca, "part_a").join(cb, "part_b"), n)
         .select(
             "part_a",
             "part_b",
@@ -598,50 +562,35 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     same reason `dedup_components` and `embedding_kmeans` oracle
     cleanly where float-summing graph engines cannot).
 
-    Scale shape per iteration: one edge-grain equi-join on src (ranks
-    + degrees broadcast when small, shuffle otherwise) and one
-    groupBy dst — the standard Pregel-as-join formulation; the
-    symmetric co-purchase graph has no dangling nodes, so no global
-    redistribution term. Fixed iteration budget with an external
-    convergence check, like the k-means note.
+    Scale shape:
+    - the pair distinct runs at canonical (src < dst) grain and the
+      symmetric edge list is its mirror union, so half the rows go
+      through the distinct exchange and the mirror is a shuffle-free
+      projection;
+    - the edge list is reliable-checkpointed once, PARTITIONED BY dst,
+      so the unrolled iterations start from materialized blocks instead
+      of leaning on exchange reuse across a ~90-Exchange plan (with
+      the node-grain quantization below, ~20% off the query). The
+      checkpointed LogicalRDD keeps its outputPartitioning, which lets
+      the planner see that partitioning across the lineage cut;
+    - the per-edge contribution floor(r/d*1e12) is constant per source
+      node, so it is quantized at NODE grain and each iteration ships
+      one ready BIGINT to edge grain in one join on src;
+    - that join broadcasts the node table, so it preserves the edges'
+      dst partitioning and each iteration's groupBy(dst) runs without
+      its own exchange: the one repartition inside the checkpoint job
+      serves all three iterations. The broadcast hint is load-bearing:
+      without it a sort-merge join on src re-shuffles the edges and
+      loses the dst partitioning (measured: 28% less time at sf0.1,
+      35% at sf1). The hint pays only together with the dst-partitioned
+      edges; alone it has no partitioning to preserve. The node table
+      is bounded by the part catalog, not the corpus (~16 B/node,
+      ~320 MB at a 20M-part catalog); if a deployment exceeds the
+      broadcast cap, drop the hint and AQE plans the shuffle join.
 
-    Round-15 measured restructure (guide §2.3/§2.4, A/B at sf0.1,
-    bit-identical output):
-    - the pair distinct runs at CANONICAL (src < dst) grain and the
-      symmetric edge list is its mirror union — half the rows through
-      the distinct exchange, the mirror is a shuffle-free projection;
-    - the edge list is reliable_checkpoint-ed once: the unrolled DAG's
-      per-iteration consumers start from materialized blocks instead of
-      leaning on ReuseExchange across a 90-Exchange plan (re-measured:
-      the r11 'checkpoint changes nothing' reading no longer holds on
-      the grown plan — ckpt + the node-grain quantization below is
-      ~20% off the query);
-    - the per-edge contribution floor(r/d*1e12) is constant per SOURCE
-      node, so it is quantized at NODE grain (20k rows) and the edge
-      join ships one ready BIGINT instead of computing the division
-      2.4M times and carrying (r double, d long) to edge grain — one
-      join per iteration instead of two.
-
-    Round-16 restructure (guide §2.4 "share one exchange", measured at
-    sf0.1 AND sf1, bit-identical): the edge checkpoint is PARTITIONED
-    BY dst, and the per-iteration rank attach is a BROADCAST join, so
-    the join preserves the dst hash-partitioning and each iteration's
-    groupBy(dst) aggregate runs WITHOUT its own exchange — the 3
-    edge-grain shuffles per query (24M rows each at sf1) collapse into
-    the one repartition paid once inside the checkpoint job. The
-    checkpointed LogicalRDD carries its outputPartitioning, which is
-    what makes the reuse visible to the planner across the lineage
-    cut. Interleaved A/B: sf0.1 best 3.47 -> 2.50 (-28%), sf1 best
-    23.9 -> 15.4 (-35%), variant faster in every block. The broadcast
-    hint is LOAD-BEARING here (an SMJ on src would re-shuffle the
-    edges and destroy the dst partitioning) — this supersedes the r15
-    note that a bare broadcast hint on the node table lost: it lost
-    WITHOUT the dst-prepartitioned edges, because there was no
-    partitioning to preserve. The broadcast side is the node table
-    (part-catalog-bounded, not corpus-bounded: ~16 B/node, ~320 MB at
-    a 20M-part catalog), well under the broadcast cap at any plausible
-    catalog; if a deployment ever exceeds it, drop the hint and AQE
-    re-plans to the pre-r16 shape."""
+    The symmetric co-purchase graph has no dangling nodes, so there is
+    no global redistribution term. The fixed iteration budget stands in
+    for an external convergence check, like the k-means note."""
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
 
     basket = (
@@ -657,17 +606,13 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = reliable_checkpoint(
         und.unionAll(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")  # round-16: see docstring — one exchange, reused 3x
+        .repartition("dst")  # one exchange, reused by all iterations (docstring)
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    n = deg.agg(F.count(F.lit(1)).alias("nn")).select(
-        "nn", F.least(F.col("nn"), F.lit(1)).cast("int").alias("_k")
+    n = deg.agg(F.count(F.lit(1)).alias("nn"))
+    ranks = attach(deg.select(F.col("src").alias("node")), n).select(
+        "node", (F.lit(1.0) / F.col("nn")).alias("r")
     )
-    ranks = _scalar_attach(
-        deg.select(F.col("src").alias("node")),
-        n,
-        F.least(F.length(F.col("node").cast("string")), F.lit(1)).cast("int"),
-    ).select("node", (F.lit(1.0) / F.col("nn")).alias("r"))
     for _ in range(_PR_ITERS):
         node_cq = (
             ranks.withColumnRenamed("node", "src")
@@ -678,15 +623,13 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # broadcast is load-bearing: it preserves edges' dst
-        # partitioning through the join (docstring, round 16)
+        # partitioning through the join (docstring)
         sums = (
             edges.join(F.broadcast(node_cq), "src")
             .groupBy("dst")
             .agg(F.sum("cq").alias("sq"))
         )
-        ranks = _scalar_attach(
-            sums, n, F.least(F.length(F.col("dst").cast("string")), F.lit(1)).cast("int")
-        ).select(
+        ranks = attach(sums, n).select(
             F.col("dst").alias("node"),
             (
                 F.lit(0.15) / F.col("nn")
@@ -996,20 +939,9 @@ def decile_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "percentile(score, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))"
         ).alias("q")
-    ).select(
-        "q",
-        F.least(F.greatest(F.size(F.col("q")), F.lit(1)), F.lit(1))
-        .cast("int")
-        .alias("_k"),
     )
     scored = (
-        # non-foldable always-1 key (scores are >= 900, a lit(1) would
-        # constant-fold and degrade the attach to a nested loop)
-        hist.withColumn(
-            "_k",
-            F.least(F.greatest(F.col("score"), F.lit(1.0)), F.lit(1.0)).cast("int"),
-        )
-        .join(F.broadcast(bounds), "_k")
+        attach(hist, bounds)
         .join(resp, "o_custkey", "left")
         .select(
             (
@@ -1026,10 +958,6 @@ def decile_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per_decile.agg(
         F.sum("n_customers").alias("tot_n"),
         F.sum("n_responders").alias("tot_resp"),
-    ).select(
-        "tot_n",
-        "tot_resp",
-        F.least(F.greatest(F.col("tot_n"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
     )
     rate = F.col("n_responders").cast("double") / F.col("n_customers")
     base = F.col("tot_resp").cast("double") / F.col("tot_n")
@@ -1043,11 +971,7 @@ def decile_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_responders").cast("double") / F.col("tot_resp")
     )
     return (
-        per_decile.withColumn(
-            "_k",
-            F.least(F.greatest(F.col("n_customers"), F.lit(1)), F.lit(1)).cast("int"),
-        )
-        .join(F.broadcast(tot), "_k")
+        attach(per_decile, tot)
         .select(
             "decile",
             "n_customers",

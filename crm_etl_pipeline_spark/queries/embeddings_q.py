@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crm_etl_pipeline_spark import lsh
+from crm_etl_pipeline_spark.attach import attach
 from crm_etl_pipeline_spark.io import table
 from crm_etl_pipeline_spark.registry import query
 
@@ -129,14 +130,6 @@ def _train_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("vd")
         )
     )
-
-
-def _one(col: str) -> Column:
-    """A non-foldable join key that is 1 on every row: ``col`` is an
-    array that is never NULL here, so size + 1 >= 1. Attaching a small
-    broadcast frame on this key keeps the attach a BroadcastHashJoin
-    instead of a nested loop."""
-    return F.least(F.size(col) + F.lit(1), F.lit(1)).cast("int")
 
 
 _SCALE = 1e12  # fixed-point quantum for float reductions
@@ -628,7 +621,7 @@ def _ivf_codebook(emb: DataFrame) -> DataFrame:
 def _ivf_cell_inline(frame: DataFrame, codebook: DataFrame) -> DataFrame:
     """``frame`` + a ``cell`` column — nearest-codebook assignment as a
     pure PROJECTION: the codebook collapses to a one-row array attached
-    via the always-1 equi-key, and the argmin is ``array_min`` over
+    to every row (``attach``), and the argmin is ``array_min`` over
     (d2q, cen_label) structs — struct ordering IS the (d2q, cen_label)
     tiebreak ``_ivf_assign``'s window encodes, and d2q is the same
     ``_dist_q``, so the assigned cell is bit-identical. Unlike
@@ -644,16 +637,13 @@ def _ivf_cell_inline(frame: DataFrame, codebook: DataFrame) -> DataFrame:
     form keeps every input row and assigns each row its own argmin
     cell, so feeding it NULL/collided identities would diverge from the
     window form."""
-    cb1 = codebook.agg(F.collect_list(F.struct("cen_label", "cvec")).alias("cb")).select(
-        "cb", F.lit(1).cast("int").alias("_k")
-    )
+    cb1 = codebook.agg(F.collect_list(F.struct("cen_label", "cvec")).alias("cb"))
     cand = lambda c: F.struct(  # noqa: E731 — local expression builder
         _dist_q(F.col("embedding"), c["cvec"]).alias("d2q"),
         c["cen_label"].alias("cen_label"),
     )
     return (
-        frame.withColumn("_k", _one("embedding"))
-        .join(F.broadcast(cb1), "_k")
+        attach(frame, cb1)
         .withColumn("cell", F.array_min(F.transform("cb", cand))["cen_label"])
         .drop("cb")
     )
@@ -1160,10 +1150,10 @@ def embedding_kmeans(
     scale run per-pass budgets with an external convergence check (the
     dedup_components scalar-count pattern); unrolling keeps the whole
     plan one DAG. Scale shape per iteration: the k=8 centroid set is a
-    broadcast attached via a non-foldable constant-key equi-join (8
-    matches per probe row — the ann probe shape without a nested
-    loop), assignment is one partitioned window, and the M-step is the
-    (cluster, dim)-grain exact aggregate — k·64 keys. Empty clusters
+    broadcast attached to every vector (``attach``: 8 matches per
+    probe row — the ann probe shape without a nested loop), assignment
+    is one partitioned window, and the M-step is the (cluster,
+    dim)-grain exact aggregate — k·64 keys. Empty clusters
     drop out identically in both engines."""
     return _kmeans_assign(_train_vecs(spark, sf_dir), iters)
 
@@ -1179,22 +1169,16 @@ def _lloyd_step(
     Returns (scored, assign, means):
     - scored: every pts row against every centroid of its group, + dq
       (the _dist_q fixed-point squared distance); the centroids are
-      tiny and broadcast — on ``keys``, or without keys on the always-1
-      key (_one) so the attach stays a BroadcastHashJoin;
+      tiny and broadcast — joined on ``keys``, or without keys attached
+      to every row (``attach``);
     - assign: (vec_id, *keys, cluster, dq), the argmin per (vec_id,
       *keys) with ties to the lower cluster — one partitioned window;
     - means: (*keys, cluster, cv), the M-step — exact integer means
       (1e6 quantum) at (*keys, cluster, dim) grain collected back into
       dim-ordered arrays. Empty clusters drop out, as in the oracles."""
-    if keys:
-        on, pts_k, cents_k = list(keys), pts, cents
-    else:
-        on = ["_k"]
-        pts_k = pts.withColumn("_k", _one("vd"))
-        cents_k = cents.withColumn("_k", _one("cv"))
-    scored = pts_k.join(F.broadcast(cents_k), on).withColumn(
-        "dq", _dist_q(F.col("vd"), F.col("cv"))
-    )
+    scored = (
+        pts.join(F.broadcast(cents), list(keys)) if keys else attach(pts, cents)
+    ).withColumn("dq", _dist_q(F.col("vd"), F.col("cv")))
     w = Window.partitionBy("vec_id", *keys).orderBy("dq", "cluster")
     assign = (
         scored.withColumn("arn", F.row_number().over(w))

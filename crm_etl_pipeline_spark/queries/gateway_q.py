@@ -72,6 +72,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crm_etl_pipeline_spark.attach import one
 from crm_etl_pipeline_spark.io import table
 from crm_etl_pipeline_spark.registry import query
 
@@ -229,9 +230,9 @@ def credential_rotation_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     dw = Window.partitionBy("day").orderBy("ts", "event_id")
     ranked = ev.withColumn("rn", F.row_number().over(dw))
     counts = ev.groupBy("day").agg(F.count(F.lit(1)).alias("n_d"))
-    # 30-row prefix sum over a constant-but-non-foldable single partition
+    # 30-row prefix sum in one window partition
     pw = (
-        Window.partitionBy(F.least(F.dayofmonth("day"), F.lit(1)))
+        Window.partitionBy(one("day"))
         .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, -1)
     )

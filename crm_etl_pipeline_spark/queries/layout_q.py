@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crm_etl_pipeline_spark import layout, scd, streaming, tmpdirs
+from crm_etl_pipeline_spark.attach import attach
 from crm_etl_pipeline_spark.io import table
 from crm_etl_pipeline_spark.registry import query
 from crm_etl_pipeline_spark.queries.scd_q import _STORE_SQL, _base, _updates
@@ -181,9 +182,7 @@ def zorder_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL and the query RETURNS zval, so the hash certifies the curve
     math bit-exactly cross-engine, plus the unchanged-results contract
     for the rows surviving the 2-D box (day_idx 7..14 × user_id
-    4..50). The min-day anchor is scalar-attached via the non-foldable
-    ``least(greatest(dayofmonth,1),1)`` key (house idiom — a lit(1)
-    key would constant-fold into a BNLJ).
+    4..50). The min-day anchor is scalar-attached (``attach``).
 
     Scale shape: one range-exchange on the z-value at write time
     (identical cost to any sorted layout); reads are footer-pruned
@@ -197,20 +196,9 @@ def zorder_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id long, ts timestamp, user_id long, event_type string, "
             "value double, day_idx int, zval long",
         )
-    anchor = ev.agg(F.min(F.to_date("ts")).alias("min_day")).select(
-        "min_day",
-        F.least(F.greatest(F.dayofmonth("min_day"), F.lit(1)), F.lit(1))
-        .cast("int")
-        .alias("_k"),
-    )
+    anchor = ev.agg(F.min(F.to_date("ts")).alias("min_day"))
     bucketed = (
-        ev.withColumn(
-            "_k",
-            F.least(F.greatest(F.dayofmonth(F.to_date("ts")), F.lit(1)), F.lit(1)).cast(
-                "int"
-            ),
-        )
-        .join(F.broadcast(anchor), "_k")
+        attach(ev, anchor)
         .select(
             "event_id",
             "ts",
@@ -372,36 +360,8 @@ def zorder_incremental_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id long, ts timestamp, user_id long, event_type string, "
             "value double, day_idx int, zval long, seg int",
         )
-    anchor = ev.agg(F.min(F.to_date("ts")).alias("min_day")).select(
-        "min_day",
-        F.least(F.greatest(F.dayofmonth("min_day"), F.lit(1)), F.lit(1))
-        .cast("int")
-        .alias("_k"),
-    )
-    curved = (
-        ev.withColumn(
-            "_k",
-            F.least(F.greatest(F.dayofmonth(F.to_date("ts")), F.lit(1)), F.lit(1)).cast(
-                "int"
-            ),
-        )
-        .join(F.broadcast(anchor), "_k")
-        .select(
-            "event_id",
-            "ts",
-            "user_id",
-            "event_type",
-            "value",
-            F.datediff(F.to_date("ts"), F.col("min_day"))
-            .cast("int")
-            .alias("day_idx"),
-            F.expr(f"user_id div {ZGRAIN_UBUCKET}").alias("u_bucket"),
-        )
-        .withColumn(
-            "zval", layout.zvalue(F.col("day_idx"), F.col("u_bucket")).cast("bigint")
-        )
-        .withColumn("seg", F.shiftright(F.col("zval"), ZSEG_SHIFT).cast("int"))
-        .drop("u_bucket")
+    curved = streaming._curve_columns(
+        ev, ev.agg(F.min(F.to_date("ts")).alias("min_day"))
     )
     store = os.path.join(wd, "events_zseg")
     layout.write_zordered_segments(

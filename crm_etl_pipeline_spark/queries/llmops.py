@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crm_etl_pipeline_spark import lsh
+from crm_etl_pipeline_spark.attach import attach, one
 from crm_etl_pipeline_spark.io import table
 from crm_etl_pipeline_spark.queries.embeddings_q import _fixed_dot_sql
 from crm_etl_pipeline_spark.registry import query
@@ -1557,22 +1558,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # corpus-size scalar attached via a broadcast EQUI-join. The key must
-    # be NON-FOLDABLE: a lit(1) key on both sides gets constant-folded by
-    # Catalyst, which drops the equi-condition and degrades the join to
-    # BroadcastNestedLoopJoin. least(col, 1) is provably 1 on both sides
-    # (tf ≥ 1 by construction, n_docs ≥ 1 on any non-empty corpus) but
-    # depends on a column, so the plan stays a BroadcastHashJoin with a
-    # 1-row build side.
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs")).select(
-        "n_docs", F.least(F.col("n_docs"), F.lit(1)).cast("int").alias("_k")
-    )
+    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     score = F.col("tf") * (F.col("n_docs").cast("double") / F.col("df"))
     w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "tok")
     return (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(n_docs), "_k")
+        attach(tf.join(df, "tok"), n_docs)
         .withColumn("score", score)
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
@@ -1822,7 +1812,7 @@ def token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one explode+groupBy builds the (doc, tok, tf) fact;
     the corpus token histogram re-aggregates that narrow output (never
     the exploded fact twice); the total is a broadcast scalar attached
-    with the non-foldable-key equi-join (see tfidf_top_terms); the final
+    to every token (``attach``); the final
     per-doc agg is map-side combinable. Three shuffles total at any
     corpus size."""
     toks = table(spark, sf_dir, "documents").select(
@@ -1830,12 +1820,9 @@ def token_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     counts = tf.groupBy("tok").agg(F.sum("tf").alias("n_tok"))
-    total = counts.agg(F.sum("n_tok").alias("n_total")).select(
-        "n_total", F.least(F.col("n_total"), F.lit(1)).cast("int").alias("_k")
-    )
+    total = counts.agg(F.sum("n_tok").alias("n_total"))
     rar = (
-        counts.withColumn("_k", F.least(F.col("n_tok"), F.lit(1)).cast("int"))
-        .join(F.broadcast(total), "_k")
+        attach(counts, total)
         .select("tok", (F.length(F.bin(F.expr("n_total div n_tok"))) - F.lit(1)).alias("rarity"))
     )
     return (
@@ -1932,13 +1919,10 @@ def _bm25_scored(stats_src: DataFrame, tf_src: DataFrame, keys: list[str]) -> Da
     matches only and carries dl through the aggregate (dl is
     functionally dependent on the unit — MAX is exact and saves a
     second corpus join); df re-aggregates tf's narrow output; the
-    1-row stats frame attaches as a broadcast on a non-foldable
-    always-1 key (tf >= 1 on every row), so no nested loop."""
+    1-row stats frame attaches as a broadcast (``attach``)."""
     stats = stats_src.agg(
         F.count(F.lit(1)).alias("n_units"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-    ).select(
-        "n_units", "avgdl", F.least(F.col("n_units"), F.lit(1)).cast("int").alias("_k")
     )
     tf = tf_src.groupBy(*keys, "tok").agg(
         F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl")
@@ -1950,9 +1934,7 @@ def _bm25_scored(stats_src: DataFrame, tf_src: DataFrame, keys: list[str]) -> Da
     )
     term_fp = F.floor(idf * satur * F.lit(1000000))
     return (
-        tf.join(df, "tok")
-        .withColumn("_k", F.least(F.col("tf"), F.lit(1)).cast("int"))
-        .join(F.broadcast(stats), "_k")
+        attach(tf.join(df, "tok"), stats)
         .groupBy(*keys)
         .agg(
             F.sum(term_fp).alias("score_fp"),
@@ -2114,7 +2096,7 @@ def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
     the intended divergence: the arm over a NULL-id corpus equals
     bm25_topk_search run on the NULL-stripped corpus."""
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
-    from crm_etl_pipeline_spark.queries.embeddings_q import _emb, _fixed_dot, _one
+    from crm_etl_pipeline_spark.queries.embeddings_q import _emb, _fixed_dot
 
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
     # ONE tokenizing corpus pass: the stats aggregate and the tf
@@ -2140,15 +2122,14 @@ def _hybrid_arm_frames(spark: SparkSession, sf_dir: str):
     ).select("doc_id", "score_fp")
 
     emb = _emb(spark, sf_dir).filter(F.col("vec_id").isNotNull())
-    # the always-1 key (_one) keeps the probe attach a
-    # BroadcastHashJoin, not a nested loop
     probe = emb.filter(F.col("vec_id") == _RRF_PROBE_ID).select(
-        F.col("embedding").alias("qe"), _one("embedding").alias("_k")
+        F.col("embedding").alias("qe")
     )
     dense_scored = (
-        emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce"))
-        .withColumn("_k", _one("ce"))
-        .join(F.broadcast(probe), "_k")
+        attach(
+            emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("ce")),
+            probe,
+        )
         .groupBy("cand_id")
         .agg(F.max(_fixed_dot(F.col("qe"), F.col("ce"))).alias("dotq"))
     )
@@ -2424,18 +2405,16 @@ def rerank_fused_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("quality_bucket")
     )
     ext = feat.agg(
+        # the count leads, so attach keys on it and it stays in the plan:
+        # with only min/max here Catalyst prunes the quality left join
+        # from this branch, a plan change to measure on its own
+        F.count(F.lit(1)).alias("n_cands"),
         F.max("lex_fp").alias("max_lex"),
         F.min("lex_fp").alias("min_lex"),
         F.max("dense_fp").alias("max_dense"),
         F.min("dense_fp").alias("min_dense"),
-        # non-foldable always-1 scalar key (the _attach1 contract); the
-        # no-groupBy agg emits exactly one row even on an empty corpus
-        F.least(F.count(F.lit(1)) + F.lit(1), F.lit(1)).cast("int").alias("_k"),
     )
-    # probe key: rrf_fp >= floor(1e9/110) > 0 on every candidate row
-    normed = _attach1(
-        feat, ext, F.least(F.col("rrf_fp"), F.lit(1)).cast("int")
-    ).select(
+    normed = attach(feat, ext).select(
         "doc_id",
         "lex_rank",
         "dense_rank",
@@ -3143,8 +3122,8 @@ def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     one line-key groupBy whose partial aggregation collapses the heavy
     boilerplate keys map-side (the classic skew case: three keys carry
     30% of rows — AQE skew-join handles the anti-join's build side, and
-    the frequency table itself is tiny), the corpus size attaches via
-    the non-foldable broadcast scalar, and reassembly is one doc-key
+    the frequency table itself is tiny), the corpus size attaches as a
+    broadcast scalar, and reassembly is one doc-key
     aggregate with an in-group sort bounded by lines-per-doc. No
     all-pairs anything: frequency gating IS the scalable form of
     boilerplate detection (RefinedWeb §3.2 runs exactly this at
@@ -3179,16 +3158,9 @@ def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.split(F.col("text"), "\n")).alias("pos0", "line"),
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "line")
     freq = lines.groupBy("line").agg(F.countDistinct("doc_id").alias("n_docs"))
-    tot = docs.agg(F.count(F.lit(1)).alias("n_total")).select(
-        "n_total",
-        F.least(F.greatest(F.col("n_total"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
-    )
+    tot = docs.agg(F.count(F.lit(1)).alias("n_total"))
     boiler_lines = (
-        freq.withColumn(
-            "_k",
-            F.least(F.greatest(F.col("n_docs"), F.lit(1)), F.lit(1)).cast("int"),
-        )
-        .join(F.broadcast(tot), "_k")
+        attach(freq, tot)
         .filter(F.col("n_docs") > 0.05 * F.col("n_total"))
         .select("line")
     )
@@ -3309,21 +3281,10 @@ def language_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.sqrt(F.col("n_docs").cast("double")) * F.lit(1e12)).cast("bigint"),
         )
     )
-    # non-foldable scalar-attach keys (the weighted_sample_allocation
-    # idiom): provably 1 on any non-empty corpus, empty-in/empty-out
-    tot = counts.agg(F.sum("sq_q").alias("z_q")).select(
-        "z_q",
-        F.least(F.greatest(F.col("z_q"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
-    )
+    tot = counts.agg(F.sum("sq_q").alias("z_q"))
     weight = F.col("sq_q").cast("double") / F.col("z_q").cast("double")
     alloc = (
-        # greatest(...,1) first: length('') == 0 would otherwise vanish the
-        # empty-string language from the quota join (the dq_audit_orders
-        # key-vanish pattern — lang is non-NULL here, so the key must be 1)
-        counts.withColumn(
-            "_k", F.least(F.greatest(F.length("lang"), F.lit(1)), F.lit(1)).cast("int")
-        )
-        .join(F.broadcast(tot), "_k")
+        attach(counts, tot)
         .select(
             "lang",
             "n_docs",
@@ -3457,15 +3418,6 @@ _BPE_ORACLE = rf"""
 """
 
 
-def _attach1(df: DataFrame, scalar: DataFrame, probe_key) -> DataFrame:
-    """Attach a broadcast-size frame via an EQUI-join on a non-foldable
-    always-1 key (the tfidf_top_terms / crm_q._scalar_attach idiom: a
-    lit(1) key constant-folds and the join degrades to
-    BroadcastNestedLoopJoin). ``probe_key`` must be provably 1 on every
-    row of ``df``; ``scalar`` must already carry its own ``_k`` = 1."""
-    return df.withColumn("_k", probe_key).join(F.broadcast(scalar), "_k").drop("_k")
-
-
 def _bpe_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trainer family's ONE corpus pass: explode + gate +
     map-side-combined groupBy(word) -> (word, f). Spark twin of the
@@ -3497,28 +3449,23 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     merge_b, pair_count, n_syms), each already carrying its vocab-size
     attach.
 
-    Round-15 reformulation (guide §2.4 "remove shuffles outright",
-    measured 4.6 s -> 2.2 s at sf0.1, bit-identical output): the r13
-    implementation held symbols at (word, pos) grain and ran each merge
-    as FOUR window passes + a self-join + an eager per-iteration
-    checkpoint (7 eager jobs, each sorting the symbol table). Symbols
-    now live as one ARRAY per word and the greedy left-to-right
+    Symbols live as one ARRAY per word, and the greedy left-to-right
     non-overlap merge is a per-row ``aggregate`` fold:
 
       acc ← acc[:-1] ++ [a||b]   if last(acc) = a AND cur = b
       acc ← acc ++ [cur]         otherwise
 
-    This fold IS the gaps-and-islands rule the window version encoded —
-    a merged cell can never be the left side of another merge this
-    iteration because len(a||b) > len(a), so a run of equal candidates
-    merges at odd offsets exactly as ROW_NUMBER() % 2 = 1 did (the
-    oracle's unrolled CTE chain is unchanged and pins the semantics).
-    Per iteration the only shuffle left is the pair-count groupBy (map-
-    side combinable); the merge itself is a broadcast attach + a
-    projection, so only tok0 and the three 1-row winners are ever
-    checkpointed — 4 eager jobs instead of 7, and no vocab-table sorts
-    at all. Word length is gated ≤ 16, so the fold's O(len²) array
-    copies are constant-bounded per row."""
+    This fold is the oracle's gaps-and-islands rule: a merged cell can
+    never be the left side of another merge in the same iteration
+    because len(a||b) > len(a), so a run of equal candidates merges at
+    odd offsets, as the oracle's ROW_NUMBER() % 2 = 1 does. Per
+    iteration the only shuffle is the pair-count groupBy (map-side
+    combinable); the merge itself is a broadcast attach of the 1-row
+    winner plus a projection, so only tok0 and the 1-row winners are
+    checkpointed and the vocab table is never sorted (measured 4.6 s ->
+    2.2 s at sf0.1 against a (word, pos)-grain window form). Word length
+    is gated ≤ 16, so the fold's O(len²) array copies are
+    constant-bounded per row."""
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
 
     tok = reliable_checkpoint(
@@ -3530,7 +3477,6 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
             ).alias("syms"),
         )
     )
-    key1 = F.least(F.size("syms"), F.lit(1)).cast("int")  # provably 1: word length >= 2
     outs: list[DataFrame] = []
     for k in range(1, _BPE_MERGES + 1):
         pairs = (
@@ -3546,29 +3492,20 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.sum("f").alias("cnt"))
         )
-        best = (
+        best = reliable_checkpoint(
             pairs.orderBy(F.col("cnt").desc(), "a", "b")
             .limit(1)
-            .select(
-                "a",
-                "b",
-                F.col("cnt").cast("bigint").alias("cnt"),
-                F.least(F.length("a"), F.lit(1)).cast("int").alias("_k"),
-            )
+            .select("a", "b", F.col("cnt").cast("bigint").alias("cnt"))
         )
-        best = reliable_checkpoint(best)
-        # LEFT join, not _attach1's inner (round-15 ADVICE): on a
-        # degenerate corpus where an iteration finds ZERO pairs (every
-        # word already one symbol), an inner join would EMPTY the
-        # symbol table, while the oracle's tok{k} CTE LEFT JOINs
-        # merge{k} and keeps it. With a/b NULL the fold's CASE
-        # predicate is NULL -> ELSE branch -> every symbol appended
+        # LEFT attach: on a degenerate corpus where an iteration finds
+        # ZERO pairs (every word already one symbol), an inner join
+        # would EMPTY the symbol table, while the oracle's tok{k} CTE
+        # LEFT JOINs merge{k} and keeps it. With a/b NULL the fold's
+        # CASE predicate is NULL -> ELSE branch -> every symbol appended
         # unchanged: the exact no-op merge the oracle encodes.
         # Unreachable on the fixtures (words gated length>=2, diverse
         # pairs) — pinned by test_bpe_train_empty_merge_noop.
-        tok = tok.withColumn("_k", key1).join(
-            F.broadcast(best), "_k", "left"
-        ).drop("_k").select(
+        tok = attach(tok, best, "left").select(
             "word",
             "f",
             F.expr(
@@ -3578,26 +3515,16 @@ def _bpe_train(words: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
                 "ELSE concat(acc, array(s)) END)"
             ).alias("syms"),
         )
-        n_syms = (
-            tok.select(F.explode("syms").alias("sym"))
-            .agg(F.countDistinct("sym").alias("n_syms"))
-            .select(
-                "n_syms",
-                F.least(F.col("n_syms") + F.lit(1), F.lit(1)).cast("int").alias("_k"),
-            )
+        n_syms = tok.select(F.explode("syms").alias("sym")).agg(
+            F.countDistinct("sym").alias("n_syms")
         )
         outs.append(
-            _attach1(
-                best.select(
-                    F.lit(k).cast("int").alias("iter"),
-                    F.col("a").alias("merge_a"),
-                    F.col("b").alias("merge_b"),
-                    F.col("cnt").alias("pair_count"),
-                ),
-                n_syms,
-                # non-foldable: merge_a is data; least(iter, 1) would
-                # constant-fold (iter is a literal) and degrade to BNLJ
-                F.least(F.length("merge_a"), F.lit(1)).cast("int"),
+            attach(best, n_syms).select(
+                F.lit(k).cast("int").alias("iter"),
+                F.col("a").alias("merge_a"),
+                F.col("b").alias("merge_b"),
+                F.col("cnt").alias("pair_count"),
+                "n_syms",
             )
         )
     return tok, outs
@@ -3630,10 +3557,11 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
       frequency (the classic get_stats), winner tiebreak
       (count DESC, a, b);
     - the merge applies greedily left-to-right without overlap,
-      expressed as pure window algebra (gaps-and-islands: consecutive
-      candidate positions form a run; odd run-offsets merge), so both
-      engines compute the SAME deterministic result — no list-fold
-      UDFs, no engine-specific replace() semantics;
+      expressed in the oracle as window algebra (gaps-and-islands:
+      consecutive candidate positions form a run; odd run-offsets
+      merge) and in Spark as the equivalent array fold (_bpe_train), so
+      both engines compute the SAME deterministic result — no UDFs, no
+      engine-specific replace() semantics;
     - _BPE_MERGES is a fixed unrolled budget (the embedding_kmeans
       fixed-iteration precedent) so the whole computation is one
       oracle-able dataflow. Output: one row per iteration — the learned
@@ -3648,13 +3576,12 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     + map-side-combined groupBy(word), scan-bandwidth-bound at 100 TB.
     Everything after runs on the distinct-word table (Heaps' law:
     ~1e6 rows for a web-scale corpus under this alphabet gate), where
-    each iteration is a handful of word-partitioned windows + a tiny
-    global argmax; ``reliable_checkpoint`` after tok0 and each merged
-    tok{k} keeps the unrolled DAG linear instead of exponential (the
-    dedup_components lineage-cut discipline) — each checkpoint is
-    vocab-sized, not corpus-sized. The two 1-row attaches (the learned
-    rule, the vocab-size scalar) ride the non-foldable equi-key idiom
-    so they stay BroadcastHashJoins. The chain itself lives in
+    each iteration is one pair-count aggregate, a tiny global argmax
+    and a per-word array fold; ``reliable_checkpoint`` on tok0 and on
+    each 1-row winner keeps the unrolled DAG linear instead of
+    exponential (the dedup_components lineage-cut discipline). The two
+    1-row attaches (the learned rule, the vocab-size scalar) are
+    ``attach`` broadcasts. The chain itself lives in
     ``_bpe_words`` / ``_bpe_train``, shared with bpe_encode and
     pack_bpe_sequences (which consume the final symbol table this
     query's output only summarizes)."""
@@ -4047,20 +3974,17 @@ def bigram_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-join splitting, which re-plans the hot w1 partitions into
     sub-splits at runtime (the skew_salted_join machinery stands by if
     a decade run ever shows AQE insufficient; the sf10 decade ran
-    calib-clean without it). |V| and the corpus
-    mean attach via the non-foldable always-1 equi-key so the plan
-    stays BroadcastHashJoin. Everything downstream of the scan is
-    grouping and joining on string keys — no Python, no UDFs."""
-    # Round-15 reformulation (guide §2.4, measured 2.2 s -> 1.2 s at
-    # sf0.1, bit-identical): the r12 shape held tokens at (doc, idx)
-    # grain — a posexplode + gate + ROW_NUMBER window + LEAD window —
-    # and that whole pipeline re-ran for each of its FOUR consumers
-    # (bi, uni, the scoring join, |V|). Tokens now stay as one ordered
-    # ARRAY per doc (the gate is an array filter, which preserves order,
-    # so array adjacency IS the renumbered-survivor adjacency the
-    # windows computed), checkpointed once; pairs are a transform over
-    # adjacent elements — zero window sorts, and every consumer starts
-    # from the materialized array table.
+    calib-clean without it). |V| and the corpus mean are ``attach``
+    broadcasts. Everything downstream of the scan is grouping and
+    joining on string keys — no Python, no UDFs."""
+    # Tokens stay as one ordered ARRAY per doc, checkpointed once: the
+    # gate is an array filter, which preserves order, so array adjacency
+    # IS the adjacency of the surviving tokens renumbered after the gate.
+    # Pairs are a transform over adjacent elements — no window sorts —
+    # and all four consumers (bi, uni, the scoring join, |V|) start from
+    # the materialized array table instead of re-running the tokenizer
+    # (measured 2.2 s -> 1.2 s at sf0.1 against a (doc, idx)-grain
+    # window form).
     from crm_etl_pipeline_spark.checkpointing import reliable_checkpoint
 
     docs = _one_per_doc(
@@ -4074,9 +3998,8 @@ def bigram_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("text").isNotNull()).select("doc_id", gated.alias("tt"))
     )
     # greatest(.., 0): a doc with ZERO gated tokens makes size(tt)-1
-    # negative, and slice() REJECTS negative lengths — the old LEAD
-    # window emitted no pair row there and so must this (caught by the
-    # empty_docs sweep batch in this round's targeted re-run)
+    # negative, and slice() REJECTS negative lengths; such a doc has no
+    # pair row, as in the oracle (the empty_docs sweep batch checks it)
     pairs = docs_arr.select(
         "doc_id",
         F.explode(
@@ -4088,16 +4011,11 @@ def bigram_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "p.w1", "p.w2")
     bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     uni = pairs.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    v = (
-        docs_arr.select(F.explode("tt").alias("w"))
-        .agg(F.countDistinct("w").alias("vsz"))
-        .select(
-            "vsz", F.least(F.col("vsz") + F.lit(1), F.lit(1)).cast("int").alias("_k")
-        )
+    v = docs_arr.select(F.explode("tt").alias("w")).agg(
+        F.countDistinct("w").alias("vsz")
     )
-    key1 = F.least(F.length("w1"), F.lit(1)).cast("int")
     scored = (
-        _attach1(pairs.join(bi, ["w1", "w2"]).join(uni, "w1"), v, key1)
+        attach(pairs.join(bi, ["w1", "w2"]).join(uni, "w1"), v)
         .select(
             "doc_id",
             F.expr("((c12 + 1) * 1000000L) div (c1 + vsz)").alias("pq"),
@@ -4108,21 +4026,9 @@ def bigram_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = per_doc.agg(
         (F.sum("s_q").cast("double") / F.sum("n_pairs")).alias("corpus_mean")
-    ).select(
-        "corpus_mean",
-        F.least(F.length(F.col("corpus_mean").cast("string")), F.lit(1))
-        .cast("int")
-        .alias("_k"),
     )
     mean_prob = F.col("s_q").cast("double") / F.col("n_pairs")
-    return _attach1(
-        # NULL-SAFE always-1 probe key: n_pairs is a COUNT(*) over a
-        # group, provably >= 1 on every per_doc row even when doc_id is
-        # NULL — length(doc_id) would be NULL there and the equi-join
-        # would silently drop the group while the oracle's CROSS JOIN
-        # keeps it (round-13 ADVICE close)
-        per_doc, corpus, F.least(F.col("n_pairs"), F.lit(1)).cast("int")
-    ).select(
+    return attach(per_doc, corpus).select(
         "doc_id",
         "n_pairs",
         mean_prob.alias("mean_prob_q"),
@@ -4317,12 +4223,8 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cum_in_group", F.coalesce(F.sum("mean_lr_fp").over(gw), F.lit(0))
     )
     g_tot = w.groupBy("h2").agg(F.sum("mean_lr_fp").alias("g_tot"))
-    # always-1 non-foldable partition key, NULL-safe: length(h2) is NULL
-    # on the NULL-h2 group, so coalesce before least
     pw = (
-        Window.partitionBy(
-            F.least(F.coalesce(F.length("h2"), F.lit(9)), F.lit(1))
-        )
+        Window.partitionBy(one("h2"))
         .orderBy(F.col("h2").asc_nulls_first())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -4339,14 +4241,8 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("h2_o")
         .withColumn("cum_before", F.col("offset") + F.col("cum_in_group"))
     )
-    tot = w.agg(F.sum("mean_lr_fp").cast("bigint").alias("total")).select(
-        "total", F.least(F.col("total"), F.lit(1)).cast("int").alias("_k")
-    )
-    # NULL-SAFE always-1 probe key: n_feat is a COUNT(*) over a group,
-    # provably >= 1 on every weights row even when doc_id is NULL
-    cum = cum.withColumn("_k", F.least(F.col("n_feat"), F.lit(1)).cast("int")).join(
-        F.broadcast(tot), "_k"
-    )
+    tot = w.agg(F.sum("mean_lr_fp").cast("bigint").alias("total"))
+    cum = attach(cum, tot)
     lo = F.when(
         F.col("total") > 0, F.expr(f"cum_before * {_DSIR_K} div total")
     ).otherwise(F.lit(0))

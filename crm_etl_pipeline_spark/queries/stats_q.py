@@ -19,7 +19,7 @@ is bit-identical. No decimal crosses the output edge.
 Scale notes (100 TB): moments are mergeable single-pass aggregates on
 bounded key sets (event types, market segments) broadcast back to the
 fact scan — one wide shuffle nowhere; the histogram's min/max scalar
-attaches via the non-foldable broadcast-equi-join idiom; allocation
+attaches as a broadcast (``attach``); allocation
 sampling ranks within segment partitions (bounded windows) after two
 tiny aggregates."""
 
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crm_etl_pipeline_spark.attach import attach, one
 from crm_etl_pipeline_spark.io import table
 from crm_etl_pipeline_spark.registry import query
 
@@ -147,21 +148,14 @@ def event_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def histogram_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """20-bucket equi-width histogram of order values. The [min, max]
-    extent is one global aggregate attached to the scan via the
-    non-foldable broadcast equi-join (tfidf idiom); bucket index, edges
+    extent is one global aggregate attached to the scan as a broadcast
+    (``attach``); bucket index, edges
     and the final clamp (max lands in the last bucket) are identical
     IEEE double expressions in both engines. Counts shuffle on at most
     20 keys — partial aggregation does nearly all the work map-side."""
     orders = table(spark, sf_dir, "orders")
     ext = orders.agg(
         F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
-    )
-    # day-of-nothing trick unavailable here: derive the non-foldable
-    # always-1 key from lo itself (price >= 900 in fixture and generator,
-    # but only >= is assumed: least(greatest(lo,1),1) is 1 for any lo >= 1)
-    ext = ext.select(
-        "lo", "hi",
-        F.least(F.greatest(F.col("lo"), F.lit(1.0)), F.lit(1.0)).cast("int").alias("_k"),
     )
     # divisor guarded for the degenerate all-equal extent: hi == lo
     # would otherwise raise DIVIDE_BY_ZERO under ANSI (and DuckDB's
@@ -177,10 +171,7 @@ def histogram_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_N_BUCKETS - 1),
     ).cast("bigint")
     base = (
-        orders.withColumn(
-            "_k", F.least(F.greatest(F.col("o_totalprice"), F.lit(1.0)), F.lit(1.0)).cast("int")
-        )
-        .join(F.broadcast(ext), "_k")
+        attach(orders, ext)
         .select(
             bucket.alias("bucket"),
             "lo",
@@ -248,15 +239,7 @@ def weighted_sample_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev"))
     )
-    # non-foldable scalar-attach keys on BOTH sides (tfidf idiom): total
-    # revenue is positive, segment names are non-empty, so each key is
-    # provably 1 yet depends on a column and survives constant folding
-    tot = seg.agg(F.sum("rev").alias("total")).select(
-        "total",
-        F.least(F.greatest(F.col("total").cast("double"), F.lit(1.0)), F.lit(1.0))
-        .cast("int")
-        .alias("_kk"),
-    )
+    tot = seg.agg(F.sum("rev").alias("total"))
     # zero-mass guard: with all order values 0 the revenue total is 0
     # and every share is 0 (allocating nothing), instead of ANSI
     # DIVIDE_BY_ZERO — DuckDB's NaN share path reaches the same empty
@@ -265,8 +248,7 @@ def weighted_sample_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("total") > 0, F.col("rev").cast("double") / F.col("total").cast("double")
     ).otherwise(F.lit(0.0))
     alloc = (
-        seg.withColumn("_kk", F.least(F.length("c_mktsegment"), F.lit(1)).cast("int"))
-        .join(F.broadcast(tot), "_kk")
+        attach(seg, tot)
         .select(
             "c_mktsegment",
             share.alias("rev_share"),
@@ -379,24 +361,8 @@ def dq_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("n_checked"),
         )
 
-    # fk row needs both frames: attach orphans to the scan row via a
-    # non-foldable broadcast key that is 1 on EVERY load — including an
-    # empty one, where least(n, 1) used to read 0 and silently dropped
-    # the fk rule row (empty_orders sweep probe)
-    fk_row = (
-        scan.withColumn(
-            "_k", F.least(F.greatest(F.col("n"), F.lit(1)), F.lit(1)).cast("int")
-        )
-        .join(
-            F.broadcast(
-                orphans.withColumn(
-                    "_k",
-                    F.least(F.greatest(F.col("orphans") + 1, F.lit(1)), F.lit(1)).cast("int"),
-                )
-            ),
-            "_k",
-        )
-    )
+    # the fk row needs both frames: attach orphans to the scan row
+    fk_row = attach(scan, orphans)
     out = (
         rule("orderkey_unique", "dup_keys", scan)
         .unionByName(rule("custkey_fk_resolves", "orphans", fk_row))
@@ -524,35 +490,19 @@ def global_rank_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the knob."""
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     ext = cust.agg(F.min("c_acctbal").alias("lo"), F.max("c_acctbal").alias("hi"))
-    # non-foldable always-1 keys (acctbal may be negative: |lo|+1 >= 1)
-    ext = ext.select(
-        "lo", "hi",
-        F.least(F.greatest(F.abs(F.col("lo")) + 1, F.lit(1.0)), F.lit(1.0))
-        .cast("int")
-        .alias("_k"),
-    )
     width = (F.col("hi") - F.col("lo")) / F.lit(float(_RANK_BUCKETS))
     bucket = F.least(
         F.floor((F.col("c_acctbal") - F.col("lo")) / width),
         F.lit(_RANK_BUCKETS - 1),
     ).cast("int")
-    bucketed = (
-        cust.withColumn(
-            "_k",
-            F.least(F.greatest(F.abs(F.col("c_acctbal")) + 1, F.lit(1.0)), F.lit(1.0))
-            .cast("int"),
-        )
-        .join(F.broadcast(ext), "_k")
-        .select("c_custkey", "c_acctbal", bucket.alias("b"))
-    )
+    bucketed = attach(cust, ext).select("c_custkey", "c_acctbal", bucket.alias("b"))
     in_bucket = Window.partitionBy("b").orderBy("c_acctbal", "c_custkey")
     ranked = bucketed.withColumn("rn", F.row_number().over(in_bucket))
     counts = bucketed.groupBy("b").agg(F.count(F.lit(1)).alias("n_b"))
-    # 32-row prefix sum: the partition key is constant-but-non-foldable,
-    # so the window is a defined single partition over exactly 32 rows —
-    # the entire serial section of the algorithm
+    # 32-row prefix sum in one window partition: the entire serial
+    # section of the algorithm
     pw = (
-        Window.partitionBy(F.least(F.col("b") + 1, F.lit(1)))
+        Window.partitionBy(one("b"))
         .orderBy("b")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -606,9 +556,7 @@ def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     fracs = F.array(
         *[F.lit(x / _DEPTH_BUCKETS) for x in range(1, _DEPTH_BUCKETS)]
     )
-    cuts = orders.agg(F.percentile("o_totalprice", fracs).alias("qs")).select(
-        "qs", F.least(F.size("qs"), F.lit(1)).cast("int").alias("_k")
-    )
+    cuts = orders.agg(F.percentile("o_totalprice", fracs).alias("qs"))
     bucket = (
         F.lit(1)
         + F.aggregate(
@@ -618,11 +566,7 @@ def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).cast("int")
     return (
-        orders.withColumn(
-            "_k",
-            F.least(F.greatest(F.col("o_totalprice"), F.lit(1.0)), F.lit(1.0)).cast("int"),
-        )
-        .join(F.broadcast(cuts), "_k")
+        attach(orders, cuts)
         .select(bucket.alias("bucket"), "o_totalprice")
         .groupBy("bucket")
         .agg(
@@ -754,29 +698,25 @@ def pps_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_day = w.withColumn("cum_in_day", F.coalesce(F.sum("w_cents").over(dw), F.lit(0)))
     day_tot = w.groupBy("o_orderdate").agg(F.sum("w_cents").alias("d_tot"))
     pw = (
-        Window.partitionBy(F.least(F.dayofmonth("o_orderdate"), F.lit(1)))
+        Window.partitionBy(one("o_orderdate"))
         .orderBy("o_orderdate")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = day_tot.select(
         "o_orderdate", F.coalesce(F.sum("d_tot").over(pw), F.lit(0)).alias("offset")
     )
-    tot = w.agg(F.sum("w_cents").alias("total")).select(
-        "total", F.least(F.col("total"), F.lit(1)).cast("int").alias("_k")
+    tot = w.agg(F.sum("w_cents").alias("total"))
+    cum = attach(
+        in_day.join(F.broadcast(offsets), "o_orderdate").withColumn(
+            "cum_before", F.col("offset") + F.col("cum_in_day")
+        ),
+        tot,
     )
-    cum = (
-        in_day.join(F.broadcast(offsets), "o_orderdate")
-        .withColumn("cum_before", F.col("offset") + F.col("cum_in_day"))
-        .withColumn("_k", F.least(F.col("w_cents"), F.lit(1)).cast("int"))
-        .join(F.broadcast(tot), "_k")
-    )
-    # zero-mass guard: a population whose weights sum to 0 has no PPS
-    # sample (every inclusion probability is 0) — lo == hi drops all
-    # rows instead of ANSI DIV-by-zero. Reachable: zero-value orders
-    # drop individually at the w_cents >= 1 attach key, but an ALL-zero
-    # load makes the total itself 0 while tot's _k (least(0,1) = 0)
-    # still matches the rows' _k. DuckDB reaches the same empty result
-    # via NULL integer division.
+    # an order with w_cents <= 0 has hi <= lo, so the hi > lo filter
+    # drops it. Zero-mass guard: a population whose weights sum to 0
+    # (or less) has no PPS sample — lo == hi == 0 drops every row
+    # instead of an ANSI DIV-by-zero; DuckDB reaches the same empty
+    # result via NULL integer division.
     lo = F.when(
         F.col("total") > 0, F.expr(f"cum_before * {_PPS_K} DIV total")
     ).otherwise(F.lit(0))
@@ -834,7 +774,7 @@ def chi_square_segment_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: three partial-aggregating groupBys over the same scan
     (25-key, 5-key, scalar) — map-side combine collapses each to near
     nothing; the marginals attach back to the 125-row cell table via
-    broadcast joins and the non-foldable scalar idiom. At 100 TB this
+    broadcast joins and ``attach``. At 100 TB this
     is three tiny shuffles and zero wide ones."""
     cust = table(spark, sf_dir, "customer")
     cells = cust.groupBy("c_nationkey", "c_mktsegment").agg(
@@ -842,21 +782,15 @@ def chi_square_segment_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows_t = cust.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_row"))
     cols_t = cust.groupBy("c_mktsegment").agg(F.count(F.lit(1)).alias("n_col"))
-    # non-foldable scalar attach (tfidf idiom): counts are >= 1, so the
-    # derived key is provably 1 yet survives constant folding
-    tot = cust.agg(F.count(F.lit(1)).alias("n_total")).select(
-        "n_total",
-        F.least(F.greatest(F.col("n_total"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
-    )
+    tot = cust.agg(F.count(F.lit(1)).alias("n_total"))
     expected = F.col("n_row").cast("double") * F.col("n_col") / F.col("n_total")
     return (
-        cells.join(F.broadcast(rows_t), "c_nationkey")
-        .join(F.broadcast(cols_t), "c_mktsegment")
-        .withColumn(
-            "_k",
-            F.least(F.greatest(F.col("observed"), F.lit(1)), F.lit(1)).cast("int"),
+        attach(
+            cells.join(F.broadcast(rows_t), "c_nationkey").join(
+                F.broadcast(cols_t), "c_mktsegment"
+            ),
+            tot,
         )
-        .join(F.broadcast(tot), "_k")
         .select(
             "c_nationkey",
             "c_mktsegment",
@@ -974,26 +908,19 @@ def benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence a DQ pipeline would alert on.
 
     Scale shape: a 9-key groupBy (all partial map-side) + the
-    non-foldable scalar total; one scan, one tiny shuffle."""
+    attached scalar total; one scan, one tiny shuffle."""
     digits = table(spark, sf_dir, "orders").select(
         F.substring(F.floor(F.col("o_totalprice")).cast("long").cast("string"), 1, 1)
         .alias("first_digit")
     )
     counted = digits.groupBy("first_digit").agg(F.count(F.lit(1)).alias("n_orders"))
-    tot = digits.agg(F.count(F.lit(1)).alias("n_total")).select(
-        "n_total",
-        F.least(F.greatest(F.col("n_total"), F.lit(1)), F.lit(1)).cast("int").alias("_k"),
-    )
+    tot = digits.agg(F.count(F.lit(1)).alias("n_total"))
     bexp = F.lit(None).cast("double")
     for d in range(9, 0, -1):
         bexp = F.when(F.col("first_digit") == str(d), F.lit(_BENFORD[d - 1])).otherwise(bexp)
     share = F.col("n_orders").cast("double") / F.col("n_total")
     return (
-        counted.withColumn(
-            "_k",
-            F.least(F.greatest(F.col("n_orders"), F.lit(1)), F.lit(1)).cast("int"),
-        )
-        .join(F.broadcast(tot), "_k")
+        attach(counted, tot)
         .select(
             "first_digit",
             "n_orders",
@@ -1135,7 +1062,7 @@ def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries, deterministic so the oracle can replay the semantics);
     (2) exact DECIMAL prefix sums inside each bounded bucket partition;
     (3) the 32 per-bucket totals prefix-sum (descending) into offsets
-    on a constant-keyed 32-row window — the entire serial section;
+    in one 32-row window partition — the entire serial section;
     (4) cum = offset + in-bucket prefix, still exact DECIMAL, one
     double division at the edge. The ORACLE runs the naive global
     window — the hash match proves the decomposition. Ties cannot
@@ -1149,21 +1076,12 @@ def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext = rev.agg(
         F.min(rd).alias("lo"), F.max(rd).alias("hi"), F.sum("r").alias("total")
     )
-    # revenues are positive (extendedprice > 0), so lo >= 1 keys the attach
-    ext = ext.select(
-        "lo", "hi", "total",
-        F.least(F.greatest(F.col("lo"), F.lit(1.0)), F.lit(1.0)).cast("int").alias("_k"),
-    )
     width = (F.col("hi") - F.col("lo")) / F.lit(float(_ABC_BUCKETS))
     bucket = F.least(
         F.floor((rd - F.col("lo")) / width), F.lit(_ABC_BUCKETS - 1)
     ).cast("int")
-    bucketed = (
-        rev.withColumn(
-            "_k", F.least(F.greatest(rd, F.lit(1.0)), F.lit(1.0)).cast("int")
-        )
-        .join(F.broadcast(ext), "_k")
-        .select("l_partkey", "r", F.col("total").alias("total"), bucket.alias("b"))
+    bucketed = attach(rev, ext).select(
+        "l_partkey", "r", F.col("total").alias("total"), bucket.alias("b")
     )
     in_bucket = (
         Window.partitionBy("b")
@@ -1172,10 +1090,10 @@ def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with_prefix = bucketed.withColumn("local_cum", F.sum("r").over(in_bucket))
     totals = bucketed.groupBy("b").agg(F.sum("r").alias("r_b"))
-    # 32-row descending prefix over a constant-but-non-foldable key:
-    # buckets ABOVE b (higher revenue) contribute the offset
+    # 32-row descending prefix in one window partition: buckets ABOVE b
+    # (higher revenue) contribute the offset
     pw = (
-        Window.partitionBy(F.least(F.col("b") + 1, F.lit(1)))
+        Window.partitionBy(one("b"))
         .orderBy(F.col("b").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )

@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crm_etl_pipeline_spark import scd
+from crm_etl_pipeline_spark.attach import attach
 
 PROCESS_TYPES = ("purchase", "signup")  # plays item.update/item.create
 DLQ_THRESHOLD = 10  # failed_attempts >= 10 → dead letter
@@ -798,19 +799,18 @@ def late_arrival_audit_stream(spark: SparkSession, sf_dir: str, workdir: str) ->
 
 
 def _curve_columns(ev: DataFrame, anchor: DataFrame) -> DataFrame:
-    """Curve-position columns for the Z-ordered event store — the SAME
-    arithmetic as layout_q.zorder_incremental_compact's batch path (the
-    store contract: a row's curve position is a function of the row and
-    the store's anchor metadata, never of which ingest path carried
-    it). ``anchor`` is the one-row (min_day, _k=1) frame the store was
-    created with; joined as a broadcast so no driver-side collect ever
-    happens, batch or micro-batch."""
+    """Curve-position columns for the Z-ordered event store, shared by
+    the batch path (layout_q.zorder_incremental_compact) and the
+    streaming ingest below — the store contract: a row's curve position
+    is a function of the row and the store's anchor metadata, never of
+    which ingest path carried it. ``anchor`` is the one-row (min_day)
+    frame the store was created with; attached as a broadcast so no
+    driver-side collect ever happens, batch or micro-batch."""
     from crm_etl_pipeline_spark import layout
     from crm_etl_pipeline_spark.queries.layout_q import ZGRAIN_UBUCKET, ZSEG_SHIFT
 
     return (
-        ev.withColumn("_k", F.lit(1).cast("int"))
-        .join(F.broadcast(anchor), "_k")
+        attach(ev, anchor)
         .select(
             "event_id",
             "ts",
@@ -928,9 +928,7 @@ def zorder_ingest_stream(spark: SparkSession, sf_dir: str, workdir: str) -> str 
     ev = table(spark, sf_dir, "events")
     if ev.isEmpty():
         return None
-    anchor = ev.agg(
-        F.min(F.to_date("ts")).alias("min_day"), F.lit(1).cast("int").alias("_k")
-    )
+    anchor = ev.agg(F.min(F.to_date("ts")).alias("min_day"))
     curved = _curve_columns(ev, anchor)
 
     store = os.path.join(workdir, "events_zseg")

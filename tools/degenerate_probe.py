@@ -1,291 +1,25 @@
-"""Degenerate-input sweep: run division/sqrt/emptiness-sensitive queries
-on mutated copies of the sf0.01 tables and compare full canonicalized
-output Spark-vs-DuckDB (the FIXTURES.md §6 methodology).
+"""Degenerate-input sweep: run division-, sqrt- and emptiness-sensitive
+queries on mutated copies of the sf0.01 tables and compare the full
+canonicalized output of Spark against the DuckDB oracle (the
+FIXTURES.md §6 methodology).
 
-Each probe copies (symlinks) the sf0.01 fixture directory, rewrites one
-table with a degenerate shape — constant/zero columns, empty or
-all-unique text, zero-norm vectors, single-row tables, malformed JSON —
-and asserts both engines produce identical canonical rows (or both
-fail). Crashes/divergences print loudly; "OK" means bit-agreement.
+Each entry of ``PROBES`` is one batch: a name, a ``{table: mutator}``
+map and the queries to run. A batch builds its fixture in
+``/tmp/deg_<name>`` (the sf0.01 files symlinked, each mutated table
+rewritten with a degenerate shape: constant or zero columns, empty or
+all-unique text, zero-norm vectors, single-row or empty tables, NULL or
+colliding ids, malformed JSON, ...), then runs every listed query in
+both engines. ``OK`` means the canonical rows agree bit for bit; a
+divergence or a crash on either side prints loudly and counts as
+non-OK. The exit status is 1 when any probe is non-OK.
 
-Run from the repo root:  python tools/degenerate_probe.py
-(optionally pass batch names to run a subset: `python
-tools/degenerate_probe.py dup_events const_ts`). ~23 min at 56 probe
-batches / 615 query runs; needs an otherwise-idle Spark, like any
-measurement run. Round-11 growth: skew_salted_join joined its nine
-hazard batches (collision/dup/extreme/null/empty/category-collapse),
-xml_source_roundtrip joined the three wire-format batches, and the NEW
-control_char_props batch (x4) certifies the XML-1.0 character
-boundary: CSV/JSON/ORC carry C0 control characters verbatim while the
-XML export's validate-or-quarantine gate drops exactly the rows its
-oracle regex drops (430/500 survived, hash-identical cross-engine).
-The 11 touched batches ran 159/159 OK at the round-11 registration
-HEAD. Round-11(b): variant_props_shred joined its seven hazard batches
-(bad_props, nasty_text, control_char_props, null_types, const_etype,
-null_user_ids, empty_events) — its k extraction is gated on
-schema_of_variant(k) == 'BIGINT' precisely so the garbage-payload
-shapes ("12", 1.5, out-of-int64 numbers) NULL identically in both
-engines, and a NULL envelope (NULL props/user_id concat) counts as
-malformed on both sides (e IS NULL OR NOT json_valid(e), since
-DuckDB's NOT json_valid(NULL) is NULL, not TRUE).
-The catalog dims were then given their first mutators —
-empty_supplier (x5) and empty_region (x5) — closing that precedent
-gap: the recursive walk stops at depth 2 on an empty leaf frontier
-(31 rows) and keeps ONLY the root when every app is orphaned by an
-empty region (1 row), identically cross-engine; 10/10 OK. Round-12
-growth: ann_recall_selfcheck joined the 7 both-IVF embedding batches —
-dup_embs found its first-draft oracle multiplying hits past n_exact
-(inner join vs Spark's left_semi under duplicate (query, cand) pairs;
-closed with EXISTS semi-join semantics) — and bpe_merge_training
-joined 9 document batches, where whitespace_storm found the
-Java-vs-RE2 whitespace-class divergence its own comment predicts
-(\x0B is Java \s but not RE2 \s; closed by spelling the explicit
-ASCII class in both engines). 18 batches / 196 probes re-ran OK at
-the round-12 mid-round HEAD after the advice/recall/triangle changes;
-the FULL 58-batch / 651-probe pass then ran 651/651 OK at the closing
-HEAD. Round-13(d): the NEW null_doc_ids batch (x21) probes the
-identity-ABSENT class the round-12 ADVICE named (NULL doc_id every
-10th row) and found the NULLS-placement divergence class three times
-(pack_training_sequences, pack_bpe_sequences,
-language_temperature_sample: Spark's ASC default is NULLS FIRST,
-DuckDB's is NULLS LAST — both engines now spell NULLS FIRST) plus a
-null-key join drop (boilerplate_line_removal's assembly joins, now
-null-safe in both engines); 21/21 OK after the fixes, with the
-round-13 ADVICE close (bigram's n_pairs attach key) passing its first
-real NULL-id probe. Its negative_doc_ids sibling (x21,
-every 10th id negated — the div/%%-sign and pmod-range class) ran
-21/21 OK with no fix needed: the sign-sensitive spots were already
-guarded (abs() on the streaming chunk key, truncation-consistent %%
-fabrications, sign-stable md5 rank strings).
-The null_vec_ids twin (x15) found the
-NULLS-placement class a THIRD time — the kmeans/PQ seed hash-rank
-windows trained the two engines on different seed vectors under a
-NULL-id winner row; every seed window now spells NULLS FIRST in both
-engines (15/15 OK after the fix).
-The follow-up registry-wide
-placement audit spelled NULLS FIRST at the two remaining unspelled
-hash-rank windows and found the class's SECOND ORDER on
-sample_stratified_hashrank (complete (md5,id) ties under duplicate
-NULL ids split arbitrarily per engine when the output carries
-row-distinguishable payload) — closed with a text tiebreak,
-probe-certified on null_doc_ids and id_collision_docs.
-The events axis closed the campaign:
-null_event_ids (x23) ran clean, but its COMPOSITION with the const_ts
-tie storm (const_ts_null_ids, x16) found the placement class a FOURTH
-time — fifo_head's LIMIT cut, the SCD2 version windows (both
-directions; DESC defaults disagree mirrored), and the transition
-matrix's lag sequence; closed by spelling placement to Spark's
-defaults plus payload tiebreaks where output distinguishes tied rows
-(16/16 OK after; scd family + 4 sibling batches re-ran green).
-The orders composition
-(zero_prices_null_okeys, x12) found it twice more — the keyset page
-cut (closed by the keyset contract: pagination keys are total and
-non-NULL) and the order-gap lag chain (placement spelled); 12/12 OK
-after. Round-13: the whitespace_storm batch gained three
-trailing-line-terminator frames (U+0085/U+2028/U+2029 glued to token
-ends — the Java-$-vs-RE2-$ anchor class the round-12 ADVICE named;
-closed by the shared \z-anchored _TOKEN_GATE_RE) and ran 11/11 OK on
-the extended frames; the four round-13 registrations joined their
-families — bpe_encode + pack_bpe_sequences (11 batches, 22/22 OK),
-bpe_subword_vocab (11 batches, 11/11 OK), and
-streaming_incremental_dedup (12 batches incl. unique_docs and
-one_document, 12/12 OK — its NULL-hash anti-join contract was closed
-at registration before the null_text probe ran). Round-12(b): the NEW mega_doc batch (x21) probes the
-pathological-page-size class (one ~130 KB document, 50-100x the
-fixture median, with an over-gate token and a 10k-char line) — 21/21
-OK, with the per-row grains genuinely stressed (span mining 16,070
-rows vs 4,089 baseline) and a measured harness boundary documented at
-the mutator (DuckDB's list-formulated minhash oracle OOMs near 1.2 MB
-docs while the Spark side stays row-grain bounded). Round-10 certification: **599/599 OK at the round-10
-final HEAD** (all 55 batches, full pytest green in the same session).
-The round's sweep history: the pre-collision registry ran 506/506
-then 524/524 then 558/558 OK; the FIVE new identity-collision batches
-(same id, DIFFERENT payload — the cross-shard ingest hazard where id
-identity and content identity disagree) found the round-10 divergence
-class twice: id_collision_docs (×18) broke four identity-grain
-document pipelines (minhash signature collapse unioned two texts'
-shingles, packing's lay-down order tied, curation's survivor
-semi-join resurrected both contents, boilerplate merged two
-documents' lines — closed by the llmops._one_per_doc winner rule,
-mirrored in the oracles) and id_collision_embs (×14) tied the
-k-means/PQ hash-rank seed orderings so the engines trained on
-different seed vectors (closed by embeddings_q._one_per_vec, a
-MIN-aggregate winner — safe there ONLY because vd is never NULL:
-struct MIN with a NULL field itself diverges cross-engine, which is
-why the docs winner stays a NULLS FIRST window). id_collision_events
-(×20) ran clean with NO fix needed — the (ts, event_id, value)-keyed
-event pipelines were already collision-deterministic.
-id_collision_orders (×16) also ran clean, and id_collision_customer
-(×25) found the class a THIRD time: customer is the CRM item table,
-so a collided c_custkey fanned out flagship's customer join (its
-plain count split from the oracle's COUNT(DISTINCT) — closed by a
-deterministic MIN-segment winner per key) and put two base rows
-behind one (item_id, BASE_TS, 0) version identity with different
-values — an untiebreakable version-order coin flip, closed by making
-scd.scd2_apply's identity collapse a deterministic per-column MIN
-winner (the same shuffle the old subset-dropDuplicates paid, which
-itself picked an ARBITRARY survivor — a latent Spark-side
-nondeterminism), mirrored by MIN(value) GROUP BY identity in
-_STORE_SQL (subsumes the round-8 DISTINCT). The final pass also
-covers the earlier round-10 additions
-(null_component_embeddings ×14, utf8_ingest_quarantine in 7 document
-batches, streaming_zorder_ingest in empty_events + const_ts). The round-9 extreme_values batch (×13: ±8.8e13
-values + one 9.9e15 row) found THREE more cross-engine classes, all
-fixed with clean-fixture no-ops
-(tests/test_stats.py::test_extreme_magnitude_contract): DuckDB's
-DECIMAL(18)x(18) int64 fast-path multiply overflow (moments oracles
-widen one factor to DECIMAL(19,2)), DuckDB's DECIMAL->DOUBLE
-double-rounding past 2^53 scaled units (oracles route the edge cast
-through VARCHAR — the string parse is correctly rounded, matching
-Spark's BigDecimal cast), and the backoff ladder's
-CAST(FLOOR(garbage) AS INT) overflow (mod in wide arithmetic before
-the narrow cast). Last certified full pass (round 9 final HEAD, after
-the rate-limit running-count rewrite, the fabricate-media width fix,
-the zorder_incremental_compact registration, the MP4 elst edit-list
-revision, the non-finite-embedding contract, and the round-9 batch
-growth — dup_events +3: credential_rotation_schedule,
-backoff_penalty_audit, streaming_rate_limit under the count-sensitive
-gateway contract; empty_events and const_ts each
-+zorder_incremental_compact; NEW nan_inf_embeddings batch ×14, which
-found the round-9 crash class: ONE NaN/Inf component killed all 13
-embedding queries in both engines until the _emb non-finite exclusion
-extended the NULL-vector contract; extreme_values ×13 as described
-above): **484/484 OK** (full pytest suite, 342 green, running
-concurrently — the sweep is a correctness harness, not a timing
-one). The prior certification (late round 8 final HEAD,
-after the PQ/audio registrations, the tie-storm + category-collapse +
-unicode + whitespace batches, and the variance-clamp + casefold +
-whitespace-class + Arrow-boundary timestamp fixes) was **452/452 OK** (with the full pytest suite, 334
-green, running concurrently — the sweep is a correctness harness, not
-a timing one); the 50-query round-8 window re-simulated 50/50
-full-hash green at the same HEAD. The prior
-round-8 certification was **331/331 OK** — all batches, including
-the round-8 additions: the empty_string_langs probe, the CSV sentinel
-values in nasty_text, empty-table probes over the four round-8
-registrations (partition_evolution_regrain, scd2_expire_versions,
-multimodal_mp4_seek_plan, zorder_range_scan), and the three
-at-least-once duplication batches (dup_events ×14, dup_docs ×27,
-dup_embs ×13). The const_ts tie-storm batch (×23, added right after
-that pass) ran batch-level 23/23 OK at the same HEAD — every
-window/sort holds its deterministic (ts, event_id) tiebreaker under
-total ordering collapse (354 total). The late-round-8 registrations
-joined their family batches and ran batch-level OK at their
-registration HEADs: ann_pq_adc in five embedding batches (tiny/
-zero_vec/null_embeddings/dup_embs/empty_embeddings, 5/5 OK) and
-audio_energy_windows in three document batches (empty_documents/
-one_document/dup_docs, 3/3 OK — the dup_docs run exercising the
-doc_id identity dedup that keeps per-FILE window reductions and the
-oracle's GROUP BY in agreement). The three late-round-8 tie-storm
-batches — const_text (every document identical: one mega shingle
-bucket far over BUCKET_CAP, certifying the capped star-pair path
-cross-engine at sweep level for the first time), const_vec (every
-embedding identical: total ordering collapse in every distance
-ranking, one k-means/IVF/PQ cell), and const_values (every event
-value constant: all-equal-population variances) — ran batch-level
-38/38 OK after fixing the ONE real bug const_vec found:
-embedding_standardize's E[x²]−mean² variance leaves a ±1e-18 double
-residual on a constant dimension, and DuckDB sqrt RAISES on the
-negative side while Spark NaNs past the ==0 guard — closed by the
-symmetric sqrt(greatest(0, ·)) clamp in all three queries of the
-class (event_value_anomalies and streaming_moments_anomalies carried
-the same unclamped shape;
-tests/test_stats.py::test_constant_population_zscore_contract). Two
-further collapse batches ran 12/12 OK at the same HEAD: const_etype
-(every event one type — single-step funnels, probability-1 transition
-self-loops, empty DLQ/routing complements) and const_label (one
-embedding class — purity exactly 1, zero kNN disagreement). The
-unicode_text batch (CJK, emoji+ZWJ, combining marks, Turkish dotted/
-dotless i, Greek capitals incl. word-final sigma, RTL, full-width
-forms — 16 text-family queries) found ONE real divergence:
-exact-dedup's content hashes differed on İ because Spark lower() is
-Java toLowerCase (SpecialCasing İ → i+U+0307, context-sensitive
-Final_Sigma Σ → ς) while DuckDB's is the per-codepoint simple
-mapping — closed by the _casefold pre-translation of the only two
-divergent codepoints at every lower() site (exact/incremental dedup
-hashing, BPE token counting;
-tests/test_llmops.py::test_casefold_simple_mapping_contract); 16/16
-OK after the fix. Its whitespace_storm sibling (vertical tab, NBSP,
-form-feed/CR runs, framing storms — 9 queries) found the THIRD
-real round-8-late divergence: Java's regex \s includes \x0B while
-RE2's does not, so the dedup normalization and the BPE class now
-spell the whitespace set explicitly (_WS_CLASS;
-tests/test_llmops.py::test_whitespace_class_contract); 9/9 OK after
-the fix. The crlf_docs sibling (Windows \r\n line endings across the
-line-grain family — the trailing \r survives in line hashes
-identically, the normalization collapses both chars) ran 6/6 OK at
-the same HEAD. The far_future_ts batch (ONE event stamped year 2400,
-past pandas' datetime64[ns] ceiling) found the FOURTH real late-round
-bug: the EWMA input and the stateful-session OUTPUT crossed the
-Arrow/pandas boundary as timestamps, so one clock-skew row killed the
-whole stage (ArrowInvalid out-of-bounds ns cast) — closed by carrying
-epoch-micros (int64) across every applyInPandas boundary and
-converting back JVM-side (the quarantine philosophy: one bad row is
-never the task;
-tests/test_streaming.py::test_clock_skew_event_survives_pandas_boundary);
-9/9 OK after the fix, with the skew row processed correctly in both
-engines. 452 total.
+Run from the repo root:
 
-Findings to date (all fixed, each with a pinned regression test):
-pearson/cosine/mom_growth ANSI 0/0 crashes, props extractor
-malformed-JSON crash + quoted-number oracle coercion; round 7 extended
-the sweep to the streaming/multimodal/gateway/WAP families and found
-the rate-limit stream's None+int crash on an empty events table
-(tests/test_streaming.py::test_rate_limit_stream_empty_fixture) and
-the A/B readout's empty-arm DIVIDE_BY_ZERO
-(tests/test_stats.py::test_ab_empty_arm_reads_null); the WAP roundtrip
-gained its designed empty-batch-rejection contract. The empty-table
-probes (embeddings/orders/lineitem) then found the dq-audit fk-row
-vanish + NULL sums and the cube-of-empty cross-engine divergence
-(tests/test_stats.py::test_empty_load_audit_and_cube_agree); the
-null_embeddings probe found 5 vector-family divergences, closed by the
-NULL-vector exclusion contract (embeddings_q._emb + symmetric oracle
-predicates, test_null_embedding_rows_are_excluded_everywhere). Round 8:
-the empty_events probe found partition_evolution_regrain's
-schema-inference crash on a file-less partitioned store (fixed by the
-empty-in/empty-out short-circuit,
-tests/test_layout.py::test_regrain_query_empty_events_contract), and
-the dup_events batch (at-least-once delivery: byte-identical re-sends)
-found the SCD2-store oracle minting a second version for a duplicated
-delivery while scd2_apply's identity-dedup collapsed it — 4 family
-divergences closed by the symmetric DISTINCT in _STORE_SQL
-(tests/test_scd.py::test_duplicate_delivery_mints_no_second_version);
-the dup_docs twin batch found 3 more: the minhash/lsh_bucket_profile
-oracles double-counted a duplicated document's bands (Spark's
-groupBy(doc_id) collapses them — oracle gained the mirroring
-DISTINCT), multimodal_byte_dedup join-exploded duplicated canon ids
-(both sides now dedup on the doc_id identity), and
-boilerplate_line_removal doubled every LINE of a duplicated document's
-reassembled text (identity dedup at the head of both sides — a real
-curation-correctness bug, not just a count skew); the dup_embs batch
-found 2 more: the kmeans oracle's grouped distance SUM doubled a
-duplicated vector's dq (and its M-step weight) while Spark's per-row
-expression didn't, and embedding_near_dup's bucket membership
-join-exploded — both closed with the vec_id identity dedup on both
-sides (Spark dropDuplicates + oracle DISTINCT).
-Round-14: the two new registrations joined all 10 embedding batches
-(semantic_dedup and ann_ivf_incremental_index, 20 memberships, incl.
-const_vec exercising semantic_dedup's >cap star path on a 584-member
-cell and empty_embeddings its empty-bootstrap return). The
-incremental-index probe immediately found the round-14 divergence
-class: _ASSIGN_SQL's argmin ran over residuals SUMMED ACROSS a
-collided id's payload rows (GROUP BY vec_id, label) while Spark's
-_ivf_assign window argmins per row — a latent split in the whole
-certified IVF family that never surfaced because collided vectors
-don't reach any probe's top-3 on this fixture (verified: 9/16
-collided ids flip cells between the two grains). Closed by spelling
-the row grain in the oracle (GROUP BY vec_id, embedding, label — a
-no-op on collision-free data); the 10 batches re-ran 170/170 OK and
-the IVF family re-joined the round-14 driver window on the new bytes.
-Round-14(b): the three mid-round registrations joined their families —
-hybrid_rank_fusion across BOTH axes (20 batches: 10 document + 10
-embedding — the first two-table query in the sweep; 20/20 OK at
-registration), dsir_importance_resample (12 batches incl. the
-null_langs/empty_string_langs lang axis its target slice depends on;
-12/12 OK — its NULL-id offset join was born null-safe, applying the
-round-13 boilerplate find at registration), and dedup_cluster_keep_best
-(10 document batches, 10/10 OK — the composed recursive chain is the
-certified dedup_components text verbatim via md5-pinned
-_COMPONENTS_CTES).
+    python tools/degenerate_probe.py                      # every batch
+    python tools/degenerate_probe.py dup_events const_ts  # named batches
+
+A full sweep takes ~25 min; it needs an otherwise idle Spark, like any
+measurement run.
 """
 
 from __future__ import annotations
@@ -633,9 +367,9 @@ def null_doc_ids(tbl):
     # NULL document identity (round 13 — the hazard the round-12 ADVICE
     # named with no covering batch): every 10th doc_id becomes NULL
     # while the text stays. NULL ids stress three distinct contracts:
-    # (a) always-1 attach keys derived from doc_id (NULL key silently
-    # drops the group from an inner equi-join while a CROSS JOIN oracle
-    # keeps it — the bigram corpus-mean class, fixed to key on n_pairs);
+    # (a) join keys derived from doc_id (a NULL key silently drops the
+    # group from an inner equi-join while a CROSS JOIN oracle keeps it —
+    # the bigram corpus-mean class; ``attach`` keys are never NULL);
     # (b) identity-grain loaders (_one_per_doc / _DOCS_ONE_SQL window a
     # NULL partition — all NULL-id rows collapse to ONE winner in both
     # engines, an aggressive but symmetric identity rule); (c) any
