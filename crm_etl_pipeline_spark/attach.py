@@ -35,6 +35,7 @@ def attach(df: DataFrame, small: DataFrame, how: str = "inner") -> DataFrame:
     empty, with ``small``'s columns NULL."""
     return (
         df.withColumn("_k", one(df.columns[0]))
+        # small is bounded by the caller (a total, an extent, k centroids, a top-k)
         .join(F.broadcast(small.withColumn("_k", one(small.columns[0]))), "_k", how)
         .drop("_k")
     )

@@ -24,7 +24,7 @@ def build_catalog(spaces: DataFrame, apps: DataFrame, exclude_space: str | None 
     be excluded by name (`PodioApiWrapper.py:254`). ``spaces`` must
     have (space_id, space_name); ``apps`` (app_id, app_name, space_id).
     """
-    out = apps.join(F.broadcast(spaces), "space_id")
+    out = apps.join(spaces, "space_id")
     if exclude_space is not None:
         out = out.filter(F.col("space_name") != F.lit(exclude_space))
     return out.select(
@@ -53,9 +53,12 @@ def build_catalog_with_fields(
 
     Scale: fields ⋈ (apps ⋈ spaces) — both upper levels are broadcast
     (genuinely constant-size metadata), so the whole sync is one
-    shuffle-free job regardless of field count.
+    shuffle-free job regardless of field count. Catalyst's estimate
+    already broadcasts spaces into apps; the two-level frame carries a
+    hint so that it, not the fields scan, is the build side.
     """
     two_level = build_catalog(spaces, apps, exclude_space=exclude_space)
+    # two_level is the constant-size app catalog; the hint makes it the build side
     return fields.join(F.broadcast(two_level), "app_id").select(
         "space_id",
         "space_name",

@@ -21,15 +21,15 @@ from pyspark.sql import DataFrame
 CHECKPOINT_DIR_CONF = "spark.crm_etl_pipeline.checkpointDir"
 
 
-def reliable_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+def reliable_checkpoint(df: DataFrame) -> DataFrame:
     """``df.checkpoint()`` under ``CHECKPOINT_DIR_CONF`` when that conf
-    is set, else ``df.localCheckpoint()``. Both cut lineage; only the
-    former survives executor loss."""
+    is set, else ``df.localCheckpoint()``. Both are eager and cut
+    lineage; only the former survives executor loss."""
     spark = df.sparkSession
     ckpt_dir = spark.conf.get(CHECKPOINT_DIR_CONF, None)
     if ckpt_dir:
         # setCheckpointDir is idempotent for a fixed path; cheap to pin
         # here so callers never have to coordinate session state
         spark.sparkContext.setCheckpointDir(ckpt_dir)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()

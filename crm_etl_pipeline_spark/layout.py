@@ -148,6 +148,7 @@ def compact_zordered_increment(
     # the same bytes the job must move anyway, not an extra pass over
     # the store.
     merged = reliable_checkpoint(
+        # touched segment ids: bounded by the curve's segment count
         base.join(F.broadcast(affected), seg_col, "left_semi").unionByName(delta)
     )
     (

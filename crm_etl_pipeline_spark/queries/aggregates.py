@@ -304,6 +304,7 @@ def approx_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull() & F.col("event_type").isNotNull())
     )
     sk = gk_percentile_sketch(spark, sf_dir)
+    # one sketch row per event type
     j = ev.join(F.broadcast(sk), "event_type")
     aggs = [F.count(F.lit(1)).alias("n")]
     for p in ("p50", "p90", "p99"):
@@ -355,8 +356,8 @@ def grouping_sets_region_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = table(spark, sf_dir, "nation")
     region = table(spark, sf_dir, "region")
     joined = (
-        cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        cust.join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
     )
     return joined.groupingSets(
         [["r_name", "c_mktsegment"], ["r_name"], ["c_mktsegment"]],
@@ -684,6 +685,7 @@ def kmv_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union membership per pair: two broadcast EQUI-joins on the type key
     # unioned, then distinct — equivalent to the oracle's OR join but
     # hash-joinable (no BroadcastNestedLoopJoin anywhere in this plan)
+    # pairs: at most C(types, 2) rows; the hints make them the build side
     memb = (
         hashed.join(F.broadcast(pairs), hashed["t"] == pairs["t1"])
         .select("t1", "t2", "u", "hv")
@@ -704,6 +706,7 @@ def kmv_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     est1 = scale / F.col("kth_hv1")
     est2 = scale / F.col("kth_hv2")
     estu = scale / F.col("union_kth")
+    # kth: one row per type; ukth and exact: one row per type pair
     return (
         pairs.join(
             F.broadcast(kth.select(F.col("t").alias("t1"), F.col("kth_hv").alias("kth_hv1"))),

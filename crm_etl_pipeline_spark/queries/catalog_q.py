@@ -90,7 +90,7 @@ def composite_key_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     same string round-trip between sync passes."""
     nation = table(spark, sf_dir, "nation")
     region = table(spark, sf_dir, "region")
-    built = nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey).select(
+    built = nation.join(region, nation.n_regionkey == region.r_regionkey).select(
         F.concat_ws(".", F.col("r_regionkey"), F.col("n_nationkey")).alias("space_app_id")
     )
     return split_composite_key(built)

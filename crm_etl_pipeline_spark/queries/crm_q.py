@@ -504,6 +504,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_transitions"))
     )
     outdeg = trans.groupBy("from_type").agg(F.sum("n_transitions").alias("total"))
+    # one out-degree row per event type
     return trans.join(F.broadcast(outdeg), "from_type").select(
         "from_type",
         "to_type",
@@ -584,9 +585,12 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       loses the dst partitioning (measured: 28% less time at sf0.1,
       35% at sf1). The hint pays only together with the dst-partitioned
       edges; alone it has no partitioning to preserve. The node table
-      is bounded by the part catalog, not the corpus (~16 B/node,
-      ~320 MB at a 20M-part catalog); if a deployment exceeds the
-      broadcast cap, drop the hint and AQE plans the shuffle join.
+      is bounded by the part catalog, not the corpus, but Catalyst's
+      estimate of it (a join of two aggregates) overshoots, so the hint
+      is applied by hand, and only while the counted node table (24 B
+      per node, Catalyst's row size for two BIGINTs) fits the session's
+      ``spark.sql.autoBroadcastJoinThreshold``. A larger catalog
+      (~480 MB at 20M parts) plans the shuffle join instead.
 
     The symmetric co-purchase graph has no dangling nodes, so there is
     no global redistribution term. The fixed iteration budget stands in
@@ -613,6 +617,8 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = attach(deg.select(F.col("src").alias("node")), n).select(
         "node", (F.lit(1.0) / F.col("nn")).alias("r")
     )
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    broadcast_nodes = deg.count() * 24 <= threshold
     for _ in range(_PR_ITERS):
         node_cq = (
             ranks.withColumnRenamed("node", "src")
@@ -622,10 +628,12 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("r") / F.col("d") * F.lit(1e12)).cast("bigint").alias("cq"),
             )
         )
-        # broadcast is load-bearing: it preserves edges' dst
-        # partitioning through the join (docstring)
+        # broadcast keeps edges' dst partitioning through the join;
+        # bounded by the node count checked above (docstring)
+        if broadcast_nodes:
+            node_cq = F.broadcast(node_cq)
         sums = (
-            edges.join(F.broadcast(node_cq), "src")
+            edges.join(node_cq, "src")
             .groupBy("dst")
             .agg(F.sum("cq").alias("sq"))
         )

@@ -336,6 +336,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", _fixed_norm2(F.col("embedding")).alias("n2")
     )
     q, c = _sides(e)
+    # the probe set: vec_id < _N_QUERIES; the hint makes it the build side
     return _cos_topk(F.broadcast(q), c, 10)
 
 
@@ -655,6 +656,7 @@ def _ivf_assign(emb: DataFrame, centroids: DataFrame, max_rank: int) -> DataFram
     shuffles of the vectors themselves."""
     w_assign = Window.partitionBy("vec_id").orderBy("d2q", "cen_label")
     return (
+        # the codebook: one row per centroid
         emb.join(F.broadcast(centroids))
         .select("vec_id", "cen_label", _dist_q(F.col("embedding"), F.col("cvec")).alias("d2q"))
         .withColumn("rnk", F.row_number().over(w_assign))
@@ -815,6 +817,7 @@ def ann_ivf_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e.write.partitionBy("cell").parquet(base)
     q, c = _sides(spark.read.parquet(base), "cell")
+    # the probe set: vec_id < _N_QUERIES; the hint makes it the build side
     return _cos_topk(F.broadcast(q), c, 3, "cell")
 
 
@@ -903,6 +906,7 @@ def ann_ivf_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, cand_id bigint, cell int, rank int, cosine double"
         )
     q, c = _sides(spark.read.parquet(store), "cell")
+    # the probe set: vec_id < _N_QUERIES; the hint makes it the build side
     return _cos_topk(F.broadcast(q), c, 3, "cell")
 
 
@@ -996,6 +1000,7 @@ def embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         q.filter(F.col("dim") < _OUT_DIMS)
+        # one stats row per dimension
         .join(F.broadcast(s), "dim")
         .select("vec_id", "dim", z.alias("z"))
     )
@@ -1061,6 +1066,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("int")
     return (
         q.filter(F.col("dim") < _OUT_DIMS)
+        # one extent row per dimension
         .join(F.broadcast(ext), "dim")
         .select("vec_id", "dim", q8.alias("q8"))
     )
@@ -1177,6 +1183,7 @@ def _lloyd_step(
       (1e6 quantum) at (*keys, cluster, dim) grain collected back into
       dim-ordered arrays. Empty clusters drop out, as in the oracles."""
     scored = (
+        # the centroids: k per key
         pts.join(F.broadcast(cents), list(keys)) if keys else attach(pts, cents)
     ).withColumn("dq", _dist_q(F.col("vd"), F.col("cv")))
     w = Window.partitionBy("vec_id", *keys).orderBy("dq", "cluster")
@@ -1544,6 +1551,7 @@ def knn_label_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("clabel"),
     )
     votes = (
+        # the probe set: vec_id < _NOISE_PROBES; the hint makes it the build side
         _topk(F.broadcast(q), c, _NOISE_K)
         .groupBy("query_id", F.col("qlabel").alias("label"))
         .agg(
@@ -1696,6 +1704,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "sub", "cluster", "dq"
     )
     adc = (
+        # the LUT: _N_QUERIES x _PQ_M subspaces x _PQ_K codes
         codes.join(F.broadcast(lut), ["sub", "cluster"])
         .filter(F.col("cand_id") != F.col("query_id"))
         .groupBy("query_id", "cand_id")

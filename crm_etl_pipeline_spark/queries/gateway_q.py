@@ -241,6 +241,7 @@ def credential_rotation_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     slot = F.floor((F.col("offset") + F.col("rn") - 1) / F.lit(_ROTATE_EVERY))
     return (
+        # one offset row per day
         ranked.join(F.broadcast(offsets), "day")
         .select("ts", slot.cast("bigint").alias("rotation_slot"))
         .groupBy("rotation_slot")

@@ -29,7 +29,8 @@ from crm_etl_pipeline_spark.registry import query
 )
 def join_fk_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-hop FK dereference: fact → dim → dim → dim. nation/region are
-    genuinely constant-size → broadcast hints; customer is fact-scaled
+    constant-size, and so is Catalyst's estimate of them, so the
+    planner broadcasts them without a hint; customer is fact-scaled
     (tens of GB at the 100 TB design point) → no hint, AQE decides."""
     orders = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     cust = table(spark, sf_dir, "customer")
@@ -37,8 +38,8 @@ def join_fk_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = table(spark, sf_dir, "region")
     return (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .select(
             "o_orderkey",
             "o_totalprice",

@@ -53,7 +53,7 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = spark.read.parquet(path)
     first_day = store.agg(F.min("event_date").alias("event_date"))
     return (
-        store.join(F.broadcast(first_day), "event_date")
+        store.join(first_day, "event_date")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -1262,6 +1262,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).select(F.col("doc_id").alias("train_doc"), F.explode("s").alias("shingle"))
     return (
+        # shingles of the doc_id < _BENCH_MAX_ID benchmark docs
         tx.join(F.broadcast(bx), "shingle")
         .groupBy("train_doc", "bench_doc")
         .agg(
@@ -2379,20 +2380,21 @@ def rerank_fused_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ids = cands.select("doc_id")
     cand_lex = (
-        lex_ck.join(F.broadcast(ids), "doc_id")
+        lex_ck.join(ids, "doc_id")
         .withColumnRenamed("score_fp", "lex_fp")
     )
     cand_dense = (
         dense_ck.withColumnRenamed("cand_id", "doc_id")
-        .join(F.broadcast(ids), "doc_id")
+        .join(ids, "doc_id")
         .withColumnRenamed("dotq", "dense_fp")
     )
     qual = (
         doc_quality_score(spark, sf_dir)
         .select("doc_id", "quality_bucket")
-        .join(F.broadcast(ids), "doc_id")
+        .join(ids, "doc_id")
     )
     feat = (
+        # each side is pruned to the <= 10 candidate ids
         cands.join(F.broadcast(cand_lex), "doc_id", "left")
         .join(F.broadcast(cand_dense), "doc_id", "left")
         .join(F.broadcast(qual), "doc_id", "left")
@@ -2818,7 +2820,7 @@ def chunk_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("qc"))
     )
     dense_scored = (
-        cvec.join(F.broadcast(qvec), "b")
+        cvec.join(qvec, "b")
         .groupBy("doc_id", "chunk_id")
         .agg(
             F.expr(
@@ -3164,6 +3166,7 @@ def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_docs") > 0.05 * F.col("n_total"))
         .select("line")
     )
+    # lines in > 5% of docs: at most 20x the mean lines per doc
     kept = lines.join(F.broadcast(boiler_lines), "line", "left_anti")
     reassembled = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_lines_after"),
@@ -3293,11 +3296,12 @@ def language_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("lang").orderBy(
-        # NULLS FIRST spelled on both sides (round-13 null_doc_ids find)
+        # NULLS FIRST spelled on both sides, so a NULL doc_id ranks alike in both engines
         F.md5(F.col("doc_id").cast("string")).asc_nulls_first(),
         F.col("doc_id").asc_nulls_first(),
     )
     return (
+        # one allocation row per language
         docs.join(F.broadcast(alloc), "lang")
         .withColumn("samp_rank", F.row_number().over(w))
         .filter(F.col("samp_rank") <= F.col("n_target"))
@@ -4183,6 +4187,7 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("lang") == _DSIR_TARGET_LANG, True)).alias("c_t"),
     )
     weights = (
+        # the model: one row per hash bucket (_DSIR_B)
         bucketed.join(F.broadcast(model), "b")
         .groupBy("doc_id")
         .agg(
@@ -4232,9 +4237,10 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("h2").alias("h2_o"),
         F.coalesce(F.sum("g_tot").over(pw), F.lit(0)).alias("offset"),
     )
-    # null-safe h2 equi-join (the round-13 boilerplate find: a plain
-    # equi-join silently drops the NULL-h2 group)
+    # null-safe h2 equi-join: a plain equi-join silently drops the
+    # NULL-h2 group
     cum = (
+        # one offset row per h2 group (at most 256 hex pairs and NULL)
         in_group.join(
             F.broadcast(offsets), F.col("h2").eqNullSafe(F.col("h2_o"))
         )

@@ -137,8 +137,10 @@ def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the bitmap build aggregates a filtered dim scan down to
     ≤128 rows (one tiny shuffle); the probe is _BLOOM_K broadcast left
-    joins + pure column algebra inside codegen — the fact table never
-    shuffles at all; the final agg has 5 keys. At 100 TB this is the
+    joins + pure column algebra inside codegen; the final agg has 5
+    keys. Only the exact-membership audit join depends on the data size:
+    it broadcasts the key set while that fits the broadcast threshold
+    and shuffles past it. At 100 TB the bloom probe is the
     difference between shuffling every fact row into the join and
     dropping ~fill³-worth of non-matching rows at the scan."""
     cust = table(spark, sf_dir, "customer")
@@ -167,6 +169,7 @@ def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm = bitmap.select(
             F.col("word").alias(f"w{j}"), F.col("bits").alias(f"bits{j}")
         )
+        # the bitmap: at most _BLOOM_WORDS rows
         probed = probed.join(F.broadcast(bm), word == F.col(f"w{j}"), "left")
         mask = F.pow(F.lit(2.0), bit).cast("long")
         tests.append(F.coalesce(F.col(f"bits{j}"), F.lit(0)).bitwiseAND(mask) != 0)
@@ -175,10 +178,11 @@ def bloom_semi_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in tests[1:]:
         bloom_pass = bloom_pass & t
 
-    # exact membership for the audit columns: broadcast the (small,
-    # filtered) key set and left-semi mark via a left join on the key
+    # exact membership for the audit columns: left-semi mark via a left
+    # join on the key. The key set is a fifth of customer and grows with
+    # it, so the join carries no hint and follows the broadcast threshold
     marked = probed.join(
-        F.broadcast(keys.withColumn("_m", F.lit(1))),
+        keys.withColumn("_m", F.lit(1)),
         probed["o_custkey"] == keys["c_custkey"],
         "left",
     )
@@ -273,6 +277,7 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         probes = p if probes is None else probes.unionAll(p)
 
     est = (
+        # the sketch: _CMS_DEPTH x _CMS_WIDTH cells
         probes.join(F.broadcast(cells), ["r", "col"])
         .groupBy("user_id", "n_exact")
         .agg(F.min("cnt").alias("cms_estimate"))

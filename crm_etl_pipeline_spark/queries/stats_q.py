@@ -111,6 +111,7 @@ def event_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value") - F.col("mean_val")) / F.col("sd_val")
     )
     return (
+        # one stats row per event type
         events.join(F.broadcast(stats), "event_type")
         .select(
             "event_id",
@@ -256,11 +257,12 @@ def weighted_sample_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("c_mktsegment").orderBy(
-        # NULLS FIRST spelled on both sides (round-13 placement audit)
+        # NULLS FIRST spelled on both sides, so NULL keys rank alike in both engines
         F.md5(F.col("c_custkey").cast("string")).asc_nulls_first(),
         F.col("c_custkey").asc_nulls_first(),
     )
     return (
+        # one allocation row per market segment
         cust.join(F.broadcast(alloc), "c_mktsegment")
         .withColumn("samp_rank", F.row_number().over(w))
         .filter(F.col("samp_rank") <= F.col("n_target"))
@@ -510,6 +512,7 @@ def global_rank_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b", F.coalesce(F.sum("n_b").over(pw), F.lit(0)).alias("offset")
     )
     return (
+        # one offset row per bucket (_RANK_BUCKETS)
         ranked.join(F.broadcast(offsets), "b")
         .select(
             "c_custkey",
@@ -614,6 +617,7 @@ def robust_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile("value", 0.5).alias("med")
     )
     mad = (
+        # one median per event type
         events.join(F.broadcast(med), "event_type")
         .groupBy("event_type", "med")
         .agg(F.percentile(F.abs(F.col("value") - F.col("med")), 0.5).alias("mad"))
@@ -625,6 +629,7 @@ def robust_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value") - F.col("med")) / (F.lit(1.4826) * F.col("mad"))
     )
     return (
+        # one MAD per event type; the hint makes it the build side
         events.join(F.broadcast(mad), "event_type")
         .select(
             "event_id",
@@ -707,6 +712,7 @@ def pps_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = w.agg(F.sum("w_cents").alias("total"))
     cum = attach(
+        # one offset row per order date (bounded by the calendar)
         in_day.join(F.broadcast(offsets), "o_orderdate").withColumn(
             "cum_before", F.col("offset") + F.col("cum_in_day")
         ),
@@ -786,6 +792,7 @@ def chi_square_segment_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected = F.col("n_row").cast("double") * F.col("n_col") / F.col("n_total")
     return (
         attach(
+            # one row per nation and one per market segment
             cells.join(F.broadcast(rows_t), "c_nationkey").join(
                 F.broadcast(cols_t), "c_mktsegment"
             ),
@@ -839,6 +846,7 @@ def winsorize_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile("value", 0.99).alias("hi"),
     )
     clamped = F.least(F.greatest(F.col("value"), F.col("lo")), F.col("hi"))
+    # one bounds row per event type
     return events.join(F.broadcast(bounds), "event_type").select(
         "event_id",
         "event_type",
@@ -1104,6 +1112,7 @@ def abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("offset") + F.col("local_cum")).cast("double") / F.col("total").cast("double")
     )
     return (
+        # one offset row per bucket (_RANK_BUCKETS)
         with_prefix.join(F.broadcast(offsets), "b")
         .select(
             "l_partkey",

@@ -280,7 +280,7 @@ def streaming_moments_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         table(spark, sf_dir, "events")
-        .join(F.broadcast(stats), "event_type")
+        .join(stats, "event_type")
         .select(
             "event_id",
             "event_type",

@@ -411,14 +411,16 @@ def mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the window runs on the PRE-AGGREGATED frame — ~5
     segments × ~80 months, not on raw orders — so the sort inside each
     window partition is trivially bounded no matter the fact size; the
-    only input-sized work is one partially-aggregated groupBy after a
-    broadcast customer join. The anti-pattern this query is the
-    counter-example to: lag over raw fact rows, which would sort the
-    world."""
+    only input-sized work is one partially-aggregated groupBy after the
+    customer join. Customer grows with the data, so that join carries
+    no hint: the planner broadcasts customer while its estimate fits the
+    broadcast threshold and plans a sort-merge join past it. The
+    anti-pattern this query is the counter-example to: lag over raw
+    fact rows, which would sort the world."""
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     monthly = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        o.join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy(
             "c_mktsegment",
             F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),

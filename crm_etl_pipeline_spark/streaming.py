@@ -1103,11 +1103,13 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str, workdir: str) -> 
     mid-stream without restarting the query. The join is stateless —
     no watermark, no state store: each micro-batch joins and emits.
 
-    Scale: the dim side here is broadcast (catalog-sized); a
-    fact-scaled dim demotes to a shuffle join per micro-batch, and the
-    LEFT join keeps events whose user has no dim row yet (early events
-    for late-created customers) flagged UNKNOWN instead of dropping
-    them — the at-least-once-friendly posture. The dim passes through
+    Scale: the dim side carries no broadcast hint, since customer grows
+    with the data. The planner broadcasts it while its estimate fits
+    the broadcast threshold, and a fact-scaled dim plans a shuffle
+    join per micro-batch. The LEFT join keeps events whose user has no
+    dim row yet (early events for late-created customers) flagged
+    UNKNOWN instead of dropping them — the at-least-once-friendly
+    posture. The dim passes through
     the same MIN-segment identity winner as the flagship: a collided
     c_custkey must not fan a micro-batch out (id_collision_customer
     contract).
@@ -1117,7 +1119,7 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str, workdir: str) -> 
     src = os.path.join(workdir, "chunks")
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     arrival_relay(ev, src, pmod_chunks(F.col("event_id"), 4))
-    dim = F.broadcast(
+    dim = (
         table(spark, sf_dir, "customer")
         .groupBy(F.col("c_custkey").alias("user_id"))
         .agg(F.min("c_mktsegment").alias("segment"))

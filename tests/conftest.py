@@ -91,9 +91,9 @@ def _family(type_name: str) -> str:
 _FORBIDDEN_EDGE_FAMILIES = {"decimal", "hugeint"}
 
 
-def compare_query(spark, duck, q, sf_dir: str = SF_DIR) -> None:
-    """Run one registry Query on Spark and DuckDB; assert equivalence."""
-    sdf = q.fn(spark, sf_dir)
+def compare_query(duck, q, sdf) -> None:
+    """Run registry Query ``q``'s frame ``sdf`` and its DuckDB oracle;
+    assert equivalence."""
     srows = [tuple(r) for r in sdf.collect()]
     scols = sdf.columns
     rel = duck.sql(q.oracle)

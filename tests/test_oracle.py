@@ -8,19 +8,26 @@ import pytest
 
 from crm_etl_pipeline_spark.registry import load_all
 
-from tests.conftest import compare_query
+from tests.conftest import SF_DIR, compare_query
+from tests.test_plan_shapes import plan_lint, plan_string
 
 REGISTRY = load_all()
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(spark, duck, name):
+    """The query's result matches its oracle, and its initial physical
+    plan, read before the frame runs, passes ``plan_lint``."""
     q = REGISTRY[name]
     if q.oracle is None:
         df = q.fn(spark, "/root/testdata/sf0.001")
+        plan = plan_string(df)
         assert df.count() >= 0  # rows-only smoke, mirrors driver's weak check
     else:
-        compare_query(spark, duck, q)
+        df = q.fn(spark, SF_DIR)
+        plan = plan_string(df)
+        compare_query(duck, q, df)
+    assert plan_lint(name, plan) == [], f"{name}: plan shapes that do not scale"
 
 
 def test_entry_smoke(spark):

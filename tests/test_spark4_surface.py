@@ -115,7 +115,7 @@ def test_variant_absent_count_moves_with_planted_key(spark, tmp_path):
     from tests.conftest import compare_query
 
     q = REGISTRY["variant_props_shred"]
-    compare_query(spark, con, q, sf_dir=d)
+    compare_query(con, q, q.fn(spark, d))
     n_absent = (
         q.fn(spark, d).agg(F.sum("n_absent").alias("a")).first()["a"]
     )

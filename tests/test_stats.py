@@ -749,7 +749,7 @@ def test_constant_population_zscore_contract(spark, tmp_path):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet')"
         )
     for name in ("event_value_anomalies", "embedding_standardize"):
-        compare_query(spark, duck, REGISTRY[name], sf_dir=out)
+        compare_query(duck, REGISTRY[name], REGISTRY[name].fn(spark, out))
     zrows = REGISTRY["event_value_anomalies"].fn(spark, out).collect()
     assert zrows and all(r.zscore == 0.0 and not r.is_anomaly for r in zrows)
     srows = REGISTRY["embedding_standardize"].fn(spark, out).collect()
