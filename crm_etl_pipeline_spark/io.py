@@ -76,8 +76,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL API."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

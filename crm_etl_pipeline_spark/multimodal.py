@@ -252,7 +252,6 @@ MP4_MC_CHUNK_OFFSET = 496  # 452 + the 44-byte moov growth
 MP4_MC_SPLIT = (5, 3)  # stsc run lengths: chunk 1 holds 5 samples, chunk 2 holds 3
 MP4_MC_GAP = 16  # unreferenced bytes between the two chunks inside mdat
 MP4_SYNC_SAMPLES = (1, 5)  # stss entries, 1-based sample numbers
-MP4_EDTS_BYTES = 36  # edts(8) + elst(8 + ver/flags 4 + count 4 + one v0 entry 12)
 
 
 def _mp4_bytes(doc_id: int) -> bytes:

@@ -513,7 +513,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_DAMP = 0.85
 _PR_ITERS = 3
 
 

@@ -807,7 +807,7 @@ def ann_ivf_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crm_etl_pipeline_spark import tmpdirs
 
     base = os.path.join(
-        tmpdirs.pid_scoped("crm_etl_ivf", os.path.basename(sf_dir.rstrip("/"))),
+        tmpdirs.sf_scoped("crm_etl_ivf", sf_dir),
         "index",
     )
     emb = _emb(spark, sf_dir)
@@ -896,7 +896,7 @@ def ann_ivf_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crm_etl_pipeline_spark import streaming, tmpdirs
 
     wd = os.path.join(
-        tmpdirs.pid_scoped("crm_etl_ivf_inc", os.path.basename(sf_dir.rstrip("/"))),
+        tmpdirs.sf_scoped("crm_etl_ivf_inc", sf_dir),
         "work",
     )
     shutil.rmtree(wd, ignore_errors=True)

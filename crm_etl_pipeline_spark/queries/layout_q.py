@@ -19,14 +19,6 @@ from crm_etl_pipeline_spark.registry import query
 from crm_etl_pipeline_spark.queries.scd_q import _STORE_SQL, _base, _updates
 
 
-def _workdir(tag: str, sf_dir: str) -> str:
-    """Fresh per-invocation scratch dir, exit-removed and crash-swept
-    by tmpdirs."""
-    return tmpdirs.pid_scoped(
-        "crm_etl_layout", tag, os.path.basename(sf_dir.rstrip("/"))
-    )
-
-
 @query(
     "partition_pruned_scan",
     oracle="""
@@ -48,7 +40,7 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists one day's directory, not the decade. The aggregate
     accumulates value in DECIMAL so the oracle hash matches
     bit-for-bit regardless of per-partition summation order."""
-    path = os.path.join(_workdir("pruned", sf_dir), "events_by_day")
+    path = os.path.join(tmpdirs.sf_scoped("crm_etl_layout", sf_dir, "pruned"), "events_by_day")
     layout.write_date_partitioned(table(spark, sf_dir, "events"), path)
     store = spark.read.parquet(path)
     first_day = store.agg(F.min("event_date").alias("event_date"))
@@ -96,7 +88,7 @@ def scd2_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py)."""
     import shutil
 
-    wd = _workdir("compact", sf_dir)
+    wd = tmpdirs.sf_scoped("crm_etl_layout", sf_dir, "compact")
     # self-contained per invocation: a re-run in the same session
     # rebuilds the 9-generation log from scratch instead of appending
     # 9 more generations onto the previous run's (dropDuplicates would
@@ -212,7 +204,7 @@ def zorder_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "zval", layout.zvalue(F.col("day_idx"), F.col("u_bucket")).cast("bigint")
         )
     )
-    path = os.path.join(_workdir("zorder", sf_dir), "events_z")
+    path = os.path.join(tmpdirs.sf_scoped("crm_etl_layout", sf_dir, "zorder"), "events_z")
     layout.write_zordered(bucketed, path, "zval", 8)
     return (
         spark.read.parquet(path)
@@ -345,7 +337,7 @@ def zorder_incremental_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     a range-partitioned layout would need before every merge."""
     import shutil
 
-    wd = _workdir("zinc", sf_dir)
+    wd = tmpdirs.sf_scoped("crm_etl_layout", sf_dir, "zinc")
     # self-contained per invocation: the delta log is append-mode, so a
     # re-run in the same session (bench warm-ups) would silently double
     # it — same discipline as scd2_compact_small_files
@@ -440,7 +432,7 @@ def partition_evolution_regrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     WAP flip), while fresh writes land at the new grain; readers keep
     working throughout because the partition column is derivable from
     ``ts`` either way."""
-    wd = _workdir("regrain", sf_dir)
+    wd = tmpdirs.sf_scoped("crm_etl_layout", sf_dir, "regrain")
     day_store = os.path.join(wd, "by_day")
     month_store = os.path.join(wd, "by_month")
     ev = table(spark, sf_dir, "events")

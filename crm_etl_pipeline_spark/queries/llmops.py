@@ -445,20 +445,6 @@ _N_HASHES = 12
 _N_BANDS = 4  # 3 rows per band
 
 
-def _minhash_cols(shingles: Column) -> list[Column]:
-    """Seeded MinHash family: h_j = min over shingles of md5('j|' + s).
-    md5 hex min is a uniform order statistic — the classical MinHash —
-    and is bit-identical across engines (unlike numeric hash builtins).
-    """
-    def seeded_min(j: int) -> Column:
-        # NB: the lambda must be unary — Spark passes the element index
-        # as a second positional arg to binary lambdas, which would
-        # silently replace a `j=j` default with the index column
-        return F.array_min(F.transform(shingles, lambda sh: F.md5(F.concat(F.lit(f"{j}|"), sh))))
-
-    return [seeded_min(j).alias(f"mh{j}") for j in range(_N_HASHES)]
-
-
 def _minhash_cols_sql(shingle_expr: str) -> str:
     return ",\n             ".join(
         f"list_min(list_transform({shingle_expr}, s -> md5('{j}|' || s))) AS mh{j}"

@@ -75,12 +75,6 @@ def _export_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "events").filter(F.col("event_id") < 500)
 
 
-def _workdir(tag: str, sf_dir: str) -> str:
-    return tmpdirs.pid_scoped(
-        "crm_etl_sources", tag, os.path.basename(sf_dir.rstrip("/"))
-    )
-
-
 # --- NULL-sentinel escape convention (closes the round-6 residual) ---
 # Spark's CSV parser nullifies any field equal to ``nullValue`` even
 # when quoted, so no token choice alone can keep a DATA value equal to
@@ -143,7 +137,7 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out and its inverse on the way back, both pure column algebra, so
     literal "\\N" (and literal "\\E\\N", recursively) now round-trips
     (tests/test_sources.py::test_csv_sentinel_escape_roundtrip)."""
-    path = os.path.join(_workdir("csv", sf_dir), "events_csv")
+    path = os.path.join(tmpdirs.sf_scoped("crm_etl_sources", sf_dir, "csv"), "events_csv")
     str_cols = [
         f.name for f in _EVENTS_SCHEMA.fields if isinstance(f.dataType, StringType)
     ]
@@ -183,7 +177,7 @@ def json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     format (webhook POST bodies, `PodioApiGateway.py:197-215`). The
     props column nests JSON-in-a-JSON-string, which the explicit
     StringType schema must carry through un-reparsed."""
-    path = os.path.join(_workdir("json", sf_dir), "events_json")
+    path = os.path.join(tmpdirs.sf_scoped("crm_etl_sources", sf_dir, "json"), "events_json")
     _export_subset(spark, sf_dir).write.mode("overwrite").options(
         timestampFormat=_TS_FMT
     ).json(path)
@@ -210,7 +204,7 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC serves as well as ingests: predicate pushdown and column
     pruning work as they do on parquet, so a mixed parquet/ORC estate
     keeps the same plans."""
-    path = os.path.join(_workdir("orc", sf_dir), "events_orc")
+    path = os.path.join(tmpdirs.sf_scoped("crm_etl_sources", sf_dir, "orc"), "events_orc")
     _export_subset(spark, sf_dir).write.mode("overwrite").orc(path)
     return spark.read.schema(_EVENTS_SCHEMA).orc(path)
 
@@ -238,7 +232,7 @@ def wap_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     input). Any other audit failure still raises."""
     from crm_etl_pipeline_spark import wap
 
-    root = os.path.join(_workdir("wap", sf_dir), "events_wap")
+    root = os.path.join(tmpdirs.sf_scoped("crm_etl_sources", sf_dir, "wap"), "events_wap")
     published, _, failures = wap.publish(
         spark,
         _export_subset(spark, sf_dir),
@@ -304,7 +298,7 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan projection. At 100 TB a rename costs zero bytes moved — the
     alternative (rewriting every historical file to the new schema) is
     exactly what this layout avoids."""
-    root = os.path.join(_workdir("evolve", sf_dir), "items")
+    root = os.path.join(tmpdirs.sf_scoped("crm_etl_sources", sf_dir, "evolve"), "items")
     cust = table(spark, sf_dir, "customer")
     # one generation = one snap=N partition directory, each written
     # with overwrite so the query is idempotent within a session (a
@@ -576,7 +570,7 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, there is no column pruning, and the markup overhead is
     ~3× the payload. The honest pipeline lands XML to parquet once
     at the boundary, which is exactly what this query certifies."""
-    path = os.path.join(_workdir("xml", sf_dir), "events_xml")
+    path = os.path.join(tmpdirs.sf_scoped("crm_etl_sources", sf_dir, "xml"), "events_xml")
     out = _export_subset(spark, sf_dir).filter(
         _xml_legal("event_type") & _xml_legal("props")
     )

@@ -22,15 +22,6 @@ from crm_etl_pipeline_spark.queries.scd_q import _STORE_SQL
 from crm_etl_pipeline_spark.registry import query
 
 
-def _workdir(tag: str, sf_dir: str) -> str:
-    """Fresh work area per invocation (streams cannot resume across a
-    content change, and parallel runs must not share checkpoints);
-    exit-removed and crash-swept by tmpdirs."""
-    return tmpdirs.pid_scoped(
-        "crm_etl_stream", tag, os.path.basename(sf_dir.rstrip("/"))
-    )
-
-
 @query(
     "streaming_scd2_state",
     oracle=_STORE_SQL
@@ -47,7 +38,9 @@ def streaming_scd2_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch SCD2 replay, verified by the same window oracle. The log
     is append-only (O(batch) per micro-batch, history files never
     rewritten); version/is_current derive merge-on-read."""
-    paths = streaming.run_pipeline(spark, sf_dir, workdir=_workdir("scd2", sf_dir))
+    paths = streaming.run_pipeline(
+        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "scd2")
+    )
     store = streaming.read_converged_store(spark, str(paths["store"]))
     return scd.current_view(store).select("item_id", "event_id", "ts", "value", "version")
 
@@ -66,7 +59,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked event-time tumbling windows, drained availableNow in
     complete mode: over bounded input the final window table equals the
     batch GROUP BY date_trunc — same oracle as tumbling_daily_counts."""
-    out = os.path.join(_workdir("win", sf_dir), "counts")
+    out = os.path.join(tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "win"), "counts")
     streaming.windowed_counts_stream(spark, sf_dir, out)
     return spark.read.parquet(out)
 
@@ -84,7 +77,9 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dead-letter queue contents after the bounded run: every error
     event whose derived failed_attempts crossed the threshold."""
-    paths = streaming.run_pipeline(spark, sf_dir, workdir=_workdir("dlq", sf_dir))
+    paths = streaming.run_pipeline(
+        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "dlq")
+    )
     return streaming.read_dlq(spark, paths, sf_dir).select(
         "event_id", "user_id", "failed_attempts"
     )
@@ -113,7 +108,8 @@ def streaming_requeue(spark: SparkSession, sf_dir: str) -> DataFrame:
     failed_attempts = max(first_attempts, 10) and n_retries counting
     the requeue hops — the oracle states that closed form."""
     paths = streaming.run_pipeline(
-        spark, sf_dir, workdir=_workdir("requeue", sf_dir), drain_retries=True
+        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "requeue"),
+        drain_retries=True,
     )
     return streaming.read_dlq(spark, paths, sf_dir).select(
         "event_id",
@@ -146,7 +142,8 @@ def streaming_dlq_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(first_attempts, 10), replay exactly 10 — which the oracle
     states over the raw events table."""
     paths = streaming.run_pipeline(
-        spark, sf_dir, workdir=_workdir("replay", sf_dir), drain_retries=True
+        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "replay"),
+        drain_retries=True,
     )
     streaming.replay_dlq(spark, paths)
     return (
@@ -182,7 +179,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended sink converges to exactly the batch interval join — the
     oracle — because an inner stream-stream join emits each pair once
     when both rows have arrived and never retracts."""
-    out = os.path.join(_workdir("ssjoin", sf_dir), "pairs")
+    out = os.path.join(tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "ssjoin"), "pairs")
     streaming.stream_stream_join(spark, sf_dir, out)
     return spark.read.parquet(out).select("purchase_id", "click_id", "user_id")
 
@@ -214,7 +211,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     GroupState carries the open session across micro-batches, pandas
     vectorizes within the batch. The converged output equals the batch
     lag/cumsum sessionization — verified by the same window oracle."""
-    out = os.path.join(_workdir("sess", sf_dir), "sessions")
+    out = os.path.join(tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "sess"), "sessions")
     streaming.stateful_sessionization(spark, sf_dir, out)
     return streaming.read_sessions(spark, out).select(
         "user_id", "session_id", "n_events", "session_start", "session_end"
@@ -261,7 +258,9 @@ def streaming_moments_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     losslessly across micro-batches. Same oracle as the batch twin."""
     from crm_etl_pipeline_spark.io import table
 
-    out = streaming.moments_stream(spark, sf_dir, _workdir("moments", sf_dir))
+    out = streaming.moments_stream(
+        spark, sf_dir, tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "moments")
+    )
     moments = spark.read.parquet(out)
     mean = F.col("s1").cast("double") / F.col("n")
     stats = moments.select(
@@ -314,7 +313,9 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     state stays O(open hours)); decisions append without merge because
     admission is irrevocable — an at-least-once sink dedups on
     event_id if replays occur."""
-    out = streaming.rate_limit_stream(spark, sf_dir, _workdir("ratelimit", sf_dir))
+    out = streaming.rate_limit_stream(
+        spark, sf_dir, tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "ratelimit")
+    )
     dec = spark.read.parquet(out)
     return (
         dec.groupBy(F.timestamp_micros(F.col("hour_us")).alias("hour"))
@@ -371,7 +372,7 @@ def streaming_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crm_etl_pipeline_spark.io import table
 
     out = streaming.late_arrival_audit_stream(
-        spark, sf_dir, workdir=_workdir("lateaudit", sf_dir)
+        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "lateaudit")
     )
     stream_counts = spark.read.parquet(out).select(
         F.col("w.start").alias("day"), "n_stream"
@@ -418,7 +419,9 @@ def streaming_zorder_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here: once after the drain; in production: when a segment's delta
     file count crosses the small-file budget), and its cost is the
     touched segments' data, never the store size."""
-    store = streaming.zorder_ingest_stream(spark, sf_dir, _workdir("zingest", sf_dir))
+    store = streaming.zorder_ingest_stream(
+        spark, sf_dir, tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "zingest")
+    )
     if store is None:
         # empty-in/empty-out contract, mirroring the batch twin
         return spark.createDataFrame(
@@ -459,7 +462,9 @@ def streaming_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface as UNKNOWN instead of dropping (at-least-once posture).
     Dim goes through the flagship's MIN-segment identity winner, so a
     collided custkey cannot fan a micro-batch out."""
-    out = streaming.stream_static_enrichment(spark, sf_dir, _workdir("dimjoin", sf_dir))
+    out = streaming.stream_static_enrichment(
+        spark, sf_dir, tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "dimjoin")
+    )
     return spark.read.parquet(out).select("event_id", "user_id", "event_type", "segment")
 
 
@@ -509,7 +514,9 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally, not one per batch). Per-batch cost is O(batch) + one
     uniform-key anti-join against the accepted store; store size is
     the distinct corpus, never the arrival volume."""
-    store = streaming.incremental_dedup_stream(spark, sf_dir, _workdir("incdedup", sf_dir))
+    store = streaming.incremental_dedup_stream(
+        spark, sf_dir, tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "incdedup")
+    )
     if store is None:
         return spark.createDataFrame(
             [], "content_hash string, keep_doc_id long, arrival_chunk int"

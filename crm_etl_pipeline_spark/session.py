@@ -13,8 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def get_spark(app_name: str = "crm_etl_pipeline_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the tuned local SparkSession.

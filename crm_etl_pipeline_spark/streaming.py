@@ -185,7 +185,7 @@ def compact_store(spark: SparkSession, log_path: str, base_path: str) -> None:
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
-    workdir: str | None = None,
+    workdir: str,
     trigger_available_now: bool = True,
     drain_retries: bool = False,
 ) -> dict[str, object]:
@@ -209,7 +209,6 @@ def run_pipeline(
     """
     from crm_etl_pipeline_spark.queries.scd_q import _base  # avoid import cycle
 
-    workdir = workdir or tempfile.mkdtemp(prefix="crm_etl_stream_")
     paths: dict[str, object] = {
         "store": os.path.join(workdir, "store"),
         "completed": os.path.join(workdir, "completed"),

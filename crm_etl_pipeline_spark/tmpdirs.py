@@ -76,3 +76,9 @@ def pid_scoped(family: str, *parts: str) -> str:
     os.makedirs(base, exist_ok=True)
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     return base
+
+
+def sf_scoped(family: str, sf_dir: str, *tags: str) -> str:
+    """``pid_scoped`` dir for one scale factor:
+    /tmp/{family}_{tags…}_{basename(sf_dir)}_{pid}."""
+    return pid_scoped(family, *tags, os.path.basename(sf_dir.rstrip("/")))

@@ -1,22 +1,31 @@
-"""Shared fixtures: one SparkSession and one DuckDB connection per run.
+"""Shared fixtures, and the suite's one cross-engine comparison.
 
-The oracle comparison here is intentionally STRICTER than the driver's
-(exact canonical-string equality, not just a hash) so that a green
-test suite implies a green CORRECTNESS_r{N}.json. It runs at the SAME
-scale factor the driver checks (sf0.01 — round 1 passed at sf0.001 but
-failed the driver at sf0.01) and compares result TYPE families, so a
-DuckDB HUGEINT / DECIMAL leaking from an uncast aggregate fails here
-before it fails the driver's value hash.
+``compare_query`` is the only place that checks a Spark query against
+its DuckDB oracle. It is intentionally STRICTER than the value hash
+behind CORRECTNESS_r{N}.json (exact canonical-string equality, not just
+a hash), so a green suite implies a green correctness report. It runs
+at the scale factor that report uses (sf0.01) and compares result TYPE
+families, so a DuckDB HUGEINT or DECIMAL leaking from an uncast
+aggregate fails here before it fails the value hash.
+
+A degenerate-input check is three lines over these pieces::
+
+    out = write_fixture(tmp_path / "flat", events=mutated_events)
+    with duck_views(out) as con:
+        rows = compare_query(con, q, q.fn(spark, out))
 """
 
 from __future__ import annotations
 
 import math
+import os
 import re
+import shutil
 import sys
 from pathlib import Path
 
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -27,6 +36,35 @@ from crm_etl_pipeline_spark.session import get_spark
 SF_DIR = "/root/testdata/sf0.01"
 
 
+def duck_views(data_dir) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table in ``data_dir``: a
+    ``{name}.parquet`` file or a Spark-written ``{name}.parquet/``
+    directory of part files."""
+    con = duckdb.connect()
+    for path in sorted(Path(data_dir).glob("*.parquet")):
+        src = f"{path}/*.parquet" if path.is_dir() else str(path)
+        con.execute(f"CREATE VIEW {path.stem} AS SELECT * FROM read_parquet('{src}')")
+    return con
+
+
+def write_fixture(out, **tables) -> str:
+    """A fresh fixture directory ``out``: each ``name=pyarrow.Table``
+    written as ``{name}.parquet``, every other ``io.TABLES`` member
+    symlinked from sf0.01."""
+    unknown = set(tables) - set(TABLES)
+    if unknown:
+        raise KeyError(f"unknown tables {sorted(unknown)}; have {TABLES}")
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    for name in TABLES:
+        dst = os.path.join(out, f"{name}.parquet")
+        if name in tables:
+            pq.write_table(tables[name], dst)
+        else:
+            os.symlink(f"{SF_DIR}/{name}.parquet", dst)
+    return str(out)
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("crm-etl-pipeline-tests")
@@ -35,11 +73,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_DIR}/{name}.parquet')"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
@@ -91,10 +125,10 @@ def _family(type_name: str) -> str:
 _FORBIDDEN_EDGE_FAMILIES = {"decimal", "hugeint"}
 
 
-def compare_query(duck, q, sdf) -> None:
-    """Run registry Query ``q``'s frame ``sdf`` and its DuckDB oracle;
-    assert equivalence."""
-    srows = [tuple(r) for r in sdf.collect()]
+def compare_query(duck, q, sdf) -> list:
+    """Run registry Query ``q``'s frame ``sdf`` and its DuckDB oracle on
+    ``duck``; assert equivalence and return the collected Spark rows."""
+    rows = sdf.collect()
     scols = sdf.columns
     rel = duck.sql(q.oracle)
     stypes = {c: _family(t) for c, t in sdf.dtypes}
@@ -111,8 +145,9 @@ def compare_query(duck, q, sdf) -> None:
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()
     assert sorted(scols) == sorted(ocols), f"{q.name}: columns {scols} vs oracle {ocols}"
-    assert len(srows) == len(orows), f"{q.name}: rowcount {len(srows)} vs oracle {len(orows)}"
-    scanon = rows_canonical(scols, srows)
+    assert len(rows) == len(orows), f"{q.name}: rowcount {len(rows)} vs oracle {len(orows)}"
+    scanon = rows_canonical(scols, rows)
     ocanon = rows_canonical(ocols, orows)
     mismatches = [(a, b) for a, b in zip(scanon, ocanon) if a != b]
     assert not mismatches, f"{q.name}: {len(mismatches)} row mismatches; first: {mismatches[0]}"
+    return rows

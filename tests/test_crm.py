@@ -14,13 +14,13 @@ import pyarrow.parquet as pq
 
 from crm_etl_pipeline_spark.registry import load_all
 
+from tests.conftest import compare_query, duck_views, write_fixture
+
 REGISTRY = load_all()
 
 
 def _write_events(tmp_path, rows) -> str:
     """rows: list of (event_id, iso_ts, user_id, event_type, value)."""
-    out = str(tmp_path / "planted")
-    os.makedirs(out, exist_ok=True)
     tbl = pa.table(
         {
             "event_id": pa.array([r[0] for r in rows], pa.int64()),
@@ -33,8 +33,7 @@ def _write_events(tmp_path, rows) -> str:
             "props": pa.array(["{}"] * len(rows)),
         }
     )
-    pq.write_table(tbl, f"{out}/events.parquet")
-    return out
+    return write_fixture(tmp_path / "planted", events=tbl)
 
 
 def test_funnel_is_strictly_ordered(spark, tmp_path):
@@ -167,8 +166,6 @@ def test_funnel_empty_first_stage(spark, tmp_path):
     equi-join silently dropped every stage row (Spark returned an
     EMPTY funnel while the oracle returned four rows), and the
     conversion ratio was 0/0."""
-    import duckdb
-
     out = _write_events(
         tmp_path,
         [
@@ -177,20 +174,11 @@ def test_funnel_empty_first_stage(spark, tmp_path):
             (3, "2024-01-02T09:00:00", 2, "click", 7.0),
         ],
     )
-    rows = sorted(
-        REGISTRY["funnel_conversion"].fn(spark, out).collect(),
-        key=lambda r: r.stage_idx,
-    )
+    q = REGISTRY["funnel_conversion"]
+    with duck_views(out) as con:
+        rows = sorted(compare_query(con, q, q.fn(spark, out)), key=lambda r: r.stage_idx)
     assert [r.stage_idx for r in rows] == [1, 2, 3, 4]
     assert all(r.users_reached == 0 and r.conv_from_first == 0.0 for r in rows)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{out}/events.parquet')"
-    )
-    o = sorted(con.execute(REGISTRY["funnel_conversion"].oracle).fetchall())
-    con.close()
-    assert sorted(tuple(r) for r in rows) == o
 
 
 def test_one_order_per_customer_degenerates_cleanly(spark, tmp_path):
@@ -200,10 +188,6 @@ def test_one_order_per_customer_degenerates_cleanly(spark, tmp_path):
     Spark raised DIVIDE_BY_ZERO on both while DuckDB emitted NaN.
     Convention — OLS slope 0 / intercept mean(y) / r2 0, gains lift
     and capture 0.0 — must hold bit-for-bit in both engines."""
-    import math
-
-    import duckdb
-
     fixture = pq.read_table("/root/testdata/sf0.01/orders.parquet")
     seen: set = set()
     keep = []
@@ -211,35 +195,9 @@ def test_one_order_per_customer_degenerates_cleanly(spark, tmp_path):
         if ck not in seen:
             seen.add(ck)
             keep.append(i)
-    one = fixture.take(pa.array(keep, pa.int64()))
-    out = str(tmp_path / "oneorder")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(one, f"{out}/orders.parquet")
-    os.symlink("/root/testdata/sf0.01/customer.parquet", f"{out}/customer.parquet")
-
-    con = duckdb.connect()
-    for t in ("orders", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet')"
-        )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    for name in ("ols_frequency_monetary", "decile_gains_table"):
-        q = REGISTRY[name]
-        df = q.fn(spark, out)
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, f"{name} diverges on the one-order-per-customer load"
-    ols = {r.c_mktsegment: r for r in REGISTRY["ols_frequency_monetary"].fn(spark, out).collect()}
-    assert all(r.slope == 0.0 and r.r2 == 0.0 for r in ols.values())
-    con.close()
+    out = write_fixture(tmp_path / "oneorder", orders=fixture.take(pa.array(keep, pa.int64())))
+    ols, gains = (REGISTRY[n] for n in ("ols_frequency_monetary", "decile_gains_table"))
+    with duck_views(out) as con:
+        ols_rows = compare_query(con, ols, ols.fn(spark, out))
+        compare_query(con, gains, gains.fn(spark, out))
+    assert all(r.slope == 0.0 and r.r2 == 0.0 for r in ols_rows)

@@ -124,14 +124,12 @@ def test_malformed_props_payloads_never_throw(spark, tmp_path):
     cross-engine, and Spark's type-strict from_json semantics (a quoted
     "12" is NULL, not 12) are mirrored by the oracle's json_type
     guard."""
-    import math
-    import os
-
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from crm_etl_pipeline_spark.registry import load_all
+
+    from tests.conftest import compare_query, duck_views, write_fixture
 
     registry = load_all()
     fixture = pq.read_table("/root/testdata/sf0.01/events.parquet")
@@ -142,33 +140,11 @@ def test_malformed_props_payloads_never_throw(spark, tmp_path):
     garbage = fixture.set_column(
         fixture.column_names.index("props"), "props", pa.array(vals, pa.string())
     )
-    out = str(tmp_path / "badprops")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(garbage, f"{out}/events.parquet")
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{out}/events.parquet')"
-    )
-    for name in ("props_json_extract", "props_from_json_typed"):
-        q = registry[name]
-        df = q.fn(spark, out)
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, f"{name} diverges on malformed props"
-    con.close()
+    out = write_fixture(tmp_path / "badprops", events=garbage)
+    extract, typed = (registry[n] for n in ("props_json_extract", "props_from_json_typed"))
+    with duck_views(out) as con:
+        compare_query(con, extract, extract.fn(spark, out))
+        typed_rows = compare_query(con, typed, typed.fn(spark, out))
     # the type-strict branch is really exercised: only the -7 slice of
     # the garbage corpus survives as a number
-    typed = {r.event_type: r for r in registry["props_from_json_typed"].fn(spark, out).collect()}
-    assert all(r.min_k in (None, -7) and r.max_k in (None, -7) for r in typed.values())
+    assert all(r.min_k in (None, -7) and r.max_k in (None, -7) for r in typed_rows)

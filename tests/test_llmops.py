@@ -774,23 +774,21 @@ def test_retrieval_duplicate_ingest_contract(spark, tmp_path):
 
 
 def test_identity_collision_contract(spark, tmp_path):
-    """Identity-collision contract (round-10 id_collision_docs probe):
+    """Identity-collision contract (the id_collision_docs sweep batch):
     when the SAME doc_id carries DIFFERENT bytes (two ingest shards
     minting one id), identity-grain pipelines resolve ONE deterministic
     winner per doc_id (lexicographically smallest payload, NULLS FIRST)
-    identically in both engines. Before the contract, four pipelines
+    identically in both engines. Without the contract, four pipelines
     split cross-engine: minhash unioned both texts' shingles into one
     signature while the oracle kept two rows; packing's (md5(id), id)
     ordering tied; curation's survivor semi-join resurrected both
     contents; boilerplate merged two documents' lines. Pin: on a
     fixture with collisions injected, pack + boilerplate agree
     bit-for-bit cross-engine and emit exactly one row per doc_id."""
-    import math
-    import os
-
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from tests.conftest import compare_query, duck_views, write_fixture
 
     doc = pq.read_table(f"{SF_DIR}/documents.parquet")
     ids = doc.column("doc_id").to_pylist()
@@ -803,40 +801,14 @@ def test_identity_collision_contract(spark, tmp_path):
         doc.column_names.index("doc_id"), "doc_id",
         pa.array(ids, doc.schema.field("doc_id").type),
     )
-    out = str(tmp_path / "collide")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(doc, f"{out}/documents.parquet")
-
-    reg = load_all()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{out}/documents.parquet')"
-    )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        if isinstance(v, bool):
-            return str(v).lower()
-        return str(v)
-
-    for name in ("pack_training_sequences", "boilerplate_line_removal"):
-        q = reg[name]
-        df = q.fn(spark, out)
-        rows = df.collect()
-        # one row per doc_id — the winner rule collapsed the collisions
-        got_ids = [r.doc_id for r in rows]
-        assert len(got_ids) == len(set(got_ids)), name
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in rows)
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, name
-    con.close()
+    out = write_fixture(tmp_path / "collide", documents=doc)
+    with duck_views(out) as con:
+        for name in ("pack_training_sequences", "boilerplate_line_removal"):
+            q = REGISTRY[name]
+            rows = compare_query(con, q, q.fn(spark, out))
+            # one row per doc_id — the winner rule collapsed the collisions
+            got_ids = [r.doc_id for r in rows]
+            assert len(got_ids) == len(set(got_ids)), name
 
 
 def test_ann_recall_selfcheck_floor_and_values(spark):

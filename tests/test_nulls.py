@@ -5,14 +5,12 @@ before the symmetric guards landed."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from crm_etl_pipeline_spark.registry import load_all
+
+from tests.conftest import compare_query, duck_views, write_fixture
 
 SF_DIR = "/root/testdata/sf0.01"
 REGISTRY = load_all()
@@ -26,27 +24,10 @@ def _null_every_10th(tbl, col):
     )
 
 
-def _canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, bool):
-        return str(v).lower()
-    return str(v)
-
-
-def _assert_agree(spark, con, names):
-    for name in names:
-        q = REGISTRY[name]
-        df = q.fn(spark, os.environ["_NULLFIX_DIR"])
-        cols = sorted(df.columns)
-        s = sorted("|".join(_canon(r[c]) for c in cols) for r in df.collect())
-        res = con.execute(q.oracle)
-        rnames = [d[0] for d in res.description]
-        perm = [rnames.index(c) for c in sorted(rnames)]
-        o = sorted("|".join(_canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, f"{name} diverges on NULL-bearing input"
+def _assert_agree(spark, out, names):
+    with duck_views(out) as con:
+        for name in names:
+            compare_query(con, REGISTRY[name], REGISTRY[name].fn(spark, out))
 
 
 def test_null_values_keep_cross_engine_agreement(spark, tmp_path):
@@ -55,20 +36,12 @@ def test_null_values_keep_cross_engine_agreement(spark, tmp_path):
     later step) — the contract is that a NULL observation is simply not
     part of the series, symmetric IS NOT NULL in both engines. The
     sibling stats queries must stay agreeing too."""
-    fixture = pq.read_table(f"{SF_DIR}/events.parquet")
-    out = str(tmp_path / "nullval")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(_null_every_10th(fixture, "value"), f"{out}/events.parquet")
-    os.environ["_NULLFIX_DIR"] = out
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{out}/events.parquet')"
-    )
-    _assert_agree(spark, con, ["ewma_user_value", "event_value_anomalies",
+    events = _null_every_10th(pq.read_table(f"{SF_DIR}/events.parquet"), "value")
+    out = write_fixture(tmp_path / "nullval", events=events)
+    _assert_agree(spark, out, ["ewma_user_value", "event_value_anomalies",
                                "robust_outliers_mad", "winsorize_event_values"])
-    con.close()
     # the contract itself: NULL observations are excluded, not emitted
-    n_nonnull = sum(1 for v in _null_every_10th(fixture, "value").column("value").to_pylist() if v is not None)
+    n_nonnull = events.num_rows - events.column("value").null_count
     assert REGISTRY["ewma_user_value"].fn(spark, out).count() == n_nonnull
 
 
@@ -79,16 +52,8 @@ def test_null_text_reads_as_empty_document(spark, tmp_path):
     lines. The contract is NULL text == the empty document (symmetric
     COALESCE), so both behave exactly like the all-empty-text probe."""
     fixture = pq.read_table(f"{SF_DIR}/documents.parquet")
-    out = str(tmp_path / "nulltext")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(_null_every_10th(fixture, "text"), f"{out}/documents.parquet")
-    os.environ["_NULLFIX_DIR"] = out
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{out}/documents.parquet')"
-    )
-    _assert_agree(spark, con, ["chunk_documents", "boilerplate_line_removal"])
-    con.close()
+    out = write_fixture(tmp_path / "nulltext", documents=_null_every_10th(fixture, "text"))
+    _assert_agree(spark, out, ["chunk_documents", "boilerplate_line_removal"])
     # every document survives boilerplate removal, NULL-text ones at one
     # (empty) line — the empty-document shape, not an absence
     n_docs = fixture.num_rows
@@ -111,16 +76,8 @@ def test_negative_vec_ids_stay_in_kmeans(spark, tmp_path):
     that vector would meet no centroid and silently fall out of
     embedding_kmeans and semantic_dedup while the oracles keep it."""
     fixture = pq.read_table(f"{SF_DIR}/embeddings.parquet")
-    out = str(tmp_path / "negvec")
-    os.makedirs(out, exist_ok=True)
     mutated = _negate_every_10th(fixture, "vec_id")
     assert sum(1 for v in mutated.column("vec_id").to_pylist() if v < 0) > 0
-    pq.write_table(mutated, f"{out}/embeddings.parquet")
-    os.environ["_NULLFIX_DIR"] = out
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')"
-    )
-    _assert_agree(spark, con, ["embedding_kmeans", "semantic_dedup"])
-    con.close()
+    out = write_fixture(tmp_path / "negvec", embeddings=mutated)
+    _assert_agree(spark, out, ["embedding_kmeans", "semantic_dedup"])
     assert REGISTRY["embedding_kmeans"].fn(spark, out).count() == fixture.num_rows

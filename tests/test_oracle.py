@@ -93,3 +93,19 @@ def test_bad_sf_dir_raises_cleanly(spark):
 
     with pytest.raises(AnalysisException):
         table(spark, "/root/testdata/sf-nonexistent", "customer").count()
+
+
+def test_degenerate_sweep_manifest():
+    """Every batch of tools/degenerate_probe.py has a unique name, lists
+    only registered queries that have an oracle, and mutates only
+    io.TABLES members — so a rename fails here, not 25 minutes into a
+    sweep."""
+    from crm_etl_pipeline_spark.io import TABLES
+    from tools.degenerate_probe import PROBES
+
+    names = [name for name, _, _ in PROBES]
+    assert len(names) == len(set(names)), "duplicate batch names"
+    for name, mutations, qnames in PROBES:
+        assert set(mutations) <= set(TABLES), f"{name}: mutates {set(mutations) - set(TABLES)}"
+        missing = [q for q in qnames if q not in REGISTRY or REGISTRY[q].oracle is None]
+        assert not missing, f"{name}: unregistered or oracle-less queries {missing}"

@@ -134,8 +134,8 @@ def test_duplicate_delivery_mints_no_second_version(spark):
 
 
 def test_customer_identity_collision_contract(spark, tmp_path):
-    """Identity-collision contract for the item base (round-10
-    id_collision_customer probe): customer is the CRM item table, so a
+    """Identity-collision contract for the item base (the
+    id_collision_customer sweep batch): customer is the CRM item table, so a
     collided c_custkey puts two base rows behind one (item_id,
     BASE_TS, event_id=0) version identity with DIFFERENT values — no
     tiebreaker can order them, and the old subset-dropDuplicates
@@ -148,11 +148,12 @@ def test_customer_identity_collision_contract(spark, tmp_path):
     collisions injected, scd2_versioned_store and
     flagship_segment_revenue agree bit-for-bit cross-engine, and the
     store keeps exactly one current row per item."""
-    import math
-
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from crm_etl_pipeline_spark.registry import load_all
+
+    from tests.conftest import compare_query, duck_views, write_fixture
 
     src = "/root/testdata/sf0.001"
     cust = pq.read_table(f"{src}/customer.parquet")
@@ -166,48 +167,20 @@ def test_customer_identity_collision_contract(spark, tmp_path):
         cust.column_names.index("c_custkey"), "c_custkey",
         pa.array(ids, cust.schema.field("c_custkey").type),
     )
-    import os
-    import shutil
-
-    out = str(tmp_path / "custcollide")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(cust, f"{out}/customer.parquet")
-    for t in ("orders", "lineitem", "events"):
-        shutil.copy(f"{src}/{t}.parquet", f"{out}/{t}.parquet")
-
-    from crm_etl_pipeline_spark.registry import load_all
-
+    # the sf0.001 fact tables come along, so every key they carry
+    # resolves against the mutated sf0.001 customer
+    out = write_fixture(
+        tmp_path / "custcollide",
+        customer=cust,
+        **{t: pq.read_table(f"{src}/{t}.parquet") for t in ("orders", "lineitem", "events")},
+    )
     reg = load_all()
-    con = duckdb.connect()
-    for t in ("customer", "orders", "lineitem", "events"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet')"
-        )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        if isinstance(v, bool):
-            return str(v).lower()
-        return str(v)
-
-    for name in ("scd2_versioned_store", "flagship_segment_revenue"):
-        q = reg[name]
-        df = q.fn(spark, out)
-        rows = df.collect()
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in rows)
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, name
-        if name == "scd2_versioned_store":
-            cur = [r.item_id for r in rows if r.is_current]
-            assert len(cur) == len(set(cur))  # one current row per item
-    con.close()
+    store, flagship = (reg[n] for n in ("scd2_versioned_store", "flagship_segment_revenue"))
+    with duck_views(out) as con:
+        rows = compare_query(con, store, store.fn(spark, out))
+        compare_query(con, flagship, flagship.fn(spark, out))
+    cur = [r.item_id for r in rows if r.is_current]
+    assert len(cur) == len(set(cur))  # one current row per item
 
 
 def test_scd2_apply_single_payload_assumption(spark):

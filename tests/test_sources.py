@@ -5,7 +5,6 @@ whitespace framing, unicode, and the NULL-vs-empty distinction."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
@@ -14,50 +13,32 @@ import pyarrow.parquet as pq
 
 from crm_etl_pipeline_spark.registry import load_all
 
+from tests.conftest import compare_query, duck_views, write_fixture
+
 SF_DIR = "/root/testdata/sf0.01"
 REGISTRY = load_all()
 
 # the literal nullValue sentinel '\N' and the escape sequences '\E\N',
-# '\E\E\N' are INCLUDED since round 8: the _csv_escape/_csv_unescape
-# write convention closed the round-6 collapse residual, so every
-# string must round-trip — including the colliding class itself
+# '\E\E\N' are included: the _csv_escape/_csv_unescape write
+# convention keeps them apart from NULL, so every string must
+# round-trip — including the colliding class itself
 NASTY = ['{"k": 1}', "line1\nline2", "with,comma", 'with"quote', "with'sq",
          "back\\slash", "unié中文", None, "", "\ttab", " lead sp", "trail sp ",
          "\\N", "\\E\\N", "\\E\\E\\N", "\\Eplain"]
 
 
 def test_text_roundtrips_survive_adversarial_props(spark, tmp_path):
+    """Every NASTY props string, NULL and '' included, survives the
+    CSV, JSON and ORC roundtrips value-exact against the oracle."""
     fixture = pq.read_table(f"{SF_DIR}/events.parquet")
     vals = [NASTY[i % len(NASTY)] for i in range(fixture.num_rows)]
     nasty = fixture.set_column(
         fixture.column_names.index("props"), "props", pa.array(vals, pa.string())
     )
-    out = str(tmp_path / "nasty")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(nasty, f"{out}/events.parquet")
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{out}/events.parquet')"
-    )
-    for name in ("csv_source_roundtrip", "json_source_roundtrip", "orc_source_roundtrip"):
-        q = REGISTRY[name]
-        df = q.fn(spark, out)
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, f"{name} loses adversarial text in the roundtrip"
-    con.close()
+    out = write_fixture(tmp_path / "nasty", events=nasty)
+    with duck_views(out) as con:
+        for name in ("csv_source_roundtrip", "json_source_roundtrip", "orc_source_roundtrip"):
+            compare_query(con, REGISTRY[name], REGISTRY[name].fn(spark, out))
 
 
 def test_csv_sentinel_escape_roundtrip(spark):

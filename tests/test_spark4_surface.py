@@ -80,15 +80,13 @@ def test_recursive_closure_paths_are_parent_prefixed(spark):
 
 
 def test_variant_absent_count_moves_with_planted_key(spark, tmp_path):
-    """r11 ADVICE close: n_absent must be COMPUTED by the oracle, not
+    """n_absent must be COMPUTED by the oracle, not
     hardcoded 0. Plant '$.payload.absent' on a known subset of a
     synthetic events table (incl. one JSON-null arrival, which both
     engines count as PRESENT — variant null is a non-NULL variant;
     DuckDB json_type returns the non-NULL string 'NULL') and assert the
     full cross-engine hash contract still holds with n_absent > 0."""
     import datetime
-
-    import duckdb
 
     rows = []
     for i in range(60):
@@ -108,14 +106,11 @@ def test_variant_absent_count_moves_with_planted_key(spark, tmp_path):
         "value double, props string",
     ).write.parquet(f"{d}/events.parquet")
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet/*.parquet')"
-    )
-    from tests.conftest import compare_query
+    from tests.conftest import compare_query, duck_views
 
     q = REGISTRY["variant_props_shred"]
-    compare_query(con, q, q.fn(spark, d))
+    with duck_views(d) as con:
+        compare_query(con, q, q.fn(spark, d))
     n_absent = (
         q.fn(spark, d).agg(F.sum("n_absent").alias("a")).first()["a"]
     )

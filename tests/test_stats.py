@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from crm_etl_pipeline_spark.registry import load_all
 
+from tests.conftest import compare_query, duck_views, write_fixture
+
 SF_DIR = "/root/testdata/sf0.01"
 REGISTRY = load_all()
 
@@ -223,6 +225,13 @@ class TestPpsSystematicSample:
         assert sample_mean > pop_mean
 
 
+def _set(tbl, col, values):
+    """``tbl`` with column ``col`` replaced by ``values`` (same type)."""
+    return tbl.set_column(
+        tbl.column_names.index(col), col, pa.array(values, tbl.schema.field(col).type)
+    )
+
+
 def test_histogram_degenerate_extent_agrees(spark, tmp_path):
     """All-equal order values collapse the extent to width 0: under
     ANSI the unguarded bucket division raised DIVIDE_BY_ZERO in Spark
@@ -230,33 +239,16 @@ def test_histogram_degenerate_extent_agrees(spark, tmp_path):
     a crash on one engine and a wrong answer on the other. With the
     symmetric divisor guard every row lands in bucket 0 with
     bucket_lo == bucket_hi == the single value, in BOTH engines."""
-    import duckdb
-    import pyarrow as pa
-
-    fixture = pq.read_table(f"{SF_DIR}/orders.parquet")
-    flat = fixture.set_column(
-        fixture.column_names.index("o_totalprice"),
-        "o_totalprice",
-        pa.array([42.5] * fixture.num_rows, pa.float64()),
-    )
-    out = str(tmp_path / "flat")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(flat, f"{out}/orders.parquet")
-
-    rows = REGISTRY["histogram_order_values"].fn(spark, out).collect()
+    orders = pq.read_table(f"{SF_DIR}/orders.parquet")
+    flat = _set(orders, "o_totalprice", [42.5] * orders.num_rows)
+    out = write_fixture(tmp_path / "flat", orders=flat)
+    q = REGISTRY["histogram_order_values"]
+    with duck_views(out) as con:
+        rows = compare_query(con, q, q.fn(spark, out))
     assert len(rows) == 1
     r = rows[0]
-    assert r.bucket == 0 and r.n_orders == fixture.num_rows
+    assert r.bucket == 0 and r.n_orders == orders.num_rows
     assert r.bucket_lo == 42.5 and r.bucket_hi == 42.5
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{out}/orders.parquet')"
-    )
-    o = con.execute(REGISTRY["histogram_order_values"].oracle).fetchall()
-    con.close()
-    spark_rows = sorted(tuple(r) for r in rows)
-    assert spark_rows == sorted(o)
 
 
 def test_zero_dispersion_zscores_agree(spark, tmp_path):
@@ -266,63 +258,19 @@ def test_zero_dispersion_zscores_agree(spark, tmp_path):
     DuckDB silently emitted NaN z-scores (crash on one engine, wrong
     answer on the other). The contract is z = 0 / flag nothing, and it
     must hold BIT-FOR-BIT in both engines on the same file."""
-    import duckdb
-    import math
-
-    import pyarrow as pa
-
-    fixture = pq.read_table(f"{SF_DIR}/events.parquet")
-    flat = fixture.set_column(
-        fixture.column_names.index("value"),
-        "value",
-        pa.array([7.5] * fixture.num_rows, pa.float64()),
-    )
-    out = str(tmp_path / "flatev")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(flat, f"{out}/events.parquet")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{out}/events.parquet')"
-    )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        if isinstance(v, bool):
-            return str(v).lower()
-        return str(v)
-
-    for name in (
-        "event_value_anomalies",
-        "robust_outliers_mad",
-        "ab_test_conversion",
-    ):
-        q = REGISTRY[name]
-        df = q.fn(spark, out)
-        cols = sorted(df.columns)
-        s = sorted(
-            "|".join(canon(r[c]) for c in cols) for r in df.collect()
-        )
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted(
-            "|".join(canon(row[i]) for i in perm) for row in res.fetchall()
-        )
-        assert s == o, f"{name} diverges on zero-dispersion input"
-        # and the guard's semantics: nothing flagged, zero z everywhere
-        flag = {"ab_test_conversion": "significant"}.get(name)
-        rows = df.collect()
-        if flag:
-            assert all(not r[flag] for r in rows)
-        else:
-            zcol = "zscore" if name == "event_value_anomalies" else "robust_z"
-            flagcol = "is_anomaly" if name == "event_value_anomalies" else "is_outlier"
-            assert all(r[zcol] == 0.0 and not r[flagcol] for r in rows)
-    con.close()
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    out = write_fixture(tmp_path / "flatev", events=_set(events, "value", [7.5] * events.num_rows))
+    with duck_views(out) as con:
+        for name in ("event_value_anomalies", "robust_outliers_mad", "ab_test_conversion"):
+            q = REGISTRY[name]
+            rows = compare_query(con, q, q.fn(spark, out))
+            # and the guard's semantics: nothing flagged, zero z everywhere
+            if name == "ab_test_conversion":
+                assert all(not r.significant for r in rows)
+            else:
+                zcol = "zscore" if name == "event_value_anomalies" else "robust_z"
+                flagcol = "is_anomaly" if name == "event_value_anomalies" else "is_outlier"
+                assert all(r[zcol] == 0.0 and not r[flagcol] for r in rows)
 
 
 def test_ab_empty_arm_reads_null(spark, tmp_path):
@@ -334,22 +282,19 @@ def test_ab_empty_arm_reads_null(spark, tmp_path):
     flag are all NULL, counts are 0, and BOTH engines agree
     bit-for-bit — including on a fully empty events table (one
     all-zero row, NULL readouts)."""
-    import duckdb
-
-    fixture = pq.read_table(f"{SF_DIR}/events.parquet")
-    uid = fixture.column("user_id")[0].as_py()
     import pyarrow.compute as pc
 
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    uid = events.column("user_id")[0].as_py()
     cases = {
-        "oneuser": fixture.filter(pc.equal(fixture.column("user_id"), uid)),
-        "noevents": fixture.slice(0, 0),
+        "oneuser": events.filter(pc.equal(events.column("user_id"), uid)),
+        "noevents": events.slice(0, 0),
     }
     q = REGISTRY["ab_test_conversion"]
     for label, tbl in cases.items():
-        out = str(tmp_path / label)
-        os.makedirs(out, exist_ok=True)
-        pq.write_table(tbl, f"{out}/events.parquet")
-        rows = q.fn(spark, out).collect()
+        out = write_fixture(tmp_path / label, events=tbl)
+        with duck_views(out) as con:
+            rows = compare_query(con, q, q.fn(spark, out))
         assert len(rows) == 1
         r = rows[0]
         # at least one arm is empty in both cases
@@ -359,29 +304,6 @@ def test_ab_empty_arm_reads_null(spark, tmp_path):
             assert r["rate_a"] is None
         if r["n_b"] == 0:
             assert r["rate_b"] is None
-        cols = sorted(rows[0].asDict().keys())
-
-        # order-insensitive canonical compare, same method as the sweep
-        def canon(v):
-            if v is None:
-                return "NULL"
-            if isinstance(v, float):
-                return "NaN" if math.isnan(v) else repr(v)
-            if isinstance(v, bool):
-                return str(v).lower()
-            return str(v)
-
-        con = duckdb.connect()
-        con.execute(
-            f"CREATE VIEW events AS SELECT * FROM read_parquet('{out}/events.parquet')"
-        )
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        con.close()
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in rows)
-        assert s == o, f"ab_test_conversion diverges on {label}"
 
 
 def test_constant_dim_embeddings_agree(spark, tmp_path):
@@ -392,54 +314,20 @@ def test_constant_dim_embeddings_agree(spark, tmp_path):
     both engines must agree bit-for-bit on a planted constant dim
     (plus a planted all-zero vector, which exercises the norm paths of
     the ANN family — those were already guarded)."""
-    import math
-
-    import duckdb
-    import pyarrow as pa
-
-    fixture = pq.read_table(f"{SF_DIR}/embeddings.parquet")
-    vecs = fixture.column("embedding").to_pylist()
-    dim = len(vecs[0])
-    vecs[0] = [0.0] * dim
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    vecs = emb.column("embedding").to_pylist()
+    vecs[0] = [0.0] * len(vecs[0])
     for v in vecs:
         v[3] = 0.25
-    planted = fixture.set_column(
-        fixture.column_names.index("embedding"),
-        "embedding",
-        pa.array(vecs, pa.list_(pa.float32())),
-    )
-    out = str(tmp_path / "constdim")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(planted, f"{out}/embeddings.parquet")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')"
-    )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    for name, col, expect in (
-        ("embedding_standardize", "z", 0.0),
-        ("embedding_quantize_int8", "q8", 0),
-    ):
-        q = REGISTRY[name]
-        df = q.fn(spark, out)
-        cols = sorted(df.columns)
-        rows = df.collect()
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in rows)
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, f"{name} diverges on a constant dimension"
-        assert all(r[col] == expect for r in rows if r.dim == 3)
-    con.close()
+    out = write_fixture(tmp_path / "constdim", embeddings=_set(emb, "embedding", vecs))
+    with duck_views(out) as con:
+        for name, col, expect in (
+            ("embedding_standardize", "z", 0.0),
+            ("embedding_quantize_int8", "q8", 0),
+        ):
+            q = REGISTRY[name]
+            rows = compare_query(con, q, q.fn(spark, out))
+            assert all(r[col] == expect for r in rows if r.dim == 3)
 
 
 def test_zero_mass_sampling_is_empty(spark, tmp_path):
@@ -449,31 +337,14 @@ def test_zero_mass_sampling_is_empty(spark, tmp_path):
     ANSI Spark crashed on the total-weight division while DuckDB
     reached empty through NULL/NaN arithmetic. Both engines must agree
     on the same file."""
-    import duckdb
-
-    import pyarrow as pa
-
-    fixture = pq.read_table(f"{SF_DIR}/orders.parquet")
-    zeroed = fixture.set_column(
-        fixture.column_names.index("o_totalprice"),
-        "o_totalprice",
-        pa.array([0.0] * fixture.num_rows, pa.float64()),
+    orders = pq.read_table(f"{SF_DIR}/orders.parquet")
+    out = write_fixture(
+        tmp_path / "zeroorders", orders=_set(orders, "o_totalprice", [0.0] * orders.num_rows)
     )
-    out = str(tmp_path / "zeroorders")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(zeroed, f"{out}/orders.parquet")
-    os.symlink(f"{SF_DIR}/customer.parquet", f"{out}/customer.parquet")
-
-    con = duckdb.connect()
-    for t in ("orders", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet')"
-        )
-    for name in ("pps_systematic_sample", "weighted_sample_allocation"):
-        q = REGISTRY[name]
-        assert q.fn(spark, out).count() == 0, f"{name} must sample nothing"
-        assert len(con.execute(q.oracle).fetchall()) == 0
-    con.close()
+    with duck_views(out) as con:
+        for name in ("pps_systematic_sample", "weighted_sample_allocation"):
+            q = REGISTRY[name]
+            assert compare_query(con, q, q.fn(spark, out)) == [], f"{name} must sample nothing"
 
 
 def test_constant_column_correlation_is_null(spark, tmp_path):
@@ -486,48 +357,18 @@ def test_constant_column_correlation_is_null(spark, tmp_path):
     (a nonzero constant can leave a tiny rounding residual, where the
     contract is just cross-engine bit-equality), bit-for-bit in both
     engines on the same file."""
-    import duckdb
-    import math
-
-    import pyarrow as pa
-
-    fixture = pq.read_table(f"{SF_DIR}/lineitem.parquet")
-    flat = fixture.set_column(
-        fixture.column_names.index("l_discount"),
-        "l_discount",
-        pa.array([0.0] * fixture.num_rows, pa.float64()),
+    lineitem = pq.read_table(f"{SF_DIR}/lineitem.parquet")
+    out = write_fixture(
+        tmp_path / "flatdisc", lineitem=_set(lineitem, "l_discount", [0.0] * lineitem.num_rows)
     )
-    out = str(tmp_path / "flatdisc")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(flat, f"{out}/lineitem.parquet")
-
     q = REGISTRY["pearson_correlation_matrix"]
-    rows = q.fn(spark, out).collect()
+    with duck_views(out) as con:
+        rows = compare_query(con, q, q.fn(spark, out))
     assert rows, "per-flag output must survive the degenerate column"
     for r in rows:
         assert r.corr_qty_disc is None and r.corr_price_disc is None
         # the untouched pair keeps a real correlation
         assert r.corr_qty_price is not None and abs(r.corr_qty_price) <= 1.0
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{out}/lineitem.parquet')"
-    )
-    res = con.execute(q.oracle)
-    names = [d[0] for d in res.description]
-    perm = [names.index(c) for c in sorted(names)]
-    o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-    con.close()
-    cols = sorted(c for c in rows[0].asDict())
-    s = sorted("|".join(canon(r[c]) for c in cols) for r in rows)
-    assert s == o, "constant-column correlations diverge across engines"
 
 
 def test_zero_norm_vector_cosine_is_zero(spark, tmp_path):
@@ -536,45 +377,13 @@ def test_zero_norm_vector_cosine_is_zero(spark, tmp_path):
     was 0/0 (ANSI DIVIDE_BY_ZERO in Spark, engine-specific NaN/NULL in
     DuckDB). The contract is cosine = 0.0 (rank-neutral, below every
     similarity threshold), bit-for-bit in both engines."""
-    import duckdb
-    import math
-
-    import pyarrow as pa
-
-    fixture = pq.read_table(f"{SF_DIR}/embeddings.parquet")
-    embs = fixture.column("embedding").to_pylist()
-    embs[0] = [0.0] * len(embs[0])
-    zeroed = fixture.set_column(
-        fixture.column_names.index("embedding"),
-        "embedding",
-        pa.array(embs, fixture.schema.field("embedding").type),
-    )
-    out = str(tmp_path / "zerovec")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(zeroed, f"{out}/embeddings.parquet")
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')"
-    )
-    for name in ("ann_cosine_topk", "embedding_near_dup"):
-        q = REGISTRY[name]
-        df = q.fn(spark, out)
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, f"{name} diverges on a zero-norm vector"
-    con.close()
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    vecs = emb.column("embedding").to_pylist()
+    vecs[0] = [0.0] * len(vecs[0])
+    out = write_fixture(tmp_path / "zerovec", embeddings=_set(emb, "embedding", vecs))
+    with duck_views(out) as con:
+        for name in ("ann_cosine_topk", "embedding_near_dup"):
+            compare_query(con, REGISTRY[name], REGISTRY[name].fn(spark, out))
 
 
 def test_zero_revenue_month_growth_is_null(spark, tmp_path):
@@ -582,134 +391,76 @@ def test_zero_revenue_month_growth_is_null(spark, tmp_path):
     order price 0.0 each month's revenue is 0, so every growth ratio
     was 0/0 — the contract is NULL (undefined, like the first month),
     identical in both engines."""
-    import duckdb
-
-    import pyarrow as pa
-
-    fixture = pq.read_table(f"{SF_DIR}/orders.parquet")
-    zeroed = fixture.set_column(
-        fixture.column_names.index("o_totalprice"),
-        "o_totalprice",
-        pa.array([0.0] * fixture.num_rows, pa.float64()),
+    orders = pq.read_table(f"{SF_DIR}/orders.parquet")
+    out = write_fixture(
+        tmp_path / "zrev", orders=_set(orders, "o_totalprice", [0.0] * orders.num_rows)
     )
-    out = str(tmp_path / "zrev")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(zeroed, f"{out}/orders.parquet")
-    os.symlink(f"{SF_DIR}/customer.parquet", f"{out}/customer.parquet")
-
     q = REGISTRY["mom_revenue_growth"]
-    rows = q.fn(spark, out).collect()
+    with duck_views(out) as con:
+        rows = compare_query(con, q, q.fn(spark, out))
     assert rows and all(r.mom_growth is None for r in rows)
-    con = duckdb.connect()
-    for t in ("orders", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet')"
-        )
-    o = con.execute(q.oracle).fetchall()
-    con.close()
-    assert len(o) == len(rows) and all(row[-1] is None for row in o)
 
 
 def test_empty_load_audit_and_cube_agree(spark, tmp_path):
-    """Empty-relation contracts from the round-7 empty_orders /
-    empty_lineitem sweep probes, pinned: (a) dq_audit_orders on an
-    empty load emits ALL FIVE rules with 0 violations / 0 checked /
-    passed (the fk rule row used to vanish — its broadcast attach key
-    read least(0,1)=0 — and the conditional SUMs read NULL); (b) the
-    cube of an empty relation is the empty relation in BOTH engines
-    (DuckDB alone would emit the COUNT-0 grand-total grouping-set row;
-    the symmetric HAVING/filter removes it)."""
-    import duckdb
-
-    orders = pq.read_table(f"{SF_DIR}/orders.parquet").slice(0, 0)
-    lineitem = pq.read_table(f"{SF_DIR}/lineitem.parquet").slice(0, 0)
-    customer = pq.read_table(f"{SF_DIR}/customer.parquet")
-    out = str(tmp_path / "empty")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(orders, f"{out}/orders.parquet")
-    pq.write_table(lineitem, f"{out}/lineitem.parquet")
-    pq.write_table(customer, f"{out}/customer.parquet")
-
-    audit = {r.rule: r for r in REGISTRY["dq_audit_orders"].fn(spark, out).collect()}
-    assert set(audit) == {
-        "orderkey_unique",
+    """Empty-relation contracts (the empty_orders / empty_lineitem sweep
+    batches): (a) dq_audit_orders on an empty load emits ALL FIVE rules
+    with 0 violations / 0 checked / passed (the fk rule row used to
+    vanish — its broadcast attach key read least(0,1)=0 — and the
+    conditional SUMs read NULL); (b) the cube of an empty relation is
+    the empty relation in BOTH engines (DuckDB alone would emit the
+    COUNT-0 grand-total grouping-set row; the symmetric HAVING/filter
+    removes it)."""
+    out = write_fixture(
+        tmp_path / "empty",
+        **{t: pq.read_table(f"{SF_DIR}/{t}.parquet").slice(0, 0) for t in ("orders", "lineitem")},
+    )
+    audit, cube = (REGISTRY[n] for n in ("dq_audit_orders", "cube_lineitem_flags"))
+    with duck_views(out) as con:
+        rules = compare_query(con, audit, audit.fn(spark, out))
+        assert compare_query(con, cube, cube.fn(spark, out)) == []
+    assert sorted(r.rule for r in rules) == [
         "custkey_fk_resolves",
-        "totalprice_positive",
         "orderdate_in_range",
+        "orderkey_unique",
         "status_in_domain",
-    }
-    for r in audit.values():
+        "totalprice_positive",
+    ]
+    for r in rules:
         assert r.n_violations == 0 and r.n_checked == 0 and r.passed
 
-    assert REGISTRY["cube_lineitem_flags"].fn(spark, out).count() == 0
-    con = duckdb.connect()
-    for t in ("orders", "lineitem", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet')"
-        )
-    assert len(con.execute(REGISTRY["cube_lineitem_flags"].oracle).fetchall()) == 0
-    assert len(con.execute(REGISTRY["dq_audit_orders"].oracle).fetchall()) == 5
-    con.close()
+
+def _standardize_drops_exactly(spark, out, all_ids, bad_ids):
+    """embedding_standardize on ``out`` agrees with its oracle and emits
+    every vec_id in ``all_ids`` except ``bad_ids``."""
+    q = REGISTRY["embedding_standardize"]
+    with duck_views(out) as con:
+        out_ids = {r.vec_id for r in compare_query(con, q, q.fn(spark, out))}
+    assert out_ids.isdisjoint(bad_ids)  # no corrupt row survives
+    assert out_ids == set(all_ids) - bad_ids  # every clean vector does
 
 
 def test_null_embedding_rows_are_excluded_everywhere(spark, tmp_path):
-    """NULL-vector contract (round-7 null_embeddings sweep probe): a
-    row with a NULL embedding participates in NO vector operator — it
-    has no direction, norm, or cell. Before the contract, five of the
+    """NULL-vector contract (the null_embeddings sweep batch): a row
+    with a NULL embedding participates in NO vector operator — it has
+    no direction, norm, or cell. Before the contract, five of the
     family's queries diverged cross-engine (NULL-poisoned moments,
     shifted IVF centroids, NULL kmeans seeds). Pin: with 10% NULL
-    vectors, standardize/quantize emit exactly the non-NULL rows and
-    BOTH engines agree bit-for-bit on a moment-sensitive query."""
-    import duckdb
-
+    vectors, standardize emits exactly the non-NULL rows and BOTH
+    engines agree bit-for-bit on that moment-sensitive query."""
     emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
-    vals = emb.column("embedding").to_pylist()
-    vals = [None if i % 10 == 3 else v for i, v in enumerate(vals)]
-    emb = emb.set_column(
-        emb.column_names.index("embedding"),
-        "embedding",
-        pa.array(vals, emb.schema.field("embedding").type),
-    )
-    out = str(tmp_path / "nullvec")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(emb, f"{out}/embeddings.parquet")
-
-    ids = pq.read_table(f"{out}/embeddings.parquet").column("vec_id").to_pylist()
+    vals = [None if i % 10 == 3 else v for i, v in enumerate(emb.column("embedding").to_pylist())]
+    out = write_fixture(tmp_path / "nullvec", embeddings=_set(emb, "embedding", vals))
+    ids = emb.column("vec_id").to_pylist()
     null_ids = {i for i, v in zip(ids, vals) if v is None}
-    q = REGISTRY["embedding_standardize"]
-    df = q.fn(spark, out)
-    out_ids = {r.vec_id for r in df.select("vec_id").distinct().collect()}
-    assert out_ids.isdisjoint(null_ids)  # no NULL-vector row survives
-    assert out_ids == set(ids) - null_ids  # every real vector does
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')"
-    )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    cols = sorted(df.columns)
-    s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-    res = con.execute(q.oracle)
-    names = [d[0] for d in res.description]
-    perm = [names.index(c) for c in sorted(names)]
-    o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-    con.close()
-    assert s == o
+    _standardize_drops_exactly(spark, out, ids, null_ids)
 
 
 def test_constant_population_zscore_contract(spark, tmp_path):
-    """Zero-dispersion residual contract from the round-8 const_vec /
-    const_values tie-storm probes, pinned: an all-equal population's
-    variance via E[x²]−mean² is a tiny double residual of EITHER sign —
-    DuckDB sqrt raises on the negative side while Spark sails into NaN,
-    past the == 0 guard. Both engines clamp sqrt(greatest(0, var))
+    """Zero-dispersion residual contract (the const_vec / const_values
+    tie-storm sweep batches): an all-equal population's variance via
+    E[x²]−mean² is a tiny double residual of EITHER sign — DuckDB sqrt
+    raises on the negative side while Spark sails into NaN, past the
+    == 0 guard. Both engines clamp sqrt(greatest(0, var))
     symmetrically, which guarantees cross-engine agreement for either
     residual sign (a +1e-18 residual yields tiny-sd z-scores computed
     by the IDENTICAL IEEE chain in both engines). On these two pinned
@@ -718,56 +469,34 @@ def test_constant_population_zscore_contract(spark, tmp_path):
     event_value_anomalies all-zero z; (b) an all-identical embedding
     corpus → embedding_standardize all-zero z; both must also
     hash-match their oracles on the mutated fixture."""
-    import duckdb
-
-    out = str(tmp_path / "const")
-    os.makedirs(out, exist_ok=True)
-    tables = ("region nation customer supplier part orders lineitem "
-              "events documents embeddings").split()
     events = pq.read_table(f"{SF_DIR}/events.parquet")
-    events = events.set_column(
-        events.column_names.index("value"), "value",
-        pa.array([42.5] * events.num_rows, pa.float64()),
-    )
     emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
     first = next(e for e in emb.column("embedding").to_pylist() if e is not None)
-    emb = emb.set_column(
-        emb.column_names.index("embedding"), "embedding",
-        pa.array([first] * emb.num_rows, emb.schema.field("embedding").type),
+    out = write_fixture(
+        tmp_path / "const",
+        events=_set(events, "value", [42.5] * events.num_rows),
+        embeddings=_set(emb, "embedding", [first] * emb.num_rows),
     )
-    pq.write_table(events, f"{out}/events.parquet")
-    pq.write_table(emb, f"{out}/embeddings.parquet")
-    for t in tables:
-        if t not in ("events", "embeddings"):
-            os.symlink(f"{SF_DIR}/{t}.parquet", f"{out}/{t}.parquet")
-
-    from tests.conftest import compare_query
-
-    duck = duckdb.connect()
-    for t in tables:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet')"
-        )
-    for name in ("event_value_anomalies", "embedding_standardize"):
-        compare_query(duck, REGISTRY[name], REGISTRY[name].fn(spark, out))
-    zrows = REGISTRY["event_value_anomalies"].fn(spark, out).collect()
+    anomalies, standardize = (
+        REGISTRY[n] for n in ("event_value_anomalies", "embedding_standardize")
+    )
+    with duck_views(out) as con:
+        zrows = compare_query(con, anomalies, anomalies.fn(spark, out))
+        srows = compare_query(con, standardize, standardize.fn(spark, out))
     assert zrows and all(r.zscore == 0.0 and not r.is_anomaly for r in zrows)
-    srows = REGISTRY["embedding_standardize"].fn(spark, out).collect()
     assert srows and all(r.z == 0.0 for r in srows)
 
 
 def test_nonfinite_embedding_rows_are_excluded_everywhere(spark, tmp_path):
-    """Non-finite-component contract (round-9 nan_inf_embeddings sweep
-    probe), the corruption twin of the NULL-vector contract: before it,
-    ONE NaN or Inf component killed every embedding query in BOTH
+    """Non-finite-component contract (the nan_inf_embeddings sweep
+    batch), the corruption twin of the NULL-vector contract: without
+    it, ONE NaN or Inf component kills every embedding query in BOTH
     engines (the fixed-point dot's NaN -> long cast is an ANSI
     ARITHMETIC_OVERFLOW in Spark and a ConversionException in DuckDB —
-    13/13 crashed, the task, not the row). Pin: with NaN and Inf
-    components injected, standardize emits exactly the finite rows and
-    both engines agree bit-for-bit on the moment-sensitive query — one
+    the task fails, not the row). Pin: with NaN and Inf components
+    injected, standardize emits exactly the finite rows and both
+    engines agree bit-for-bit on the moment-sensitive query — one
     corrupt row is one excluded row, never the task."""
-    import duckdb
-
     emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
     vals = emb.column("embedding").to_pylist()
     corrupt_pos = set()
@@ -778,108 +507,35 @@ def test_nonfinite_embedding_rows_are_excluded_everywhere(spark, tmp_path):
         if i not in corrupt_pos:
             vals[i] = list(vals[i][:-1]) + [float("inf")]
             corrupt_pos.add(i)
-    emb = emb.set_column(
-        emb.column_names.index("embedding"),
-        "embedding",
-        pa.array(vals, emb.schema.field("embedding").type),
-    )
-    out = str(tmp_path / "nanvec")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(emb, f"{out}/embeddings.parquet")
-
+    out = write_fixture(tmp_path / "nanvec", embeddings=_set(emb, "embedding", vals))
     ids = emb.column("vec_id").to_pylist()
-    corrupt_ids = {ids[i] for i in corrupt_pos}
-    q = REGISTRY["embedding_standardize"]
-    df = q.fn(spark, out)
-    out_ids = {r.vec_id for r in df.select("vec_id").distinct().collect()}
-    assert out_ids.isdisjoint(corrupt_ids)  # no corrupt row survives
-    assert out_ids == set(ids) - corrupt_ids  # every finite vector does
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')"
-    )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    cols = sorted(df.columns)
-    s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-    res = con.execute(q.oracle)
-    names = [d[0] for d in res.description]
-    perm = [names.index(c) for c in sorted(names)]
-    o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-    con.close()
-    assert s == o
+    _standardize_drops_exactly(spark, out, ids, {ids[i] for i in corrupt_pos})
 
 
 def test_null_component_embedding_rows_are_excluded_everywhere(spark, tmp_path):
-    """NULL-component contract (round-10 advisor find), the third leg
-    of the corrupt-vector family: before it, a [1.0, NULL, 2.0] row
-    SPLIT the engines — Spark's three-valued ~exists(...) dropped it
-    (lambda over the NULL element yields NULL, exists yields NULL, the
-    filter drops) while DuckDB's NOT list_bool_or(...) ignores NULL
-    lambda results and kept it, feeding NULL into the fixed-point dot.
-    Pin: with NULL components injected, both engines exclude exactly
-    the corrupt rows and agree bit-for-bit on the moment-sensitive
-    query."""
-    import duckdb
-
+    """NULL-component contract, the third leg of the corrupt-vector
+    family: a [1.0, NULL, 2.0] row used to SPLIT the engines — Spark's
+    three-valued ~exists(...) dropped it (lambda over the NULL element
+    yields NULL, exists yields NULL, the filter drops) while DuckDB's
+    NOT list_bool_or(...) ignores NULL lambda results and kept it,
+    feeding NULL into the fixed-point dot. Pin: with NULL components
+    injected, both engines exclude exactly the corrupt rows and agree
+    bit-for-bit on the moment-sensitive query."""
     emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
     vals = emb.column("embedding").to_pylist()
     corrupt_pos = set()
     for i in range(0, len(vals), 19):
         if vals[i] is not None and len(vals[i]) >= 3:
-            v = list(vals[i])
-            v[1] = None
-            vals[i] = v
+            vals[i] = [vals[i][0], None, *vals[i][2:]]
             corrupt_pos.add(i)
     assert corrupt_pos  # the probe must actually inject something
-    emb = emb.set_column(
-        emb.column_names.index("embedding"),
-        "embedding",
-        pa.array(vals, emb.schema.field("embedding").type),
-    )
-    out = str(tmp_path / "nullcomp")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(emb, f"{out}/embeddings.parquet")
-
+    out = write_fixture(tmp_path / "nullcomp", embeddings=_set(emb, "embedding", vals))
     ids = emb.column("vec_id").to_pylist()
-    corrupt_ids = {ids[i] for i in corrupt_pos}
-    q = REGISTRY["embedding_standardize"]
-    df = q.fn(spark, out)
-    out_ids = {r.vec_id for r in df.select("vec_id").distinct().collect()}
-    assert out_ids.isdisjoint(corrupt_ids)  # no corrupt row survives
-    assert out_ids == set(ids) - corrupt_ids  # every clean vector does
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')"
-    )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        return str(v)
-
-    cols = sorted(df.columns)
-    s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-    res = con.execute(q.oracle)
-    names = [d[0] for d in res.description]
-    perm = [names.index(c) for c in sorted(names)]
-    o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-    con.close()
-    assert s == o
+    _standardize_drops_exactly(spark, out, ids, {ids[i] for i in corrupt_pos})
 
 
 def test_extreme_magnitude_contract(spark, tmp_path):
-    """Extreme-magnitude contract (round-9 extreme_values sweep probe),
+    """Extreme-magnitude contract (the extreme_values sweep batch),
     three classes pinned on a fixture with ±8.8e13 values and one row
     at 9.9e15 (just under the DECIMAL(18,2) per-row ceiling):
 
@@ -892,107 +548,57 @@ def test_extreme_magnitude_contract(spark, tmp_path):
        2^53 scaled units, where Spark's BigDecimal cast is correctly
        rounded. Oracles route the edge cast through VARCHAR (string
        parse is correctly rounded in both engines).
-    3. CAST(FLOOR(garbage) AS INT) overflowed in both engines — the
-       backoff attempts mapping now takes the mod in wide arithmetic
-       BEFORE the narrow cast. Round-10 advisor find: the round-9 fix
-       (ABS(FLOOR(v)) % 12) still materialized FLOOR(v) as an integer,
-       so Spark's floor(double)->LONG raised ANSI overflow beyond
-       ~9.2e18 while DuckDB's all-double path succeeded. The ladder is
-       now all-double on BOTH sides (FLOOR(fmod(ABS(v), 12))), pinned
+    3. CAST(FLOOR(garbage) AS INT) overflows in both engines, and
+       materializing FLOOR(v) as an integer at all makes Spark's
+       floor(double)->LONG raise ANSI overflow beyond ~9.2e18 while
+       DuckDB's all-double path succeeds. The backoff attempts ladder
+       is all-double on BOTH sides (FLOOR(fmod(ABS(v), 12))), pinned
        below on a separate backoff-only fixture at 9.5e18 (the decimal
        moments queries have a documented 1e16 per-row contract ceiling,
        so the beyond-int64 magnitude only applies to the ladder) plus a
-       fractional negative exercising the reordered floor/mod.
+       fractional negative exercising the floor/mod order.
 
     All three are no-ops at clean-fixture magnitudes. Pin: both engines
     agree bit-for-bit on the mutated fixture for a moments query, a
     decimal-sum query, and the backoff ladder."""
-    import duckdb
-
-    ev = pq.read_table(f"{SF_DIR}/events.parquet")
-    vals = ev.column("value").to_pylist()
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    vals = events.column("value").to_pylist()
     for i in range(0, len(vals), 13):
         vals[i] = 8.8e13 if (i // 13) % 2 == 0 else -8.8e13
     vals[3] = 9.9e15
-    ev = ev.set_column(ev.column_names.index("value"), "value",
-                       pa.array(vals, pa.float64()))
-    out = str(tmp_path / "extreme")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(ev, f"{out}/events.parquet")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{out}/events.parquet')"
-    )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        if isinstance(v, bool):
-            return str(v).lower()
-        return str(v)
-
-    for name in ("event_value_anomalies", "salted_user_event_totals",
-                 "backoff_penalty_audit"):
-        q = REGISTRY[name]
-        df = q.fn(spark, out)
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, name
-    con.close()
+    ev = _set(events, "value", vals)
+    out = write_fixture(tmp_path / "extreme", events=ev)
+    with duck_views(out) as con:
+        for name in ("event_value_anomalies", "salted_user_event_totals",
+                     "backoff_penalty_audit"):
+            compare_query(con, REGISTRY[name], REGISTRY[name].fn(spark, out))
 
     # backoff-only follow-up: |v| beyond int64 (9.5e18 > 2^63) and a
     # fractional negative — the shapes the all-double ladder fixed
-    vals2 = ev.column("value").to_pylist()
-    vals2[7] = 9.5e18
-    vals2[11] = -7.5
-    ev2 = ev.set_column(ev.column_names.index("value"), "value",
-                        pa.array(vals2, pa.float64()))
+    vals[7] = 9.5e18
+    vals[11] = -7.5
     # the ladder only sees event_type='error' rows — force the filter
-    etypes = ev2.column("event_type").to_pylist()
-    etypes[7] = "error"
-    etypes[11] = "error"
-    ev2 = ev2.set_column(ev2.column_names.index("event_type"), "event_type",
-                         pa.array(etypes, ev2.schema.field("event_type").type))
-    out2 = str(tmp_path / "extreme_int64")
-    os.makedirs(out2, exist_ok=True)
-    pq.write_table(ev2, f"{out2}/events.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{out2}/events.parquet')"
-    )
+    etypes = ev.column("event_type").to_pylist()
+    etypes[7] = etypes[11] = "error"
+    ev2 = _set(_set(ev, "value", vals), "event_type", etypes)
+    out2 = write_fixture(tmp_path / "extreme_int64", events=ev2)
     q = REGISTRY["backoff_penalty_audit"]
-    df = q.fn(spark, out2)
-    cols = sorted(df.columns)
-    s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-    res = con.execute(q.oracle)
-    names = [d[0] for d in res.description]
-    perm = [names.index(c) for c in sorted(names)]
-    o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-    con.close()
-    assert s == o
+    with duck_views(out2) as con:
+        compare_query(con, q, q.fn(spark, out2))
 
 
 def test_embedding_identity_collision_contract(spark, tmp_path):
-    """Identity-collision contract for vectors (round-10
-    id_collision_embs probe): when the SAME vec_id carries DIFFERENT
-    embeddings, the hash-rank seed orderings (ORDER BY md5(vec_id),
-    vec_id) in k-means and the PQ per-subspace codebooks TIE, so the
-    engines trained on different seed vectors and every assignment
-    diverged. Training loaders now resolve one deterministic winner
-    per vec_id (lexicographically smallest vd, NULLS FIRST — Spark
+    """Identity-collision contract for vectors (the id_collision_embs
+    sweep batch): when the SAME vec_id carries DIFFERENT embeddings,
+    the hash-rank seed orderings (ORDER BY md5(vec_id), vec_id) in
+    k-means and the PQ per-subspace codebooks TIE, so the engines
+    would train on different seed vectors and every assignment would
+    diverge. Training loaders resolve one deterministic winner per
+    vec_id (lexicographically smallest vd, NULLS FIRST — Spark
     _one_per_vec / the oracle's raw_emb winner CTE). Pin: with
     collisions injected, embedding_kmeans and ann_pq_adc agree
     bit-for-bit cross-engine; serving scans pass collisions through
     symmetrically (certified by the sweep batch)."""
-    import duckdb
-
     emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
     ids = emb.column("vec_id").to_pylist()
     n_coll = 0
@@ -1000,36 +606,7 @@ def test_embedding_identity_collision_contract(spark, tmp_path):
         ids[i] = ids[i - 1]
         n_coll += 1
     assert n_coll
-    emb = emb.set_column(
-        emb.column_names.index("vec_id"), "vec_id",
-        pa.array(ids, emb.schema.field("vec_id").type),
-    )
-    out = str(tmp_path / "vidcollide")
-    os.makedirs(out, exist_ok=True)
-    pq.write_table(emb, f"{out}/embeddings.parquet")
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')"
-    )
-
-    def canon(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else repr(v)
-        if isinstance(v, bool):
-            return str(v).lower()
-        return str(v)
-
-    for name in ("embedding_kmeans", "ann_pq_adc"):
-        q = REGISTRY[name]
-        df = q.fn(spark, out)
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-        assert s == o, name
-    con.close()
+    out = write_fixture(tmp_path / "vidcollide", embeddings=_set(emb, "vec_id", ids))
+    with duck_views(out) as con:
+        for name in ("embedding_kmeans", "ann_pq_adc"):
+            compare_query(con, REGISTRY[name], REGISTRY[name].fn(spark, out))

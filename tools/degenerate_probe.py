@@ -1,17 +1,18 @@
 """Degenerate-input sweep: run division-, sqrt- and emptiness-sensitive
-queries on mutated copies of the sf0.01 tables and compare the full
-canonicalized output of Spark against the DuckDB oracle (the
-FIXTURES.md §6 methodology).
+queries on mutated copies of the sf0.01 tables and compare each with
+its DuckDB oracle through ``tests/conftest.py``'s ``compare_query``
+(FIXTURES.md §6).
 
 Each entry of ``PROBES`` is one batch: a name, a ``{table: mutator}``
 map and the queries to run. A batch builds its fixture in
-``/tmp/deg_<name>`` (the sf0.01 files symlinked, each mutated table
+``/tmp/deg_<name>`` with ``write_fixture`` (each mutated table
 rewritten with a degenerate shape: constant or zero columns, empty or
 all-unique text, zero-norm vectors, single-row or empty tables, NULL or
-colliding ids, malformed JSON, ...), then runs every listed query in
-both engines. ``OK`` means the canonical rows agree bit for bit; a
-divergence or a crash on either side prints loudly and counts as
-non-OK. The exit status is 1 when any probe is non-OK.
+colliding ids, malformed JSON, ...; the other tables symlinked), then
+runs every listed query in both engines. ``OK`` means the canonical
+rows, columns and type families agree; a divergence or a crash on
+either side prints loudly and counts as non-OK. The exit status is 1
+when any probe is non-OK.
 
 Run from the repo root:
 
@@ -25,11 +26,7 @@ measurement run.
 from __future__ import annotations
 
 import datetime
-import math
-import os
-import shutil
 import sys
-import traceback
 from pathlib import Path
 
 import duckdb
@@ -41,64 +38,24 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from crm_etl_pipeline_spark.registry import load_all  # noqa: E402
 from crm_etl_pipeline_spark.session import get_spark  # noqa: E402
+from tests.conftest import SF_DIR, compare_query, duck_views, write_fixture  # noqa: E402
 
-SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 REGISTRY = load_all()
 
 
-def make_fixture(name, mutations):
-    """Copy sf0.01 into /tmp/deg_<name>, applying {table: fn(Table)->Table}."""
-    out = f"/tmp/deg_{name}"
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    for t in TABLES:
-        src = f"{SF_DIR}/{t}.parquet"
-        if t in mutations:
-            pq.write_table(mutations[t](pq.read_table(src)), f"{out}/{t}.parquet")
-        else:
-            os.symlink(src, f"{out}/{t}.parquet")
-    return out
-
-
-def canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    if isinstance(v, bool):
-        return str(v).lower()
-    return str(v)
-
-
-def compare(spark, qname, fixture_dir):
+def compare(spark, con, qname, fixture_dir):
+    """One probe's verdict: OK, DIVERGE (a failed ``compare_query``
+    check) or the engine that crashed."""
     q = REGISTRY[qname]
     try:
-        df = q.fn(spark, fixture_dir)
-        cols = sorted(df.columns)
-        s = sorted("|".join(canon(r[c]) for c in cols) for r in df.collect())
+        rows = compare_query(con, q, q.fn(spark, fixture_dir))
+    except AssertionError as e:
+        return f"DIVERGE {str(e)[:500]}"
+    except duckdb.Error as e:
+        return f"ORACLE CRASH: {type(e).__name__}: {str(e)[:300]}"
     except Exception as e:  # noqa: BLE001 - report, don't abort the sweep
         return f"SPARK CRASH: {type(e).__name__}: {str(e)[:300]}"
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fixture_dir}/{t}.parquet')"
-        )
-    try:
-        res = con.execute(q.oracle)
-        names = [d[0] for d in res.description]
-        perm = [names.index(c) for c in sorted(names)]
-        o = sorted("|".join(canon(row[i]) for i in perm) for row in res.fetchall())
-    except Exception as e:  # noqa: BLE001
-        con.close()
-        return f"ORACLE CRASH: {type(e).__name__}: {str(e)[:300]}"
-    con.close()
-    if s != o:
-        diff = [(a, b) for a, b in zip(s, o) if a != b][:2]
-        return f"DIVERGE rows={len(s)}/{len(o)} first={diff}"
-    return f"OK rows={len(s)}"
+    return f"OK rows={len(rows)}"
 
 
 def const_col(col, val, typ=pa.float64()):
@@ -1193,19 +1150,17 @@ def main():
     spark = get_spark("degenerate-probe")
     failures = 0
     for name, muts, qnames in probes:
-        d = make_fixture(name, muts)
-        for qn in qnames:
-            if qn not in REGISTRY:
-                print(f"[{name}] {qn}: NOT REGISTERED")
-                failures += 1
-                continue
-            try:
-                result = compare(spark, qn, d)
-            except Exception:  # noqa: BLE001
-                result = f"HARNESS ERROR\n{traceback.format_exc()[:400]}"
-            if not result.startswith("OK"):
-                failures += 1
-            print(f"[{name}] {qn}: {result}", flush=True)
+        tables = {t: fn(pq.read_table(f"{SF_DIR}/{t}.parquet")) for t, fn in muts.items()}
+        d = write_fixture(f"/tmp/deg_{name}", **tables)
+        with duck_views(d) as con:
+            for qn in qnames:
+                if qn not in REGISTRY:
+                    result = "NOT REGISTERED"
+                else:
+                    result = compare(spark, con, qn, d)
+                if not result.startswith("OK"):
+                    failures += 1
+                print(f"[{name}] {qn}: {result}", flush=True)
     print(f"\nsweep done: {failures} non-OK probe(s)")
     return 1 if failures else 0
 
