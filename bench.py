@@ -1,25 +1,28 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line {"metric", "value", "unit", "queries", "sf"}.
+"""Benchmark harness: runs the bench tiers at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) in the host-sized session of
+``session.get_spark`` and prints ONE JSON line
+{"metric", "value", "unit", "queries", "tier2", "tier2_total", "tier3",
+"tier3_total", "calib", "control", "host", "sf"}. Other tools parse
+that line, so its fields only ever grow.
 
-Each query is executed once to warm the JVM/code cache, then timed.
-The timed run materializes results via count() on the aggregated
-output (small), so timings measure scan+shuffle+agg, not driver
-collection of wide rows.
+Each query is warmed up, then timed. A timed run materializes its
+result with count() on the (small) output, so timings measure
+scan + shuffle + aggregate, not driver collection of wide rows.
 
-Round-12 gate mechanics (codifying the round-11 BENCHNOTES protocol):
-per-query timings are the BEST across N *separated passes* over the
-whole tier, not N consecutive reps of one query. Under the flushed-
-cache host regime BENCHNOTES characterized (buff/cache externally
-pinned ~1.7 GB; whichever tables are not resident pay a disk re-read
-that roams across query families run-to-run), consecutive reps all
-land in the same residency state — the roam inflates every rep of the
-unlucky query — while separated passes give each query N draws from
-different states. The 9-run round-11 block showed per-query bests
-across separated runs reconstruct the healthy-host bands (7.073 /
-14.127 / 7.645 vs single-run totals carrying ±40% I/O roam), so this
-is now the in-harness estimator: the printed totals ARE the
-best-of-N totals, making the gate mechanical rather than prose.
+A query's timing is its BEST over N separated passes over the whole
+tier, not over N consecutive repetitions of that query. Which tables
+sit in the page cache changes from pass to pass; consecutive
+repetitions would all land in one residency state, while separated
+passes give each query N draws from different states. The printed
+totals are sums of those per-query bests (BENCHNOTES.md).
+
+Besides the tiers the line carries:
+
+- ``calib``: three fixed, data-free Spark jobs that time the host;
+- ``control``: the tier-1 queries of the pinned ``CONTROL_COMMIT``,
+  timed in their own process before and after the head session, so
+  ``head_over_control`` compares code on one host and boot;
+- ``host``: the cores and memory the session was given.
 """
 
 from __future__ import annotations
@@ -36,6 +39,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from crm_etl_pipeline_spark.registry import load_all
 from crm_etl_pipeline_spark.session import get_spark
 
+# Tier 1: the headline queries — the relational core, the event and
+# dedup families, similarity search, typed decode, SCD2 and the
+# curation pipeline. Membership and order are fixed so totals stay
+# comparable across runs.
 HEADLINE = [
     "flagship_segment_revenue",
     "pricing_summary",
@@ -51,22 +58,16 @@ HEADLINE = [
     "scd2_versioned_store",
     "asof_join_latest_order",
     "curation_pipeline",
-    # round-12 addition (BENCHNOTES named it the tier-1 candidate at
-    # its round-11 registration; kept out mid-round-11 for reading
-    # comparability): the Spark-4 VARIANT shred — a single-scan
-    # codegen'd parse_json + 5-group agg, the same family as
-    # typed_field_decode (isolated anchor 0.693 s)
+    # the Spark-4 VARIANT shred: one codegen'd parse_json scan and a
+    # five-group aggregate, the same family as typed_field_decode
     "variant_props_shred",
 ]
 
-# Tier 2 (new in round 6): the post-round-1 operator surface. Tier 1
-# stays byte-identical so totals remain comparable across every round;
-# tier 2 gives the ~70% of the registry added since its own regression
-# band (the round-5 verdict's gap: a perf regression in pagerank or BM25
-# was previously invisible to the bench gate). Heavier iterative
-# operators run with fewer repeats (1 warm + min-of-3 vs 3 + min-of-5)
-# to bound bench wall-time; min-of-N is still the noise-robust
-# estimator either way.
+# Tier 2: the rest of the read-only operator surface — graph, search,
+# tokenizer, retrieval and multimodal stages — so a regression there
+# shows in the bench too. These heavier, iterative operators run with
+# fewer repeats (1 warm-up + best-of-3 against tier 1's 3 + best-of-5)
+# to bound bench wall time.
 TIER2 = [
     "copurchase_pagerank",
     "dedup_components",
@@ -76,111 +77,68 @@ TIER2 = [
     "rate_limit_admission",
     "abc_pareto_classification",
     "prefix_filter_setsim_join",
-    # round-9 additions (registered late round 8, kept out mid-round
-    # for reading comparability): the PQ-ADC compressed-domain scan
-    # (ANN family) and the two Arrow-codec multimodal stages
+    # the PQ-ADC compressed-domain scan and the two Arrow-codec
+    # multimodal stages
     "ann_pq_adc",
     "audio_energy_windows",
     "multimodal_mp4_seek_plan",
-    # round-12 addition (tier-2 candidate at its round-11
-    # registration): the salted hot-key fact⋈dim join, demonstrated as
-    # a real sort-merge over the salted exchange (isolated anchor
-    # 0.70 s) — joins the other join-family members here
+    # the salted hot-key fact-dim join, a real sort-merge over the
+    # salted exchange
     "skew_salted_join",
-    # round-13 addition (BENCHNOTES named it the natural tier-2
-    # candidate at its round-12 registration): the bigram-LM quality
-    # filter — document-corpus family, one corpus pass + vocabulary
-    # model joins (isolated anchor 2.07 s)
+    # the bigram-LM quality filter: one corpus pass plus vocabulary
+    # model joins
     "bigram_lm_quality_filter",
-    # round-14 additions (the round-13 verdict's task 4: the tokenizer
-    # loop promoted together at the round boundary, anchors
-    # bpe_merge_training 3.42 / bpe_encode 3.392 / pack_bpe_sequences
-    # 2.790 / bpe_subword_vocab 2.840 — all share the trainer's
-    # vocab-grain merge chain)
+    # the tokenizer loop; all four share the trainer's vocab-grain
+    # merge chain
     "bpe_merge_training",
     "bpe_encode",
     "pack_bpe_sequences",
     "bpe_subword_vocab",
-    # round-15 additions (the round-14 verdict's task 6: the round-14
-    # registrations promoted at the boundary, read-only members land
-    # here): the hybrid retrieval pair (anchors 0.923 / 0.664), DSIR
-    # (1.481 post-repartition-fix), the cluster canonical selector
-    # (2.746, rides dedup_components' r15 convergence-check win), and
-    # SemDeDup (read-only k-means + cell-bounded pair verify)
+    # hybrid retrieval, DSIR importance resampling, the cluster
+    # canonical selector and SemDeDup (read-only k-means plus a
+    # cell-bounded pair verify)
     "hybrid_rank_fusion",
     "chunk_bm25_retrieval",
     "dsir_importance_resample",
     "dedup_cluster_keep_best",
     "semantic_dedup",
-    # round-16 boundary promotion (the frozen promote-next-round
-    # convention for round-15 registrations; additive only — no entry
-    # removed or renamed): the serving-stack rerank stage and the
-    # passage-grain hybrid fusion. Both were restructured THIS round
-    # (one-pass corpus folds, see OPTIMIZATION_r16.md change 4), so
-    # these first readings are of the optimized forms; the old-form
-    # numbers live in the committed interleaved A/Bs.
+    # the serving-stack rerank stage and the passage-grain hybrid fusion
     "rerank_fused_topk",
     "chunk_hybrid_retrieval",
 ]
 
-# Tier 3 (new in round 8): the MAINTENANCE jobs — write-inclusive
-# (each run lays files down and reads them back), so their timings are
-# a different regime than the read-only tiers and get their own total
-# (folding compaction's multi-second write path into tier 2 would
-# distort that band). 1 warm + best-of-3 separated passes (raised from
-# min-of-2 in round 12): the write path dominates and is stable, but
-# the best-of-N gate needs >= 3 draws to survive a roaming-I/O pass.
+# Tier 3: the maintenance jobs. Each run lays files down and reads them
+# back, a different regime from the read-only tiers, so they get their
+# own total. 1 warm-up + best-of-3 separated passes.
 TIER3 = [
     "scd2_compact_small_files",
     "schema_evolution_read",
     "partition_evolution_regrain",
     "scd2_expire_versions",
-    # round-9 addition: rebuilds the Morton-clustered layout each run
-    # (write-inclusive by construction), so it belongs with the
-    # maintenance jobs, not the read-only tiers
+    # rebuilds the Morton-clustered layout on every run
     "zorder_range_scan",
-    # round-10 addition (BENCHNOTES named it the tier-3 candidate at
-    # its round-9 registration; kept out mid-round-9 for reading
-    # comparability): the incremental Z-order merge — delta-touched
-    # curve segments only, via dynamic partition overwrite
+    # the incremental Z-order merge: only delta-touched curve segments,
+    # via dynamic partition overwrite
     "zorder_incremental_compact",
-    # round-14 addition (verdict task 4 placed it "into the dedup
-    # family"; it lands HERE because every run re-lays the 4 arrival
-    # chunks, drains a real readStream and writes the store — fully
-    # write-inclusive, the tier-3 regime, unlike its read-only batch
-    # twin exact_dedup_documents in tier 1). Loaded-draw anchor 3.027.
+    # re-lays the arrival chunks, drains a real readStream and writes
+    # the store on every run; its read-only batch twin
+    # exact_dedup_documents is in tier 1
     "streaming_incremental_dedup",
-    # round-15 addition (verdict task 6): the incremental IVF harness
-    # is fully write-inclusive — every run trains + lands the
-    # cell-partitioned bootstrap store, drains a real 4-batch
-    # readStream of arrivals and appends touched cells — so it belongs
-    # in the maintenance regime with its streaming-dedup sibling
+    # trains and lands the cell-partitioned bootstrap store, drains a
+    # 4-batch readStream of arrivals and appends the touched cells
     "ann_ivf_incremental_index",
 ]
 
-# Host-normalization control (round-14 protocol, replacing the
-# unreachable idle-calib band as the cross-boot gate — the round-13
-# verdict's task 3): the r10-certified tier-1 bytes, re-timed on THE
-# SAME BOOT as every bench block under the modern protocol. Byte-
-# identical code can only move with the host, so (HEAD old-14
-# subtotal) / (control total) is a host-free code gate: the round-13
-# control run measured HEAD at ~0.85x the certified bytes on a boot
-# where BOTH read ~54% above their certified absolutes. Gate: the
-# ratio, not the absolute.
-#
-# Round-15 ordering fix (the round-14 verdict's task 2): running the
-# control only AFTER the head block gave the two populations different
-# boot regimes — BENCH_r14 showed every shared query inflated
-# uniformly 1.05-1.27x in the head block (including byte-identical-
-# since-r2 queries) while the control pass read near-idle, swinging
-# the gate ratio 0.99 -> 1.19 with pass ORDER alone. The control now
-# runs as a SANDWICH: one invocation BEFORE the head session boots and
-# one after it stops, per-query MIN across both halves. Head's
-# best-of-5 draws span the same early-boot/late-boot window the two
-# control halves bracket, so both min-estimators sample the same
-# regime distribution and the ratio is order-robust. Both half totals
-# are reported (control.pre_total / control.post_total) so the
-# ordering spread itself stays visible in every bench line.
+# Host-normalization control: the pinned commit's own tier-1 code and
+# headline list, timed under this harness's estimator in a separate
+# process. Identical code can only move with the host, so
+# (head subtotal over the shared names) / (control total) is a code
+# comparison that holds across hosts and boots. The control runs as a
+# sandwich, one half before the head session starts and one after it
+# stops, and takes the per-query minimum over both halves, so head and
+# control sample the same early-to-late window of the boot. Both half
+# totals are reported (control.pre_total / control.post_total) so the
+# ordering spread stays visible.
 CONTROL_COMMIT = "7edbb7a"
 CONTROL_DIR = f"/tmp/spark_graft_control_{CONTROL_COMMIT}"
 
@@ -192,13 +150,10 @@ def _time_tier(reg, spark: object, sf_dir: str, names: list[str], warmups: int, 
     for _ in range(warmups):
         for name in names:
             reg[name].fn(spark, sf_dir).count()
-    # best-of-N across SEPARATED passes (round-12 protocol, see module
-    # docstring): each pass runs the whole tier in order, so a query's
-    # N samples come from N different page-cache residency states —
-    # consecutive reps would all pay the same roaming disk re-read.
-    # min is the standard noise-robust estimator for a deterministic
-    # workload (r3 recorded +14-27% single-sample drift; the r11 block
-    # recorded ±40% single-RUN drift under the flushed-cache regime).
+    # best-of-N across SEPARATED passes (see the module docstring):
+    # each pass runs the whole tier in order, so a query's N samples
+    # come from N different page-cache residency states. min is the
+    # noise-robust estimator for a deterministic workload.
     timings: dict[str, float] = dict.fromkeys(names, float("inf"))
     for _ in range(reps):
         for name in names:
@@ -209,16 +164,12 @@ def _time_tier(reg, spark: object, sf_dir: str, names: list[str], warmups: int, 
 
 
 def _calibrate(spark: object) -> dict[str, float]:
-    """Host-speed reference probes (round 12): three fixed, data-free,
+    """Host-speed reference probes: three fixed, data-free,
     deterministic Spark jobs — codegen'd hashing, string allocation, a
     1M-group shuffle — timed best-of-3 after 2 warmups. Emitted with
-    every bench line so cross-BOOT readings are mechanically
-    comparable: the round-12 block found the whole fixture (~17 MB)
-    page-cache-resident yet the document/graph family uniformly ~1.5x
-    its bands across every run of the boot — a host-speed regime no
-    single-run tier total can distinguish from a code regression
-    without an in-run reference. Reference values on the round-12
-    measurement boot: hash 0.23, string 0.28, shuffle 0.87."""
+    every bench line so readings from different boots are comparable:
+    a host that is uniformly slow shows here as well as in the tiers,
+    while a code regression shows only in the tiers."""
     from pyspark.sql import functions as F
 
     probes = {
@@ -317,16 +268,28 @@ def _control_tier1(sf_dir: str, warmups: int = 3, reps: int = 5) -> dict:
     return {"error": f"no control output (rc={r.returncode}): {r.stderr.strip()[-200:]}"}
 
 
+def _host(spark) -> dict:
+    """The cores and memory the bench session runs with."""
+    sc = spark.sparkContext
+    m = re.fullmatch(r"local\[(\d+)\]", sc.master)
+    return {
+        "nproc": len(os.sched_getaffinity(0)),
+        "cores": int(m.group(1)) if m else None,
+        "defaultParallelism": sc.defaultParallelism,
+        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "spark.driver.memory": sc.getConf().get("spark.driver.memory", None),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
     sf = float(m.group(1)) if m else None
     control_on = os.environ.get("SPARK_GRAFT_CONTROL", "1") != "0"
-    # SANDWICH half 1 (round-15 ordering fix): control runs BEFORE the
-    # head session boots, in its own process, so one control half
-    # samples the same early-boot regime the head block's first passes
-    # see. 2 warmups + 3 reps per half keeps the per-half JIT warm
-    # while the combined 6 draws match the old single-run best-of-5.
+    # control half 1 runs BEFORE the head session starts, in its own
+    # process, so it samples the same early regime the head block's
+    # first passes see. 2 warm-ups + 3 reps per half keep each half's
+    # JIT warm, and the two halves give 6 draws in all.
     pre: dict = {}
     if control_on:
         try:
@@ -334,16 +297,16 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — the bench line must still print
             pre = {"error": repr(exc)[:200]}
     spark = get_spark("crm-etl-pipeline-bench")
+    host = _host(spark)
     reg = load_all()
     calib = _calibrate(spark)
     tier1 = _time_tier(reg, spark, sf_dir, [n for n in HEADLINE if n in reg], 3, 5)
     tier2 = _time_tier(reg, spark, sf_dir, [n for n in TIER2 if n in reg], 1, 3)
-    # tier-3 reps raised 2 -> 3 in round 12: the best-of-N gate needs
-    # N >= 3 draws per query (the write path is stable, but the
-    # estimator's whole point is surviving one roaming-I/O pass)
+    # best-of-3: the write path is stable, but the estimator needs
+    # >= 3 draws to survive one pass with a slow disk re-read
     tier3 = _time_tier(reg, spark, sf_dir, [n for n in TIER3 if n in reg], 1, 3)
     spark.stop()
-    # SANDWICH half 2: control runs again AFTER the head session stops
+    # control half 2 runs AFTER the head session stops
     # (the two JVMs never contend); per-query MIN across both halves is
     # the control estimator. Skippable with SPARK_GRAFT_CONTROL=0.
     control: dict = {"commit": CONTROL_COMMIT}
@@ -395,15 +358,15 @@ def main() -> None:
             "tier3_total": round(sum(tier3.values()), 4),
             "calib": calib,
             "control": control,
+            "host": host,
             "sf": sf,
         }
     )
     print(line)
-    # Also persist the line next to the repo (round-16 hygiene): the
-    # round-15 PERF diff went blind because the prior round's captured
-    # stdout tail truncated the (very long) line mid-JSON. Same bytes
-    # as stdout; best-effort (a read-only checkout must not fail the
-    # bench).
+    # Also persist the line next to the repo, because a captured
+    # stdout tail can truncate the (very long) line mid-JSON. Same
+    # bytes as stdout; best-effort (a read-only checkout must not fail
+    # the bench).
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "bench_last.json"), "w") as fh:

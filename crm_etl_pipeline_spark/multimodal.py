@@ -235,9 +235,9 @@ def _png_bytes(doc_id: int) -> bytes:
 #: presentation (the encoder-priming-trim shape; every third doc gets
 #: the identity edit media_time=0). The edts subtree is 36 fixed bytes
 #: (elst v0, one entry), so every post-tkhd offset sits 36 bytes past
-#: its round-8 position. Single-chunk variant (mp4 doc_id % 8 ==
-#: 3): stsd/stts/stss/stsz/stco, data starts at byte 452 (ftyp 24 +
-#: moov 420 + mdat header 8), file exactly 516 + 8·(doc_id % 16)
+#: where it would be without an edit list. Single-chunk variant (mp4
+#: doc_id % 8 == 3): stsd/stts/stss/stsz/stco, data starts at byte 452
+#: (ftyp 24 + moov 420 + mdat header 8), file exactly 516 + 8·(doc_id % 16)
 #: bytes. Multi-chunk variant (doc_id % 8 == 7): a genuine stsc
 #: run-length map splits the samples 5+3 across two chunks with a
 #: 16-byte unreferenced gap between them (spec-legal mdat padding —
@@ -387,9 +387,9 @@ def fabricate_media(docs: DataFrame) -> DataFrame:
     doc_id-only frame (bytes-per-row ~8) whose upstream exchange AQE
     coalesces BY INPUT SIZE — at sf10 the whole 125 k-file fabricate +
     decode pipeline was landing on 2 tasks while 30 cores idled
-    (round-9 audio-decade finding; AQE sizes partitions by shuffle
-    bytes and cannot see per-row compute cost). A user-numbered
-    repartition is exempt from AQE coalescing, so the codec stage gets
+    (SCALE.md, audio decade; AQE sizes partitions by shuffle bytes and
+    cannot see per-row compute cost). A user-numbered repartition is
+    exempt from AQE coalescing, so the codec stage gets
     deterministic width at every scale — and it must be the COLUMN-LESS
     round-robin form: ``repartition(n, "doc_id")`` reproduces the
     hashpartitioning(doc_id, n) the callers' upstream dedup exchange
@@ -802,13 +802,18 @@ def decode_media_quarantined(media: DataFrame) -> DataFrame:
     return media.mapInPandas(extract, QUARANTINE_SCHEMA)
 
 
-def frame_offsets(media: DataFrame, chunk_bytes: int = 256) -> DataFrame:
-    """Frame/window sampling plan: one row per fixed-size chunk of the
-    payload — sequence + posexplode column algebra, no Python. The real
-    pipeline seeks these offsets inside the codec stage."""
+#: chunk size of frame_offsets' sampling plan
+FRAME_CHUNK_BYTES = 256
+
+
+def frame_offsets(media: DataFrame) -> DataFrame:
+    """Frame/window sampling plan: one row per ``FRAME_CHUNK_BYTES``
+    chunk of the payload — sequence + posexplode column algebra, no
+    Python. The real pipeline seeks these offsets inside the codec
+    stage."""
     # explicit floor division: DuckDB's double→int CAST rounds while
     # Spark's truncates, so the oracle must see the same floor
-    n_frames = F.floor(F.col("meta.n_bytes") / chunk_bytes).cast("int") + 1
+    n_frames = F.floor(F.col("meta.n_bytes") / FRAME_CHUNK_BYTES).cast("int") + 1
     return media.select(
         "doc_id",
         F.col("meta.mime").alias("mime"),
@@ -817,7 +822,7 @@ def frame_offsets(media: DataFrame, chunk_bytes: int = 256) -> DataFrame:
         "doc_id",
         "mime",
         "frame_idx",
-        (F.col("frame_idx") * chunk_bytes).alias("byte_offset"),
+        (F.col("frame_idx") * FRAME_CHUNK_BYTES).alias("byte_offset"),
     )
 
 

@@ -240,6 +240,11 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: name-suffix length of record_linkage_fuzzy's blocking key; the
+#: granularity knob whose sizing rule its docstring gives
+LINKAGE_SUFFIX_LEN = 2
+
+
 @query(
     "record_linkage_fuzzy",
     oracle="""
@@ -265,14 +270,13 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey="§2.9 CRM analytics (entity resolution: blocked fuzzy record linkage)",
 )
-def record_linkage_fuzzy(
-    spark: SparkSession, sf_dir: str, suffix_len: int = 2
-) -> DataFrame:
+def record_linkage_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution over contacts: a deterministic 25% of customers
     (md5 first hex < '4') is fabricated into 'dirty' re-entries with one
     character corrupted (the reference's manual-entry duplicate problem),
-    then linked back by BLOCKING on (nationkey, name ``suffix_len``-char
-    suffix) and comparing names with edit distance ≤ 2 inside each block.
+    then linked back by BLOCKING on (nationkey, the last
+    ``LINKAGE_SUFFIX_LEN`` chars of the name) and comparing names with
+    edit distance ≤ 2 inside each block.
 
     Candidate pairs come only from the block-key equi-join — never an
     all-pairs compare — so pair work is sum of block-size². The suffix
@@ -284,13 +288,13 @@ def record_linkage_fuzzy(
     corruption model never touches the suffix, so lengthening it costs
     zero recall on the planted duplicates. ``is_true_match`` labels
     recovery of the planted source so precision/recall are auditable
-    in-result. The registered driver query pins s=2 (coincidental
-    near-matches make the richer correctness fixture at sf0.01)."""
+    in-result. The query uses s=2 (coincidental near-matches make the
+    richer correctness fixture at sf0.01)."""
     cust = table(spark, sf_dir, "customer")
     block = lambda name_col: F.concat_ws(  # noqa: E731
         "|",
         F.col("c_nationkey").cast("string"),
-        F.substring(name_col, -suffix_len, suffix_len),
+        F.substring(name_col, -LINKAGE_SUFFIX_LEN, LINKAGE_SUFFIX_LEN),
     )
     dirty = (
         cust.filter(F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 1) < "4")
@@ -489,7 +493,8 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of exact counts."""
     events = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
-        # placement + type tiebreak spelled (round-13 find)
+        # placement + type tiebreak spelled: tied-ts NULL-id rows would
+        # otherwise order engine-dependently (see the oracle)
         F.col("ts").asc_nulls_first(),
         F.col("event_id").asc_nulls_first(),
         F.col("event_type").asc_nulls_first(),
@@ -729,9 +734,9 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w1 = oriented.select(F.col("s"), F.col("t").alias("b"))
     w2 = oriented.select(F.col("s"), F.col("t").alias("c"))
-    # shuffle_hash on the wedge self-join too (round 16, guide §3.1):
-    # the default sort-merge SORTS the oriented edge table twice just
-    # to stream wedges out of it, and the wedge stream is consumed
+    # shuffle_hash on the wedge self-join too: the default sort-merge
+    # SORTS the oriented edge table twice just to stream wedges out of
+    # it, and the wedge stream is consumed
     # UNSORTED by the closing semi-join anyway. Hashing one copy of
     # the (pivot-partitioned) edge set and streaming the other skips
     # both sorts — same per-partition memory argument as the closing
@@ -745,7 +750,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # close the wedge against the undirected edge set: wedge (b, c) has
     # b < c by construction and und (u, v) has u < v, so one ordered
     # equi-semi-join covers both orientations. shuffle_hash hint
-    # (round 12, exact — semantics unchanged): the wedge stream is the
+    # (exact — semantics unchanged): the wedge stream is the
     # graph's Σ C(d_out, 2), which at constant co-purchase degree grows
     # linearly with the corpus (~3.8e9 rows at the sf10 decade point);
     # the default sort-merge semi-join SORTS that stream after the

@@ -108,9 +108,9 @@ def streaming_requeue(spark: SparkSession, sf_dir: str) -> DataFrame:
     failed_attempts = max(first_attempts, 10) and n_retries counting
     the requeue hops — the oracle states that closed form."""
     paths = streaming.run_pipeline(
-        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "requeue"),
-        drain_retries=True,
+        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "requeue")
     )
+    streaming.drain_retry_queue(spark, paths)
     return streaming.read_dlq(spark, paths, sf_dir).select(
         "event_id",
         "user_id",
@@ -142,9 +142,9 @@ def streaming_dlq_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(first_attempts, 10), replay exactly 10 — which the oracle
     states over the raw events table."""
     paths = streaming.run_pipeline(
-        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "replay"),
-        drain_retries=True,
+        spark, sf_dir, workdir=tmpdirs.sf_scoped("crm_etl_stream", sf_dir, "replay")
     )
+    streaming.drain_retry_queue(spark, paths)
     streaming.replay_dlq(spark, paths)
     return (
         streaming.read_dlq(spark, paths, sf_dir)

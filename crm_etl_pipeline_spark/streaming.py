@@ -187,7 +187,6 @@ def run_pipeline(
     sf_dir: str,
     workdir: str,
     trigger_available_now: bool = True,
-    drain_retries: bool = False,
 ) -> dict[str, object]:
     """The full event loop (ST1–ST4): bootstrap the version log from
     the customer base load, then stream events through foreachBatch
@@ -200,8 +199,8 @@ def run_pipeline(
     (`PodioApiGateway.py:153-159`): a failure with
     ``failed_attempts < 10`` re-enters the retry queue with the counter
     incremented — never dropped — and dead-letters once the counter
-    reaches the threshold. With ``drain_retries`` the retry queue is
-    then drained to convergence (see ``drain_retry_queue``).
+    reaches the threshold. ``drain_retry_queue`` then drains the retry
+    queue to convergence.
 
     With ``trigger_available_now`` the stream drains the backlog and
     stops (bounded replay); otherwise it runs on the reference's 10 s
@@ -247,8 +246,6 @@ def run_pipeline(
         )
         return paths
     _drain(stream, process_batch, checkpoint)
-    if drain_retries:
-        paths["retry_passes"] = drain_retry_queue(spark, paths)
     return paths
 
 

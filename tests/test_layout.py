@@ -78,19 +78,23 @@ def test_runtime_bloom_filter_semi_join_reduction(spark):
     fixture scale and broadcast disabled so the join actually
     shuffles), a selective dim filter must inject might_contain /
     bloom_filter_agg into the fact scan — Spark's semi-join reduction,
-    observed rather than assumed — without changing the join result."""
-    from crm_etl_pipeline_spark.session import enable_runtime_bloom_filters
-
+    observed rather than assumed — without changing the join result.
+    Spark's own guardrails only inject when the big side scans >= 10 GB
+    and the filtered build side stays <= 10 MB; the test lowers them."""
     sf = "/root/testdata/sf0.01"
     o = table(spark, sf, "orders").filter(F.col("o_totalprice") > 400000).select("o_orderkey")
     li = table(spark, sf, "lineitem")
     join = li.join(o, li.l_orderkey == o.o_orderkey)
     baseline = join.count()
-    prev = enable_runtime_bloom_filters(
-        spark, application_side_min="1KB", creation_side_max="100MB"
-    )
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    confs = {
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         filtered_join = li.join(o, li.l_orderkey == o.o_orderkey)
         plan = filtered_join._jdf.queryExecution().executedPlan().toString()
@@ -98,7 +102,6 @@ def test_runtime_bloom_filter_semi_join_reduction(spark):
         assert "bloom_filter_agg" in plan
         assert filtered_join.count() == baseline
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bcast)
         for k, v in prev.items():
             if v is None:
                 spark.conf.unset(k)

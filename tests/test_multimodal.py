@@ -432,7 +432,7 @@ def test_quarantine_zero_byte_and_truncated_blobs(spark):
 
 def test_frame_offsets_cover_payload(spark):
     media = _media(spark)
-    frames = multimodal.frame_offsets(media, chunk_bytes=256)
+    frames = multimodal.frame_offsets(media)
     agg = frames.groupBy("doc_id").agg(
         F.max("byte_offset").alias("last_off"), F.count(F.lit(1)).alias("n")
     )

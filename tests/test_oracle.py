@@ -109,3 +109,20 @@ def test_degenerate_sweep_manifest():
         assert set(mutations) <= set(TABLES), f"{name}: mutates {set(mutations) - set(TABLES)}"
         missing = [q for q in qnames if q not in REGISTRY or REGISTRY[q].oracle is None]
         assert not missing, f"{name}: unregistered or oracle-less queries {missing}"
+
+
+def test_degenerate_probe_stops_on_dead_gateway(monkeypatch):
+    """A lost Spark gateway makes every later probe fail the same way,
+    so ``compare`` lets it propagate instead of reporting a crash of
+    the one query that happened to see it."""
+    import types
+
+    from tools import degenerate_probe
+
+    def refused(spark, sf_dir):
+        raise ConnectionRefusedError(111, "Connection refused")
+
+    stub = types.SimpleNamespace(name="gateway_stub", fn=refused, oracle="SELECT 1")
+    monkeypatch.setitem(degenerate_probe.REGISTRY, "gateway_stub", stub)
+    with pytest.raises(ConnectionRefusedError):
+        degenerate_probe.compare(None, None, "gateway_stub", SF_DIR)

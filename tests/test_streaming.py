@@ -71,9 +71,8 @@ def test_requeue_drains_to_convergence(spark, tmp_path):
     sub-threshold failure requeues with attempts+1 until it
     dead-letters at the threshold — nothing is dropped. Converged DLQ
     holds EVERY error event exactly once with attempts=max(first,10)."""
-    paths = streaming.run_pipeline(
-        spark, SF_DIR, workdir=str(tmp_path), drain_retries=True
-    )
+    paths = streaming.run_pipeline(spark, SF_DIR, workdir=str(tmp_path))
+    passes = streaming.drain_retry_queue(spark, paths)
     errors = (
         normalize_event_ts(spark.read.parquet(f"{SF_DIR}/events.parquet"))
         .filter(F.col("event_type") == "error")
@@ -90,7 +89,7 @@ def test_requeue_drains_to_convergence(spark, tmp_path):
     }
     assert dlq.count() == len(got), "duplicate DLQ rows for one event"
     assert got == want
-    assert 0 < paths["retry_passes"] <= streaming.DLQ_THRESHOLD + 1
+    assert 0 < passes <= streaming.DLQ_THRESHOLD + 1
 
 
 def test_unbounded_mode_processes_and_stops(spark, tmp_path):
@@ -365,9 +364,8 @@ def test_replay_dlq_redrive_converges(spark, tmp_path):
     at exactly DLQ_THRESHOLD. The DLQ log ends with exactly two
     generations per error event, and the replay drain runs exactly
     DLQ_THRESHOLD passes (one per +1 bump from 0 to the threshold)."""
-    paths = streaming.run_pipeline(
-        spark, SF_DIR, workdir=str(tmp_path), drain_retries=True
-    )
+    paths = streaming.run_pipeline(spark, SF_DIR, workdir=str(tmp_path))
+    streaming.drain_retry_queue(spark, paths)
     n_dead = spark.read.parquet(str(paths["dlq"])).count()
     assert n_dead > 0, "fixture must dead-letter at least one event"
     passes = streaming.replay_dlq(spark, paths)
@@ -410,9 +408,8 @@ def test_one_data_file_per_failure_append(spark, tmp_path):
     import os
 
     threshold = streaming.DLQ_THRESHOLD
-    paths = streaming.run_pipeline(
-        spark, SF_DIR, workdir=str(tmp_path), drain_retries=True
-    )
+    paths = streaming.run_pipeline(spark, SF_DIR, workdir=str(tmp_path))
+    streaming.drain_retry_queue(spark, paths)
     streaming.replay_dlq(spark, paths)
     first = [
         r[0]

@@ -12,7 +12,8 @@ colliding ids, malformed JSON, ...; the other tables symlinked), then
 runs every listed query in both engines. ``OK`` means the canonical
 rows, columns and type families agree; a divergence or a crash on
 either side prints loudly and counts as non-OK. The exit status is 1
-when any probe is non-OK.
+when any probe is non-OK. A lost Spark gateway stops the sweep at the
+probe that saw it, with exit status 3.
 
 Run from the repo root:
 
@@ -33,6 +34,7 @@ import duckdb
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JNetworkError
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -42,10 +44,15 @@ from tests.conftest import SF_DIR, compare_query, duck_views, write_fixture  # n
 
 REGISTRY = load_all()
 
+#: a lost Spark gateway: every later probe would fail the same way, so
+#: the sweep stops instead of reporting each one as a crash
+GATEWAY_LOST = (ConnectionError, Py4JNetworkError)
+
 
 def compare(spark, con, qname, fixture_dir):
     """One probe's verdict: OK, DIVERGE (a failed ``compare_query``
-    check) or the engine that crashed."""
+    check) or the engine that crashed. A lost gateway (``GATEWAY_LOST``)
+    propagates."""
     q = REGISTRY[qname]
     try:
         rows = compare_query(con, q, q.fn(spark, fixture_dir))
@@ -53,6 +60,8 @@ def compare(spark, con, qname, fixture_dir):
         return f"DIVERGE {str(e)[:500]}"
     except duckdb.Error as e:
         return f"ORACLE CRASH: {type(e).__name__}: {str(e)[:300]}"
+    except GATEWAY_LOST:
+        raise
     except Exception as e:  # noqa: BLE001 - report, don't abort the sweep
         return f"SPARK CRASH: {type(e).__name__}: {str(e)[:300]}"
     return f"OK rows={len(rows)}"
@@ -1157,7 +1166,12 @@ def main():
                 if qn not in REGISTRY:
                     result = "NOT REGISTERED"
                 else:
-                    result = compare(spark, con, qn, d)
+                    try:
+                        result = compare(spark, con, qn, d)
+                    except GATEWAY_LOST as e:
+                        print(f"[{name}] {qn}: GATEWAY LOST: {type(e).__name__}: {e}")
+                        print("sweep stopped: the Spark gateway is gone")
+                        return 3
                 if not result.startswith("OK"):
                     failures += 1
                 print(f"[{name}] {qn}: {result}", flush=True)
